@@ -45,7 +45,8 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from stonkwhisperer_spark.sinks.writers import (
-    _commits,
+    Snapshot,
+    _commit_ts,
     _committed_version,
     committed_files,
 )
@@ -129,6 +130,7 @@ class _TxlogStreamReader(DataSourceStreamReader):
         # (start, end] internally, so the inclusive lower bound is
         # startingVersion - 1; the default (1) subscribes from the
         # table's first commit.
+        snap = Snapshot(self._path)
         if "startingtimestamp" in opts:
             # Delta's startingTimestamp: subscribe from the FIRST commit
             # whose timestamp is >= the instant (changes at or after it);
@@ -138,13 +140,14 @@ class _TxlogStreamReader(DataSourceStreamReader):
                 raise ValueError(
                     "pass startingVersion OR startingTimestamp, not both"
                 )
-            from stonkwhisperer_spark.sinks.writers import _commit_ts
-
             ts = int(opts["startingtimestamp"])
-            cs = _commits(self._path)
             first = next(
-                (c["version"] for c in cs if _commit_ts(self._path, c) >= ts),
-                (cs[-1]["version"] + 1) if cs else 1,
+                (
+                    c["version"]
+                    for c in snap.commits
+                    if _commit_ts(self._path, c) >= ts
+                ),
+                snap.version + 1,
             )
             self._start = first - 1
         else:
@@ -187,9 +190,7 @@ class _TxlogStreamReader(DataSourceStreamReader):
             raise ValueError(
                 "maxPartitionBytes must be >= 1 and openCostInBytes >= 0"
             )
-        from stonkwhisperer_spark.sinks.writers import _vacuum_cutoff
-
-        horizon = _vacuum_cutoff(_commits(self._path))
+        horizon = snap.vacuum_cutoff
         if self._start < horizon:
             raise ValueError(
                 f"startingVersion {self._start + 1} reaches below the vacuum "
@@ -210,10 +211,7 @@ class _TxlogStreamReader(DataSourceStreamReader):
         # files store PHYSICAL names — read() projects physical and
         # emits logical (snapshot of the mapping at subscription time;
         # a restart re-resolves it).
-        from stonkwhisperer_spark.sinks.writers import _colmap_from
-
-        colmap = _colmap_from(_commits(self._path))
-        self._phys = {n: colmap.get(n, n) for n in self._fields}
+        self._phys = {n: snap.colmap.get(n, n) for n in self._fields}
         self._arrow_schema = to_arrow_schema(data_schema)
 
     def initialOffset(self) -> dict:
@@ -235,7 +233,7 @@ class _TxlogStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         self._current = max(self._current, start["version"], end["version"])
         entries: list[tuple[str, int, bool, int | None]] = []
-        for c in _commits(self._path, through_version=end["version"]):
+        for c in Snapshot(self._path, end["version"]).commits:
             if c["version"] <= start["version"] or c.get("compaction"):
                 continue
             # File sizes come from the commit manifest (recorded at

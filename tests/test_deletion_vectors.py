@@ -10,8 +10,8 @@ import os
 from pyspark.sql import functions as F
 
 from stonkwhisperer_spark.sinks.writers import (
+    Snapshot,
     _commits,
-    _dv_from,
     committed_files,
     compact,
     delete_where_dv,
@@ -102,12 +102,12 @@ def test_rewrites_purge_deletion_vectors(spark, tmp_path):
     target = str(tmp_path / "t")
     _seed(spark, target)
     delete_where_dv(spark, target, F.col("k") < 10)
-    assert _dv_from(_commits(target))  # DVs in force
+    assert Snapshot(target).dv  # DVs in force
     replaced = compact(spark, target)
     assert replaced > 0
     # Compaction read the DV-filtered view and removed the masked
     # files: state empty, contents unchanged, output files DV-free.
-    assert _dv_from(_commits(target)) == {}
+    assert Snapshot(target).dv == {}
     got = read_committed(spark, target)
     assert got.count() == 90 and got.agg(F.min("k")).collect()[0][0] == 10
     # And the DV anti-join is gone from the read plan.
@@ -166,7 +166,7 @@ def test_vacuum_respects_then_reclaims_dv_files(spark, tmp_path):
     _seed(spark, target)
     delete_where_dv(spark, target, F.col("k") < 10)
     dv_files = [
-        d for dvs in _dv_from(_commits(target)).values() for d in dvs
+        d for dvs in Snapshot(target).dv.values() for d in dvs
     ]
     assert dv_files
     # Orphan sweep keeps committed DV files.
@@ -269,5 +269,5 @@ def test_dv_delete_concurrent_with_merge_serializes(spark, tmp_path):
     assert got.count() == 32 and got.agg(F.min("k")).collect()[0][0] == 8
     # The kill list targets the COMPACTED files (the pre-compaction
     # ones are no longer committed).
-    state = _dv_from(_commits(target))
+    state = Snapshot(target).dv
     assert set(state) <= set(committed_files(target))

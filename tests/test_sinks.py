@@ -545,6 +545,7 @@ def test_counted_cdc_staging_matches_independent_recount(spark, tmp_path):
 
     from stonkwhisperer_spark.sinks.writers import (
         _CHANGE_COL,
+        Snapshot,
         _stage_cdc_files_counted,
         merge_append,
     )
@@ -566,7 +567,7 @@ def test_counted_cdc_staging_matches_independent_recount(spark, tmp_path):
         ],
         f"k long, s string, {_CHANGE_COL} string",
     )
-    staged, counts = _stage_cdc_files_counted(cdc, target)
+    staged, counts = _stage_cdc_files_counted(cdc, Snapshot(target))
     assert counts == (2, 1, 1)
     recount = {"insert": 0, "update_postimage": 0, "delete": 0, "update_preimage": 0}
     for rel in staged:
@@ -1424,6 +1425,7 @@ def test_table_history_describes_every_commit(spark, tmp_path):
     """DESCRIBE HISTORY: one row per commit in version order with the
     recorded operation tag; pre-op-tag commits classify structurally."""
     from stonkwhisperer_spark.sinks.writers import (
+        Snapshot,
         _try_commit,
         add_constraint,
         delete_where,
@@ -1452,7 +1454,7 @@ def test_table_history_describes_every_commit(spark, tmp_path):
     restore(spark, target, version=1)
     vacuum(target, retain_versions=0, unsafe_zero_retention=True)
     # a legacy commit with no op tag → structural classification
-    _try_commit(target, 7, [], 0, compaction=True)
+    _try_commit(target, 7, {"compaction": True}, Snapshot(target))
 
     h = table_history(spark, target).orderBy("version").collect()
     assert [(r.version, r.operation) for r in h] == [
@@ -1863,8 +1865,7 @@ def test_bloom_survives_rewrites(spark, tmp_path):
     """Rewrites drop old files' blooms with the files and index the
     replacement files automatically (the commit builds them)."""
     from stonkwhisperer_spark.sinks.writers import (
-        _bloom_from,
-        _commits,
+        Snapshot,
         compact,
         committed_files,
         merge_append,
@@ -1878,7 +1879,7 @@ def test_bloom_survives_rewrites(spark, tmp_path):
     set_bloom_columns(target, ["k"])
     merge_append(spark, target, df.filter(F.col("k") >= 50).coalesce(1), ["k"])
     compact(spark, target, min_files=2)
-    state = _bloom_from(_commits(target))
+    state = Snapshot(target).blooms
     assert set(state) == set(committed_files(target))  # rewrites indexed
     hit, read, total = read_committed_point(spark, target, "k", 7)
     assert [r["k"] for r in hit.collect()] == [7]
@@ -1913,6 +1914,14 @@ def test_log_checkpoint_and_manifest_vacuum(spark, tmp_path):
     )
     delete_where(spark, target, F.col("k") >= 35)
     rename_column(target, "v", "val")
+    # Stale temps (a crashed publisher's or checkpointer's) are swept
+    # even before any checkpoint exists; a fresh one may be in flight.
+    log = os.path.join(target, "_txlog")
+    for name in ("00000009.json.tmp-dead", "00000009.json.tmp-live"):
+        open(os.path.join(log, name), "w").close()
+    os.utime(os.path.join(log, "00000009.json.tmp-dead"), (0, 0))
+    assert vacuum_log(target) == ["00000009.json.tmp-dead"]
+    assert os.path.exists(os.path.join(log, "00000009.json.tmp-live"))
     full = _commits(target)
     v = checkpoint(target)
     assert v == full[-1]["version"]
@@ -2143,8 +2152,7 @@ def test_update_where_dv_merge_on_read(spark, tmp_path):
     post-image file — NO existing data file rewritten; stacking works;
     compaction folds the halves."""
     from stonkwhisperer_spark.sinks.writers import (
-        _commits,
-        _dv_from,
+        Snapshot,
         committed_files,
         compact,
         merge_append,
@@ -2171,7 +2179,7 @@ def test_update_where_dv_merge_on_read(spark, tmp_path):
     }
     assert all(after[f] == m for f, m in before.items())
     assert len(after) > len(before)  # only post-image file(s) added
-    assert _dv_from(_commits(target))
+    assert Snapshot(target).dv
     got = read_committed(spark, target)
     assert got.count() == 20
     assert {r["v"] for r in got.filter(F.col("k").isin(3, 13)).collect()} == {35, 135}
@@ -2182,7 +2190,7 @@ def test_update_where_dv_merge_on_read(spark, tmp_path):
     assert read_committed(spark, target).filter(F.col("k") == 3).first()["v"] == 36
     # Compaction folds masks + post-images into plain files.
     compact(spark, target)
-    assert _dv_from(_commits(target)) == {}
+    assert Snapshot(target).dv == {}
     assert read_committed(spark, target).count() == 20
 
 
@@ -2283,7 +2291,7 @@ def test_clone_carries_constraints_and_dv(spark, tmp_path):
 def test_clone_replays_rename_swaps(spark, tmp_path):
     """ADVICE-r6: a rename cycle (a->t, b->a, t->b, i.e. swap url/title)
     nets to {url: title, title: url}; replayed as direct renames those
-    chain through each other (_colmap_from pops the prior entry) and
+    chain through each other (each rename pops the prior entry) and
     collapse to the identity map, silently reading the wrong physical
     columns in the clone. The temp-name replay must reproduce the
     source's logical view exactly.
@@ -2293,7 +2301,7 @@ def test_clone_replays_rename_swaps(spark, tmp_path):
     — another writer can legally produce it — so the swap commits are
     laid down directly."""
     from stonkwhisperer_spark.sinks.writers import (
-        _commits,
+        Snapshot,
         _try_commit,
         clone_table,
         merge_append,
@@ -2310,7 +2318,7 @@ def test_clone_replays_rename_swaps(spark, tmp_path):
         ]
     ):
         assert _try_commit(
-            src, 2 + i, [], 0, rename=r, op="RENAME", commits=_commits(src)
+            src, 2 + i, {"rename": r, "op": "RENAME"}, Snapshot(src)
         )
     src_rows = {
         (r["url"], r["title"]) for r in read_committed(spark, src).collect()
@@ -2329,8 +2337,7 @@ def test_partial_bloom_index_still_indexes_missing_files(spark, tmp_path):
     other added files silently unindexed — the commit builds blooms for
     every added file absent from the provided map."""
     from stonkwhisperer_spark.sinks.writers import (
-        _bloom_from,
-        _commits,
+        Snapshot,
         _staged_row_count,
         _stage_files,
         _try_commit,
@@ -2342,25 +2349,27 @@ def test_partial_bloom_index_still_indexes_missing_files(spark, tmp_path):
     df = spark.range(50).select(F.col("id").alias("k"))
     merge_append(spark, target, df.coalesce(1), ["k"])
     set_bloom_columns(target, ["k"])
-    commits = _commits(target)
+    snap = Snapshot(target)
     batch = spark.range(50, 100).select(F.col("id").alias("k")).coalesce(2)
     # size_output=False: this test NEEDS a two-file staging (a partial
     # bloom map covering one of two added files); the default rebalance
     # would fuse the tiny batch into one part.
-    staged = _stage_files(batch, target, None, commits=commits, size_output=False)
+    staged = _stage_files(batch, snap, None, size_output=False)
     assert len(staged) == 2
-    pre = _bloom_from(commits)  # source map covering only older files
+    pre = snap.blooms  # source map covering only older files
     partial = {staged[0]: {"k": {"fake": True}}}  # one of the two new
     assert _try_commit(
         target,
-        commits[-1]["version"] + 1,
-        staged,
-        _staged_row_count(target, staged),
-        bloom_index=partial,
-        op="WRITE",
-        commits=commits,
+        snap.version + 1,
+        {
+            "add": staged,
+            "n": _staged_row_count(target, staged),
+            "bloom": partial,
+            "op": "WRITE",
+        },
+        snap,
     )
-    state = _bloom_from(_commits(target))
+    state = Snapshot(target).blooms
     for f in staged:
         assert f in state and "k" in state[f], f"file {f} left unindexed"
     # the caller-provided entry is honored verbatim, not rebuilt
@@ -2401,21 +2410,121 @@ def test_unknown_reader_feature_refuses_to_read(spark, tmp_path):
         read_committed(spark, target)
 
 
-def test_feature_flags_stamped_on_commits(spark, tmp_path):
-    """Commits using reader-breaking features declare them; plain
-    appends stay unstamped (old readers read them fine)."""
-    from stonkwhisperer_spark.sinks.writers import (
-        _commits,
-        delete_where_dv,
-        merge_append,
-        rename_column,
-    )
+_BASE_KEYS = ["add", "n", "ts"]
+_DATA_KEYS = [*_BASE_KEYS, "sizes", "bloom"]
+# One call of every committing writer, in order, with what it returns
+# and the manifest it writes: (result, op, n, manifest keys, features).
+_FORMAT_PIN = [
+    (10, "MERGE APPEND", 10, [*_BASE_KEYS, "sizes", "stats", "schema"], None),
+    (None, "ADD CONSTRAINT", 0, [*_BASE_KEYS, "constraints_add"], ["check-constraints"]),
+    (None, "DROP CONSTRAINT", 0, [*_BASE_KEYS, "constraints_drop"], None),
+    (None, "ADD GENERATED COLUMN", 0, [*_BASE_KEYS, "generated_add"], ["generated-columns"]),
+    (None, "DROP GENERATED COLUMN", 0, [*_BASE_KEYS, "generated_drop"], None),
+    (None, "SET BLOOM COLUMNS", 0, [*_BASE_KEYS, "bloom_cols"], None),
+    (5, "STREAMING UPDATE", 5, [*_DATA_KEYS, "stats", "schema", "txn"], None),
+    ((1, 2), "MERGE", 3, [*_DATA_KEYS, "remove", "stats", "schema", "cdc"], None),
+    (1, "DELETE", 0, [*_DATA_KEYS, "remove", "stats", "cdc"], None),
+    ((1, 1), "REPLACE WHERE", 1, [*_DATA_KEYS, "remove", "stats", "schema", "cdc"], None),
+    (1, "UPDATE", 1, [*_DATA_KEYS, "remove", "stats", "schema", "cdc"], None),
+    (1, "UPDATE", 1, [*_DATA_KEYS, "stats", "schema", "cdc", "dv"], ["deletion-vectors"]),
+    (1, "DELETE", 0, [*_BASE_KEYS, "sizes", "cdc", "dv"], ["deletion-vectors"]),
+    (3, "OPTIMIZE", 0, [*_DATA_KEYS, "remove", "compaction", "stats"], None),
+    (None, "RENAME COLUMN", 0, [*_BASE_KEYS, "rename"], ["column-mapping"]),
+    (None, "DROP COLUMN", 0, [*_BASE_KEYS, "drop_col"], ["column-mapping"]),
+    (
+        (3, 1), "RESTORE", 14,
+        [*_DATA_KEYS, "remove", "stats", "cdc", "dv", "restore"], ["deletion-vectors"],
+    ),
+    (12, "VACUUM", 0, [*_BASE_KEYS, "vacuum"], None),
+]
+_CLONE_PIN = [
+    ("CLONE", [*_DATA_KEYS, "bloom_cols", "stats", "schema", "dv"], ["deletion-vectors"]),
+    ("CLONE", [*_BASE_KEYS, "rename"], ["column-mapping"]),
+    ("CLONE", [*_BASE_KEYS, "rename"], ["column-mapping"]),
+    ("CLONE", [*_BASE_KEYS, "drop_col"], ["column-mapping"]),
+]
 
-    target = str(tmp_path / "t")
-    merge_append(spark, target, _articles(spark), ["url"])
-    delete_where_dv(spark, target, F.col("url") == "https://ex.com/3")
-    rename_column(target, "title", "headline")
-    cs = {c["version"]: c.get("features", []) for c in _commits(target)}
-    assert cs[1] == []
-    assert "deletion-vectors" in cs[2]
-    assert "column-mapping" in cs[3]
+
+def test_feature_flags_stamped_on_commits(spark, tmp_path):
+    """Pins the on-disk manifest format: one call of each committing
+    writer, and for each manifest its full ordered key set and its
+    ``n``, ``op``, ``remove`` and ``features`` values. Commits using
+    reader-breaking features declare them; plain appends stay
+    unstamped (old readers read them fine)."""
+    import pyarrow.parquet as pq
+
+    from stonkwhisperer_spark.sinks import writers as wr
+
+    target, dst = str(tmp_path / "t"), str(tmp_path / "dst")
+
+    def rows(*ks):
+        return spark.createDataFrame(
+            [(k, k, 10 * k) for k in ks], "k long, v long, w long"
+        ).coalesce(1)
+
+    def holding(version, keys):
+        """Files live at ``version`` holding any of ``keys`` in ``k``."""
+        return sorted(
+            f
+            for f in wr.committed_files(target, version)
+            if set(pq.read_table(os.path.join(target, f), columns=["k"])
+                   .column(0).to_pylist()) & set(keys)
+        )
+
+    results = [
+        wr.merge_append(spark, target, rows(*range(10)), ["k"]),
+        wr.add_constraint(spark, target, "v_nonneg", "v >= 0"),
+        wr.drop_constraint(target, "v_nonneg"),
+        wr.add_generated_column(target, "g", "k + 1"),
+        wr.drop_generated_column(target, "g"),
+        wr.set_bloom_columns(target, ["k"]),
+        wr.append_txn(spark, target, rows(*range(10, 15)), "app", 0),
+        wr.merge_upsert(
+            spark, target,
+            rows(0, 1, 20).withColumn(
+                "v", F.when(F.col("k") < 2, F.col("v") + 100).otherwise(F.col("v"))
+            ),
+            ["k"],
+        ),
+        wr.delete_where(spark, target, F.col("k") == 2),
+        wr.overwrite_where(
+            spark, target, rows(3).withColumn("v", F.lit(33).cast("long")), F.col("k") == 3
+        ),
+        wr.update_where(spark, target, {"v": F.col("v") + 1}, F.col("k") == 4),
+        wr.update_where_dv(spark, target, {"v": F.col("v") + 1}, F.col("k") == 5),
+        wr.delete_where_dv(spark, target, F.col("k") == 6),
+        wr.compact(spark, target),
+        wr.rename_column(target, "v", "val"),
+        wr.drop_column(target, "w"),
+        wr.restore(spark, target, version=13),
+    ]
+    # Checked before the vacuum reclaims the removed files.
+    removes = {c["version"]: c["remove"] for c in wr._commits(target) if "remove" in c}
+    assert removes == {
+        8: holding(7, [0, 1]),
+        9: holding(8, [2]),
+        10: holding(9, [3]),
+        11: holding(10, [4]),
+        14: wr.committed_files(target, 13),
+        17: sorted(set(wr.committed_files(target, 16)) - set(wr.committed_files(target, 13))),
+    }
+    results.append(len(wr.vacuum(target, retain_versions=0, unsafe_zero_retention=True)))
+    assert results == [pin[0] for pin in _FORMAT_PIN]
+    commits = wr._commits(target)
+    assert [c["version"] for c in commits] == list(range(1, len(_FORMAT_PIN) + 1))
+    for c, (_, op, n, keys, features) in zip(commits, _FORMAT_PIN):
+        body = [k for k in c if k != "version"]
+        expected = keys + ["op"] + (["features"] if features else [])
+        assert body == expected, (c["version"], body)
+        assert (c["op"], c["n"], c.get("features")) == (op, n, features)
+    got = wr.read_committed(spark, target)
+    assert got.columns == ["k", "val"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (0, 100), (1, 101), (3, 33), (4, 5), (5, 6), (7, 7), (8, 8), (9, 9),
+        (10, 10), (11, 11), (12, 12), (13, 13), (14, 14), (20, 20),
+    ]
+
+    assert wr.clone_table(target, dst) == len(_CLONE_PIN)
+    for c, (op, keys, features) in zip(wr._commits(dst), _CLONE_PIN):
+        assert [k for k in c if k != "version"] == keys + ["op", "features"]
+        assert (c["op"], c["n"], c.get("features")) == (op, 0, features)
