@@ -27,6 +27,9 @@ log (the same protocol Delta's transaction log uses):
     plain ``spark.read.parquet(path)`` keeps working;
   * ``_txlog/<version>.json`` manifests record each commit's files;
     the underscore prefix hides the log from Spark's file index;
+  * a file is part of the table only if the log lists it: every
+    writer and reader takes the table's state from the log alone, and
+    any other parquet file in the directory is a leftover;
   * every writer commits through one loop, :func:`_transact`: each
     attempt parses the log once into a :class:`Snapshot`, lets the
     writer stage its files and name its manifest actions against that
@@ -48,8 +51,7 @@ readers would see (exactly Delta's un-vacuumed-file situation);
 
 Scale: the anti-join shuffles on the high-cardinality natural key; the
 target side is pruned to key columns only, so the "read the whole
-target" cost is a key-column scan, and partition pruning applies when
-``target_partition_filter`` narrows it.
+target" cost is a key-column scan.
 """
 
 from __future__ import annotations
@@ -315,15 +317,38 @@ class Snapshot:
         )
 
     def readable_as_of(self, version: int | None) -> Snapshot:
-        """:meth:`as_of`, refusing a version below the vacuum horizon —
-        its files may be reclaimed."""
-        if version is not None and version < self.vacuum_cutoff:
+        """:meth:`as_of`, refusing a version below the vacuum horizon."""
+        if version is not None:
+            self.check_horizon(version, f"version {version}")
+        return self.as_of(version)
+
+    def check_horizon(self, version: int, what: str) -> None:
+        """Refuse ``what`` — a read of ``version`` or of the commits
+        after it — when ``version`` is below the vacuum retention
+        horizon: its files may be reclaimed."""
+        if version < self.vacuum_cutoff:
             raise ValueError(
-                f"version {version} is below the vacuum retention horizon "
+                f"{what} reaches below the vacuum retention horizon "
                 f"({self.vacuum_cutoff}) at {self.path} — its files may be "
                 "reclaimed"
             )
-        return self.as_of(version)
+
+    def changes(self, after: int) -> list[tuple[dict, bool, list[str]]]:
+        """The change feed's files, per commit after version ``after``,
+        as ``(commit, is_cdc, files)``. A commit that wrote typed
+        change-data files contributes them (carried-over rows of a
+        rewrite are not changes); any other commit contributes its
+        added files, every row an insert. Compaction commits change no
+        rows and are skipped, as are commits that add nothing."""
+        out = []
+        for c in self.commits:
+            if c["version"] <= after or c.get("compaction"):
+                continue
+            if c.get("cdc"):
+                out.append((c, True, c["cdc"]))
+            elif c["add"]:
+                out.append((c, False, c["add"]))
+        return out
 
     @cached_property
     def files(self) -> list[str]:
@@ -618,7 +643,6 @@ def _read_files(
     target_path: str,
     files: Sequence[str],
     schema=None,
-    merge_schema: bool = False,
     lineage: bool = False,
 ) -> DataFrame:
     """Read a set of table-relative parquet files that may span
@@ -658,8 +682,6 @@ def _read_files(
         reader = spark.read.option("basePath", target_path)
         if schema is not None:
             reader = reader.schema(schema)
-        elif merge_schema:
-            reader = reader.option("mergeSchema", "true")
         part = reader.parquet(*[os.path.join(target_path, f) for f in fs])
         if lineage:
             part = part.select(
@@ -695,7 +717,6 @@ def _read_snapshot(
     snap: Snapshot,
     files: Sequence[str],
     schema=None,
-    merge_schema: bool = False,
     keep_lineage: bool = False,
 ) -> DataFrame:
     """The committed ROW view: ``_read_files`` over the given files
@@ -737,14 +758,7 @@ def _read_snapshot(
         schema = StructType(
             [f for f in schema.fields if f.name not in dropped]
         )
-    df = _read_files(
-        spark,
-        target_path,
-        files,
-        schema=schema,
-        merge_schema=merge_schema,
-        lineage=need_lineage,
-    )
+    df = _read_files(spark, target_path, files, schema=schema, lineage=need_lineage)
     if targeted:
         uri_map = spark.createDataFrame(
             [(f, _file_uri(target_path, f)) for f in sorted(targeted)],
@@ -1594,7 +1608,7 @@ def table_schema(target_path: str, version: int | None = None):
 def file_stats(target_path: str, version: int | None = None) -> dict[str, dict]:
     """Zone maps of the committed file view: {rel_path: {col: [min,
     max]}}, add/remove applied in version order. Files committed before
-    stats existed (or via legacy adoption) are absent — unprunable."""
+    stats existed are absent — unprunable."""
     return Snapshot(target_path, version).stats
 
 
@@ -1710,20 +1724,11 @@ def table_changes(
     from pyspark.sql.types import StringType, StructField, StructType
 
     snap = Snapshot(target_path)
-    horizon = snap.vacuum_cutoff
-    if from_version < horizon:
-        raise ValueError(
-            f"change feed from version {from_version} reaches below the "
-            f"vacuum retention horizon ({horizon}) at {target_path} — "
-            "those commits' files may be reclaimed; start at the horizon "
-            "or later"
-        )
+    snap.check_horizon(from_version, f"change feed from version {from_version}")
     evolved = snap.schema
     parts: list[DataFrame] = []
-    for c in snap.commits:
-        if c["version"] <= from_version or c.get("compaction"):
-            continue
-        if c.get("cdc"):
+    for c, is_cdc, files in snap.changes(from_version):
+        if is_cdc:
             # Change-data files are flat (partition columns are physical
             # there) and carry _change_type — no basePath needed.
             reader = spark.read
@@ -1733,15 +1738,11 @@ def table_changes(
                         [*evolved.fields, StructField(_CHANGE_COL, StringType(), True)]
                     )
                 )
-            part = reader.parquet(
-                *[os.path.join(target_path, rel) for rel in c["cdc"]]
-            )
-        elif c["add"]:
-            part = _read_files(
-                spark, target_path, c["add"], schema=evolved
-            ).withColumn(_CHANGE_COL, F.lit("insert"))
+            part = reader.parquet(*[os.path.join(target_path, rel) for rel in files])
         else:
-            continue
+            part = _read_files(
+                spark, target_path, files, schema=evolved
+            ).withColumn(_CHANGE_COL, F.lit("insert"))
         if with_version:
             part = part.withColumn(
                 "_commit_version", F.lit(c["version"]).cast("bigint")
@@ -1894,9 +1895,12 @@ def compact(
 
 
 def vacuum_orphans(target_path: str) -> list[str]:
-    """Delete data files not referenced by any commit (a crashed
-    writer's staged leftovers) — Delta's VACUUM, minus the retention
-    window because this log has no deletes/overwrites to time-travel.
+    """Delete every data file the live snapshot does not list: a
+    crashed writer's staged leftovers, files placed in the directory
+    outside the log, and files a commit removed — Delta's VACUUM with
+    zero retention. No vacuum horizon is recorded, so time travel to a
+    version whose removed files were reclaimed fails at the scan
+    instead of with the retention error (:func:`vacuum` records one).
     Change-data files not referenced by any commit's ``cdc`` entry (a
     crashed upsert's staged leftovers) are reclaimed the same way;
     committed change files are kept — they are the feed's history."""
@@ -2116,11 +2120,7 @@ def restore(
         head = snap.version
         if version is None or version > head:
             raise ValueError(f"restore target {version} not in log (head={head})")
-        if version < snap.vacuum_cutoff:
-            raise ValueError(
-                f"restore target {version} is below the vacuum retention "
-                f"horizon ({snap.vacuum_cutoff}) at {target_path}"
-            )
+        snap.check_horizon(version, f"restore target {version}")
         old = snap.as_of(version)
         old_files, cur_files = old.files, snap.files
         re_add = sorted(set(old_files) - set(cur_files))
@@ -2407,7 +2407,6 @@ def merge_append(
     target_path: str,
     batch: DataFrame,
     keys: Sequence[str],
-    target_partition_filter: Column | None = None,
     partition_cols: Sequence[str] | None = None,
     _pre_commit_hook: Callable[[], None] | None = None,
 ) -> int:
@@ -2422,9 +2421,7 @@ def merge_append(
     race). The anti-join snapshot is the COMMITTED view (manifest-listed
     files only), so a concurrent writer's staged-but-uncommitted rows
     never suppress an insert — if that writer dies before its commit,
-    its keys are still insertable. A target with data files but no
-    txlog (legacy plain-parquet table) is snapshotted via a plain read
-    and adopted into the log by this commit.
+    its keys are still insertable.
 
     ``_pre_commit_hook`` is fault-injection for tests (runs between
     stage and publish, where a concurrent winner can sneak in).
@@ -2438,38 +2435,14 @@ def merge_append(
         # a different type fails the WRITER, not some later reader.
         # Re-checked per attempt — the schema may have evolved under a
         # concurrent winner.
-        declared = snap.schema
         _check_type_conflicts(b, snap)
-        committed = snap.files
-        legacy = [] if committed else _data_files(target_path)
-        snapshot_files = committed or legacy
-        legacy_schema = None
-        if snapshot_files:
+        if snap.files:
             # _read_snapshot (not _read_files): DV-masked rows are not
             # part of the table — their keys must not suppress inserts
             # — and the anti-join runs in logical column space. The
             # log-declared schema (when present) skips the per-call
             # parquet schema-inference job.
-            existing = _read_snapshot(
-                spark,
-                snap,
-                snapshot_files,
-                schema=declared if (declared is not None and not legacy) else None,
-                merge_schema=bool(legacy),
-            )
-            if legacy:
-                # Adoption must record the FULL legacy schema, not just
-                # the batch's — otherwise legacy-only columns become
-                # permanently invisible to the log-schema reads, and
-                # legacy/batch type conflicts dodge the writer check.
-                legacy_schema = (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*[os.path.join(target_path, f) for f in legacy])
-                    .schema
-                )
-                _union_structs([legacy_schema, b.schema])  # conflict → raise
-            if target_partition_filter is not None:
-                existing = existing.filter(target_partition_filter)
+            existing = _read_snapshot(spark, snap, snap.files, schema=snap.schema)
             new_rows = new_rows_anti(b, existing, keys)
         else:
             new_rows = b
@@ -2485,18 +2458,11 @@ def merge_append(
         n = _staged_row_count(target_path, staged)
         if n == 0:
             return 0, staged, None  # the writer may emit one empty part
-        # Adopt legacy files into the log so later committed-view reads
-        # and vacuums account for them.
-        commit_schema = (
-            _union_structs([legacy_schema, new_rows.schema])
-            if legacy_schema is not None
-            else new_rows.schema
-        )
         return n, staged, {
-            "add": legacy + staged,
+            "add": staged,
             "n": n,
             "stats": _collect_stats(target_path, staged),
-            "schema": json.dumps(commit_schema.jsonValue()),
+            "schema": json.dumps(new_rows.schema.jsonValue()),
             "op": "MERGE APPEND",
         }
 
@@ -2647,8 +2613,8 @@ def _matched_slice(
     dv: bool = False,
 ):
     """The rows of ``snap`` matching ``condition`` — the first half of
-    every DML writer. None when the table is empty (a legacy table is
-    adopted by a merge first) or, copy-on-write, when no file matches.
+    every DML writer. None when the table is empty or, copy-on-write,
+    when no file matches.
 
     Copy-on-write: ``(files, touched)`` — the table-relative files
     holding a matched row (``what`` names the statement for the
@@ -2733,10 +2699,7 @@ def merge_upsert(
     from the declared schema fails the writer; ``schema_evolution=True``
     (Delta's ``withSchemaEvolution``) unions new columns additively —
     carried-over and pre-evolution rows null-fill. A re-typed column
-    fails the writer either way. A legacy plain-parquet table is
-    adopted: untouched legacy files enter the log, matched
-    legacy files are rewritten and simply not adopted (vacuum reclaims
-    them)."""
+    fails the writer either way."""
     inserted, updated, _ = _merge_rows(
         spark,
         target_path,
@@ -2842,30 +2805,29 @@ def merge_cdc_txn(
     keys: Sequence[str],
     app_id: str,
     txn_ver: int,
-    change_col: str = "_change_type",
     partition_cols: Sequence[str] | None = None,
     schema_evolution: bool = False,
     _pre_commit_hook: Callable[[], None] | None = None,
-    pin_batch: bool = True,
 ) -> tuple[int, int, int]:
     """Apply a CHANGE-DATA batch to a table, exactly once — the CDC
     consumer's merge (Delta's documented foreachBatch pattern for
     readChangeFeed):
 
-        WHEN MATCHED AND src.{change} = 'delete' THEN DELETE
+        WHEN MATCHED AND src._change_type = 'delete' THEN DELETE
         WHEN MATCHED THEN UPDATE SET *
-        WHEN NOT MATCHED AND src.{change} <> 'delete' THEN INSERT *
+        WHEN NOT MATCHED AND src._change_type <> 'delete' THEN INSERT *
 
-    Rows tagged ``delete`` in ``change_col`` delete their target keys
+    Rows tagged ``delete`` in ``_change_type`` delete their target keys
     (a delete for an absent key is a no-op — it may have never
     replicated); every other row upserts. The change column itself is
     not written. Returns (inserted, updated, deleted); idempotent per
     (app_id, txn_ver) like :func:`merge_upsert_txn` — the caller must
     reduce the batch to ONE change per key first (newest wins).
 
-    ``pin_batch`` defaults on here (unlike the generic engine): a CDC
+    The batch is pinned (unlike the generic engine's default): a CDC
     batch usually arrives through the change-feed streaming source,
-    whose reads run in Python workers — see the engine's note."""
+    whose reads run in Python workers — see the engine's ``pin_batch``
+    note."""
     return _merge_rows(
         spark,
         target_path,
@@ -2873,11 +2835,11 @@ def merge_cdc_txn(
         keys,
         partition_cols=partition_cols,
         _pre_commit_hook=_pre_commit_hook,
-        matched_delete=F.col(change_col) == "delete",
-        drop_from_data=[change_col],
+        matched_delete=F.col(_CHANGE_COL) == "delete",
+        drop_from_data=[_CHANGE_COL],
         txn={"app": app_id, "version": txn_ver},
         schema_evolution=schema_evolution,
-        pin_batch=pin_batch,
+        pin_batch=True,
     )
 
 
@@ -2981,36 +2943,16 @@ def _merge_rows(
         # Every batch row is written (as insert or update post-image) —
         # the whole batch is in CHECK-constraint scope.
         _enforce_constraints(b, snap)
-        committed = snap.files
-        legacy = [] if committed else _data_files(target_path)
-        snapshot_files = committed or legacy
         matched_files: list[str] = []
         cdc_batch = b.withColumn(_CHANGE_COL, F.lit("insert"))
         preimage = carried = dels = None
-        if snapshot_files:
-            read_schema = declared if (declared is not None and not legacy) else None
-            if legacy:
-                _union_structs(
-                    [
-                        spark.read.option("mergeSchema", "true")
-                        .parquet(
-                            *[os.path.join(target_path, f) for f in legacy]
-                        )
-                        .schema,
-                        b.schema,
-                    ]
-                )  # legacy/batch type conflict → raise before any write
+        if snap.files:
             # _read_snapshot: rows masked by deletion vectors are not
             # part of the table — their keys INSERT (not update), and
             # they never carry over into rewritten files. keep_lineage
             # gives per-row file identity for touched-file discovery.
             existing = _read_snapshot(
-                spark,
-                snap,
-                snapshot_files,
-                schema=read_schema,
-                merge_schema=bool(legacy),
-                keep_lineage=True,
+                spark, snap, snap.files, schema=declared, keep_lineage=True
             )
             # Touched-file discovery: distinct files owning matched keys.
             # Driver-side list bounded by #files, computed from a
@@ -3045,13 +2987,7 @@ def _merge_rows(
             # owning a batch key ⇒ nothing in the snapshot matches:
             # every batch row is an insert, no join needed.
             if matched_files:
-                touched = _read_snapshot(
-                    spark,
-                    snap,
-                    matched_files,
-                    schema=read_schema,
-                    merge_schema=bool(legacy),
-                )
+                touched = _read_snapshot(spark, snap, matched_files, schema=declared)
                 # Partition the touched rows in ONE pass (left-join
                 # markers) instead of one semi/anti join per branch:
                 # in-batch → update_preimage; delete-directive or
@@ -3146,11 +3082,9 @@ def _merge_rows(
         if counts == (0, 0, 0):
             return counts, staged + cdc_staged, None
         return counts, staged + cdc_staged, {
-            "add": [f for f in legacy if f not in set(matched_files)] + staged,
+            "add": staged,
             "n": inserted + updated,
-            # Legacy matched files were never in the log: rewriting them
-            # means just not adopting them (vacuum reclaims the bytes).
-            "remove": [f for f in matched_files if f not in set(legacy)],
+            "remove": matched_files,
             "stats": _collect_stats(target_path, staged),
             "schema": json.dumps(new_data.schema.jsonValue()),
             "cdc": cdc_staged,
@@ -3191,7 +3125,8 @@ def delete_where(
         staged, cdc_staged, _, (_, _, n_deleted) = _stage_dml(
             snap,
             touched.filter(condition).withColumn(_CHANGE_COL, F.lit("delete")),
-            touched.filter(~condition),
+            # A row whose condition is NULL is not deleted: carry it.
+            touched.filter(~F.coalesce(condition, F.lit(False))),
             partition_cols,
         )
         staged = _drop_empty(target_path, staged)  # whole files deleted
@@ -3445,7 +3380,7 @@ def delete_where_dv(
     def build(snap: Snapshot):
         matched = _matched_slice(spark, snap, condition, "DELETE", dv=True)
         if matched is None:
-            return 0, [], None  # empty table (legacy tables: adopt via a merge first)
+            return 0, [], None  # empty table
         kill, rows = matched
         _, cdc_staged, dv, _ = _stage_dml(
             snap, rows.withColumn(_CHANGE_COL, F.lit("delete")), kill=kill

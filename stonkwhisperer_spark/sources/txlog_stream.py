@@ -190,14 +190,7 @@ class _TxlogStreamReader(DataSourceStreamReader):
             raise ValueError(
                 "maxPartitionBytes must be >= 1 and openCostInBytes >= 0"
             )
-        horizon = snap.vacuum_cutoff
-        if self._start < horizon:
-            raise ValueError(
-                f"startingVersion {self._start + 1} reaches below the vacuum "
-                f"retention horizon ({horizon}) at {self._path} — those "
-                "commits' files may be reclaimed; start at the horizon + 1 "
-                "or later"
-            )
+        snap.check_horizon(self._start, f"startingVersion {self._start + 1}")
         self._current = self._start
         # Field order + arrow types of the OUTPUT schema; the change and
         # version columns are appended by read(), the rest come from the
@@ -233,9 +226,8 @@ class _TxlogStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         self._current = max(self._current, start["version"], end["version"])
         entries: list[tuple[str, int, bool, int | None]] = []
-        for c in Snapshot(self._path, end["version"]).commits:
-            if c["version"] <= start["version"] or c.get("compaction"):
-                continue
+        feed = Snapshot(self._path, end["version"]).changes(start["version"])
+        for c, is_cdc, files in feed:
             # File sizes come from the commit manifest (recorded at
             # write time, r16): zero per-poll stat syscalls for commits
             # that carry them, and replay-stable packing even after a
@@ -243,29 +235,10 @@ class _TxlogStreamReader(DataSourceStreamReader):
             # longer stat. Pre-r16 commits fall back to one driver stat
             # per file per poll (the r15 behavior).
             sizes = c.get("sizes", {})
-            if c.get("cdc"):
-                # Upsert commit: the feed is the typed change files
-                # (pre/post images + inserts), never the rewritten data
-                # files — carried-over rows are not changes.
-                entries.extend(
-                    (
-                        os.path.join(self._path, rel),
-                        c["version"],
-                        True,
-                        sizes.get(rel),
-                    )
-                    for rel in c["cdc"]
-                )
-            else:
-                entries.extend(
-                    (
-                        os.path.join(self._path, rel),
-                        c["version"],
-                        False,
-                        sizes.get(rel),
-                    )
-                    for rel in c["add"]
-                )
+            entries.extend(
+                (os.path.join(self._path, rel), c["version"], is_cdc, sizes.get(rel))
+                for rel in files
+            )
         # Pack files into byte-bounded groups, in commit order (greedy,
         # deterministic: sizes are log metadata, so a replayed offset
         # range re-plans identical groups as long as its commits record

@@ -478,28 +478,6 @@ def test_schema_evolution_covers_all_read_surfaces(spark, tmp_path):
     }
 
 
-def test_legacy_adoption_preserves_legacy_columns(spark, tmp_path):
-    """Adopting a plain-parquet table records the legacy UNION batch
-    schema, so legacy-only columns stay visible to log-schema reads
-    (regression: only the batch schema was recorded, hiding them)."""
-    from stonkwhisperer_spark.sinks.writers import merge_append, read_committed
-
-    target = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", 9.5)], "k long, s string, extra double"
-    ).coalesce(1).write.parquet(target)
-
-    merge_append(
-        spark,
-        target,
-        spark.createDataFrame([(2, "b")], "k long, s string"),
-        ["k"],
-    )
-    snap = read_committed(spark, target)
-    assert set(snap.columns) == {"k", "s", "extra"}
-    assert {r.k: r.extra for r in snap.collect()} == {1: 9.5, 2: None}
-
-
 # ---------------------------------------------------------------------------
 # merge_upsert: WHEN MATCHED UPDATE + WHEN NOT MATCHED INSERT with typed CDC.
 # ---------------------------------------------------------------------------

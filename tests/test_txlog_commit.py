@@ -13,6 +13,7 @@ version.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 
 import pytest
@@ -149,3 +150,65 @@ def test_snapshot_file_view_keeps_order_and_checks_removes():
     corrupt = [*commits, {"version": 4, "add": [], "remove": ["a"]}]
     with pytest.raises(KeyError):
         wr.Snapshot("t", commits=corrupt).files
+
+
+# ---------------------------------------------------------------------------
+# The log is the only source of table state: a parquet file in the table
+# directory is part of the table only if a commit lists it.
+# ---------------------------------------------------------------------------
+def _keys(spark, path):
+    df = wr.read_committed(spark, path)
+    return sorted(r.k for r in df.collect()) if df is not None else []
+
+
+@pytest.mark.parametrize("writer", ["merge_append", "merge_upsert"])
+def test_emptied_table_does_not_resurrect_removed_files(spark, tmp_path, writer):
+    """After a delete removes every live file, the next merge sees an
+    empty table — the removed files still on disk are not rows."""
+    target = str(tmp_path / "t")
+    wr.merge_append(spark, target, _rows(spark, 1, 3), ["k"])
+    assert wr.delete_where(spark, target, F.col("k") > 0) == 2
+    assert wr.committed_files(target) == []
+    got = getattr(wr, writer)(spark, target, _rows(spark, 3, 4), ["k"])
+    assert got == (1 if writer == "merge_append" else (1, 0))
+    assert _keys(spark, target) == [3]
+
+
+def test_crashed_first_writer_leaves_no_rows(spark, tmp_path):
+    """A first writer that dies between stage and publish leaves staged
+    files in a table with no log; the next writer must not adopt them."""
+    target = str(tmp_path / "t")
+
+    def die():
+        raise RuntimeError("killed before publish")
+
+    with pytest.raises(RuntimeError, match="killed before publish"):
+        wr.merge_append(spark, target, _rows(spark, 9, 10), ["k"], _pre_commit_hook=die)
+    assert wr.merge_append(spark, target, _rows(spark, 1, 2), ["k"]) == 1
+    assert _keys(spark, target) == [1]
+    assert wr.vacuum_orphans(target)  # the dead writer's staged part
+
+
+def test_plain_parquet_in_target_is_not_table_state(spark, tmp_path):
+    """A plain parquet file already in the target directory is neither
+    read nor committed by a merge; vacuum_orphans reclaims it."""
+    target = str(tmp_path / "t")
+    _rows(spark, 1, 2).coalesce(1).write.parquet(target)
+    (plain,) = [f for f in os.listdir(target) if f.endswith(".parquet")]
+    assert wr.merge_append(spark, target, _rows(spark, 1, 3), ["k"]) == 2
+    assert _keys(spark, target) == [1, 2]
+    assert plain not in wr.committed_files(target)
+    assert wr.vacuum_orphans(target) == [plain]
+
+
+@pytest.mark.parametrize("writer", ["delete_where", "delete_where_dv"])
+def test_delete_keeps_rows_whose_condition_is_null(spark, tmp_path, writer):
+    """DELETE removes only rows where the condition is TRUE: a row whose
+    condition is NULL survives, in one file with rows that do match."""
+    target = str(tmp_path / "t")
+    seed = spark.createDataFrame([(1, None), (2, 5), (3, 1)], "k long, v long")
+    wr.merge_append(spark, target, seed.coalesce(1), ["k"])
+    assert len(wr.committed_files(target)) == 1
+    assert getattr(wr, writer)(spark, target, F.col("v") > 3) == 1
+    got = {r.k: r.v for r in wr.read_committed(spark, target).collect()}
+    assert got == {1: None, 3: 1}
