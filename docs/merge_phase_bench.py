@@ -63,8 +63,7 @@ def main() -> None:
         "_stage_cdc_files_counted",
         "_matched_rel_files",
         "_commits",
-        "_collect_stats",
-        "_staged_row_count",
+        "_stage_dml",
         "_try_commit",
         "_read_snapshot",
         "_cdc_counts",

@@ -9,7 +9,6 @@ cross-system hops, no hand-rolled 4-way splits (partitioning is the
 fan-out), and the whole thing is restart-safe because the sink is
 idempotent (re-running a flow inserts 0 rows).
 
-FLOW_CONFIG mirrors the reference's core/constants.py:1-28 knobs.
 Each flow returns the inserted-row count, like the reference's flows
 return their record counts (flows/news_etl_flow.py:23) — the A5
 "sum over batch results" surface.
@@ -33,7 +32,7 @@ _RAW = {"news": RAW_NEWS_SCHEMA, "posts": RAW_POSTS_SCHEMA, "bars": RAW_BARS_SCH
 
 
 def _read_raw(
-    spark: SparkSession, path: str, kind: str, fmt: str, arrival_in_data: bool
+    spark: SparkSession, path: str, kind: str, arrival_in_data: bool
 ) -> DataFrame:
     """Landing read for a flow. ``arrival_in_data=False`` (default) is
     the surrogate-order path: `_arrival_id` is synthesized from file
@@ -43,32 +42,22 @@ def _read_raw(
     ordered lists, extraction.py:28-96), making every keep-first dedup
     downstream value-deterministic and replayable."""
     if not arrival_in_data:
-        return read_landing(spark, path, kind, fmt=fmt)
+        return read_landing(spark, path, kind)
     schema = T.StructType(
         list(_RAW[kind].fields) + [T.StructField("_arrival_id", T.LongType())]
     )
-    return read_landing(spark, path, schema, fmt=fmt, with_arrival_id=False)
-
-# Reference core/constants.py:1-28 equivalents.
-FLOW_CONFIG = {
-    "news_categories": 5,          # NEWS_CATEGORIES keyword queries
-    "subreddits": 5,               # SUBREDDIT list
-    "tickers": 15,                 # TICKERS list
-    "fetch_limit_per_flow": 100,   # DATA_FETCH_LIMIT_PER_FLOW
-    "flairs": None,                # optional F1 source predicate
-}
+    return read_landing(spark, path, schema, with_arrival_id=False)
 
 
 def news_flow(
     spark: SparkSession,
     landing_path: str,
     target_path: str,
-    fmt: str = "parquet",
     arrival_in_data: bool = False,
 ) -> int:
     """Landing news drops → clean_news → merge-append on url.
     One shuffle (url dedup window) + the merge anti-join."""
-    raw = _read_raw(spark, landing_path, "news", fmt, arrival_in_data)
+    raw = _read_raw(spark, landing_path, "news", arrival_in_data)
     clean = clean_news(raw, order_col="_arrival_id")
     return merge_append(spark, target_path, clean, ["url"])
 
@@ -78,12 +67,11 @@ def posts_flow(
     landing_path: str,
     target_path: str,
     flairs: list[str] | None = None,
-    fmt: str = "parquet",
     arrival_in_data: bool = False,
 ) -> int:
     """Landing reddit drops → clean_posts (optional F1 flair filter) →
     merge-append on reddit_id."""
-    raw = _read_raw(spark, landing_path, "posts", fmt, arrival_in_data)
+    raw = _read_raw(spark, landing_path, "posts", arrival_in_data)
     clean = clean_posts(raw, order_col="_arrival_id", flairs=flairs)
     return merge_append(spark, target_path, clean, ["reddit_id"])
 
@@ -93,14 +81,13 @@ def bars_flow(
     landing_path: str,
     target_path: str,
     companies: DataFrame,
-    fmt: str = "parquet",
     arrival_in_data: bool = False,
 ) -> int:
     """Landing bar drops → clean_bars (coerce + gap-fill) → FK resolve
     + merge-append on (company_id, bar_ts), bar_date-partitioned."""
     from stonkwhisperer_spark.sinks.writers import upsert_bars
 
-    raw = _read_raw(spark, landing_path, "bars", fmt, arrival_in_data)
+    raw = _read_raw(spark, landing_path, "bars", arrival_in_data)
     clean = clean_bars(raw, tiebreak_col="_arrival_id")
     return upsert_bars(spark, target_path, clean, companies)
 

@@ -23,8 +23,15 @@ change-data feed (``table_changes``). Delta is not installable here,
 so the writers carry their own minimal optimistic-concurrency commit
 log (the same protocol Delta's transaction log uses):
 
-  * data files are uniquely-named parquet parts in the table root —
-    plain ``spark.read.parquet(path)`` keeps working;
+  * data files are uniquely-named parquet parts in the table root, or
+    under its Hive partition directories — plain
+    ``spark.read.parquet(path)`` keeps working;
+  * every data-writing path stages through :func:`_stage_files`, which
+    keeps two rules: a rewrite stages under the table's layout — the
+    partition keys in the path of the newest live file
+    (:attr:`Snapshot.partition_cols`), which
+    ``merge_append(partition_cols=)`` declares or changes — and no
+    empty data file is ever committed;
   * ``_txlog/<version>.json`` manifests record each commit's files;
     the underscore prefix hides the log from Spark's file index;
   * a file is part of the table only if the log lists it: every
@@ -478,6 +485,17 @@ class Snapshot:
         return self._named("generated_add", "generated_drop")
 
     @cached_property
+    def partition_cols(self) -> list[str]:
+        """The table's layout: the Hive partition keys in the path of
+        the newest live file, as PHYSICAL names, dropped columns
+        excluded. Rewrites stage under it; ``merge_append``'s
+        ``partition_cols`` declares or changes it. Empty for a flat or
+        empty table."""
+        if not self.files:
+            return []
+        return [k for k in _layout(self.files[-1]) if k not in self.dropped]
+
+    @cached_property
     def bloom_cols(self) -> list[str]:
         """PHYSICAL names of the columns bloom-indexed at write time
         (last ``bloom_cols`` commit wins, Delta's CREATE BLOOMFILTER
@@ -638,6 +656,16 @@ def _union_structs(structs):
     return StructType(list(merged.values())) if merged else None
 
 
+def _layout(rel: str) -> tuple[str, ...]:
+    """The Hive partition keys encoded in a table-relative file path
+    (``a=1/b=x/part.parquet`` → ``("a", "b")``)."""
+    return tuple(
+        seg.split("=", 1)[0]
+        for seg in rel.split("/")[:-1]
+        if "=" in seg and not seg.startswith((".", "_"))
+    )
+
+
 def _read_files(
     spark: SparkSession,
     target_path: str,
@@ -671,12 +699,7 @@ def _read_files(
     and file-discovery joins key on them."""
     groups: dict[tuple, list[str]] = {}
     for f in files:
-        keys = tuple(
-            seg.split("=", 1)[0]
-            for seg in f.split("/")[:-1]
-            if "=" in seg and not seg.startswith((".", "_"))
-        )
-        groups.setdefault(keys, []).append(f)
+        groups.setdefault(_layout(f), []).append(f)
     parts: list[DataFrame] = []
     for fs in groups.values():
         reader = spark.read.option("basePath", target_path)
@@ -1053,7 +1076,7 @@ def read_committed_point(
     lookups and debugging reads. Driver-side decision on manifest
     metadata, before any task is scheduled; the residual equality
     filter still applies row-level."""
-    snap = Snapshot(target_path, version)
+    snap = Snapshot(target_path).readable_as_of(version)
     files = snap.files
     if not files:
         return None, 0, 0
@@ -1429,7 +1452,7 @@ def _try_commit(target_path: str, version: int, actions: dict, snap: Snapshot) -
         with open(tmp, "w") as fh:
             # allow_nan=False: the manifest is the table's public format —
             # strict JSON only (Infinity/NaN tokens would break non-Python
-            # log readers). _collect_stats already drops non-finite bounds,
+            # log readers). _zone_map already drops non-finite bounds,
             # so this is a loud backstop, not a code path.
             json.dump(body, fh, allow_nan=False)
             fh.flush()
@@ -1454,13 +1477,23 @@ def _try_commit(target_path: str, version: int, actions: dict, snap: Snapshot) -
 def _stage_files(
     new_rows: DataFrame,
     snap: Snapshot,
-    partition_cols: Sequence[str] | None,
+    partition_cols: Sequence[str] | None = None,
     size_output: bool = True,
-) -> list[str]:
-    """Write the insert set to a dot-hidden staging dir inside the
-    table, then os.replace each part file into the table root (same
-    filesystem ⇒ atomic rename; readers never observe a partial file).
-    Returns the relative paths of the staged files.
+) -> tuple[list[str], int, dict[str, dict]]:
+    """The one staging step of every data-writing path: write the rows
+    to a dot-hidden staging dir inside the table, then os.replace each
+    part file into the table (same filesystem ⇒ atomic rename; readers
+    never observe a partial file). Returns ``(staged, rows,
+    zone_maps)``: the table-relative paths of the staged files, their
+    row count and their zone maps (:func:`_zone_map`), all from ONE
+    footer read per part. A 0-row part is deleted, never staged — an
+    empty data file is never committed.
+
+    Layout: the rows stage under ``partition_cols`` (logical names)
+    when the caller names them, else under the table's current layout
+    (:attr:`Snapshot.partition_cols`, the keys of the newest live file
+    that the rows carry), so a rewrite keeps the table's partition
+    directories.
 
     Data files always store PHYSICAL column names: the logical→physical
     translation happens here, at the disk boundary, so writers compute
@@ -1477,60 +1510,57 @@ def _stage_files(
     merge engine re-scans it 3+ times per MERGE). Callers that arrange
     their own layout (compact's range/Z-order clustering) pass False —
     a rebalance there would destroy the clustering."""
+    import pyarrow.parquet as pq
+
     target_path = snap.path
     new_rows = _to_physical(new_rows, snap)
-    if partition_cols:
+    if partition_cols is None:
+        partition_cols = [c for c in snap.partition_cols if c in new_rows.columns]
+    else:
         partition_cols = [snap.colmap.get(c, c) for c in partition_cols]
     if size_output:
         # Partitioned writes rebalance ON the partition columns so each
         # output directory gets few well-sized files, not one per task.
-        new_rows = (
-            new_rows.hint("rebalance", *partition_cols)
-            if partition_cols
-            else new_rows.hint("rebalance")
-        )
+        new_rows = new_rows.hint("rebalance", *partition_cols)
     stage = os.path.join(target_path, f".stage-{uuid.uuid4().hex}")
     writer = new_rows.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(stage)
     staged: list[str] = []
+    rows = 0
+    zone_maps: dict[str, dict] = {}
     for dirpath, dirnames, filenames in os.walk(stage):
         dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
         for fn in filenames:
             if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
                 continue
+            md = pq.read_metadata(os.path.join(dirpath, fn))
+            if not md.num_rows:
+                continue  # left in the stage dir, removed with it
             rel_dir = os.path.relpath(dirpath, stage)
-            dst_dir = target_path if rel_dir == "." else os.path.join(target_path, rel_dir)
-            os.makedirs(dst_dir, exist_ok=True)
-            unique = f"part-{uuid.uuid4().hex}.parquet"
-            os.replace(os.path.join(dirpath, fn), os.path.join(dst_dir, unique))
-            staged.append(
-                unique if rel_dir == "." else os.path.join(rel_dir, unique)
-            )
+            rel = f"part-{uuid.uuid4().hex}.parquet"
+            if rel_dir != ".":
+                rel = os.path.join(rel_dir, rel)
+            os.makedirs(os.path.dirname(os.path.join(target_path, rel)), exist_ok=True)
+            os.replace(os.path.join(dirpath, fn), os.path.join(target_path, rel))
+            staged.append(rel)
+            rows += md.num_rows
+            zone_map = _zone_map(md)
+            if zone_map:
+                zone_maps[rel] = zone_map
     shutil.rmtree(stage, ignore_errors=True)
-    return staged
+    return staged, rows, zone_maps
 
 
-def _staged_row_count(target_path: str, staged: list[str]) -> int:
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(os.path.join(target_path, rel)).metadata.num_rows
-        for rel in staged
-    )
-
-
-def _collect_stats(target_path: str, staged: list[str]) -> dict[str, dict]:
-    """Per-file zone maps from the parquet footers the writer just
-    produced: {rel_path: {column: [min, max]}} for int/float/string
-    leaf columns. Read cost is the same footer range already fetched
-    for the row count — no data pages. Columns without parquet
+def _zone_map(md) -> dict[str, list]:
+    """One file's zone map from its parquet footer: {column: [min,
+    max]} for int/float/string leaf columns. Columns without parquet
     statistics (or with exotic types) are simply absent, which readers
     treat as unprunable (safe).
 
     A column whose min/max cannot be established for EVERY row group of
-    a file is dropped from that file's map entirely: a partial zone map
+    the file is dropped from the map entirely: a partial zone map
     (some row groups bounded, others not) would understate the file's
     true range and make read_committed_pruned skip a file that contains
     matching rows — silent row loss. The one row-group shape that is
@@ -1540,57 +1570,45 @@ def _collect_stats(target_path: str, staged: list[str]) -> dict[str, dict]:
     make the commit manifest non-strict JSON."""
     import math
 
-    import pyarrow.parquet as pq
-
-    out: dict[str, dict] = {}
-    for rel in staged:
-        md = pq.ParquetFile(os.path.join(target_path, rel)).metadata
-        cols: dict[str, list] = {}
-        bad: set[str] = set()  # columns with any unbounded row group
-        for rg_idx in range(md.num_row_groups):
-            rg = md.row_group(rg_idx)
-            for c_idx in range(rg.num_columns):
-                col = rg.column(c_idx)
-                name = col.path_in_schema
-                try:
-                    st = col.statistics
-                    if st is None:
+    cols: dict[str, list] = {}
+    bad: set[str] = set()  # columns with any unbounded row group
+    for rg_idx in range(md.num_row_groups):
+        rg = md.row_group(rg_idx)
+        for c_idx in range(rg.num_columns):
+            col = rg.column(c_idx)
+            name = col.path_in_schema
+            try:
+                st = col.statistics
+                if st is None:
+                    bad.add(name)
+                    continue
+                if not st.has_min_max:
+                    # All-NULL chunk: zero non-null values, nothing to
+                    # bound — safe to omit. Anything else (writer
+                    # dropped stats on oversized values…) poisons the
+                    # column for this file.
+                    if not (st.has_null_count and st.null_count == col.num_values):
                         bad.add(name)
-                        continue
-                    if not st.has_min_max:
-                        # All-NULL chunk: zero non-null values, nothing
-                        # to bound — safe to omit. Anything else
-                        # (writer dropped stats on oversized values…)
-                        # poisons the column for this file.
-                        if not (
-                            st.has_null_count
-                            and st.null_count == col.num_values
-                        ):
-                            bad.add(name)
-                        continue
-                    lo, hi = st.min, st.max
-                except Exception:  # noqa: BLE001 — pyarrow raises on
-                    bad.add(name)  # types it can't extract stats for
                     continue
-                if not isinstance(lo, (int, float, str)) or not isinstance(
-                    hi, (int, float, str)
-                ):
-                    bad.add(name)
-                    continue
-                if isinstance(lo, float) and not (
-                    math.isfinite(lo) and math.isfinite(hi)
-                ):
-                    bad.add(name)
-                    continue
-                if name in cols:
-                    cols[name] = [min(cols[name][0], lo), max(cols[name][1], hi)]
-                else:
-                    cols[name] = [lo, hi]
-        for name in bad:
-            cols.pop(name, None)
-        if cols:
-            out[rel] = cols
-    return out
+                lo, hi = st.min, st.max
+            except Exception:  # noqa: BLE001 — pyarrow raises on
+                bad.add(name)  # types it can't extract stats for
+                continue
+            if not isinstance(lo, (int, float, str)) or not isinstance(
+                hi, (int, float, str)
+            ):
+                bad.add(name)
+                continue
+            if isinstance(lo, float) and not (math.isfinite(lo) and math.isfinite(hi)):
+                bad.add(name)
+                continue
+            if name in cols:
+                cols[name] = [min(cols[name][0], lo), max(cols[name][1], hi)]
+            else:
+                cols[name] = [lo, hi]
+    for name in bad:
+        cols.pop(name, None)
+    return cols
 
 
 def table_schema(target_path: str, version: int | None = None):
@@ -1813,7 +1831,6 @@ def compact(
     target_path: str,
     min_files: int = 2,
     target_bytes: int = 128 * 1024 * 1024,
-    partition_cols: Sequence[str] | None = None,
     cluster_by: Sequence[str] | None = None,
     zorder: bool = False,
 ) -> int:
@@ -1822,7 +1839,10 @@ def compact(
     one atomic version (add=new, remove=old, compaction=true). Readers
     at any point see either the old or the new file set — never both.
     The replaced files stay on disk for older-version readers until
-    ``vacuum_orphans`` reclaims them (the retention-window trade).
+    ``vacuum_orphans`` reclaims them (the retention-window trade). The
+    rewrite keeps the table's partition layout (the keys of the newest
+    live file), and a table whose rows are all DV-masked compacts to no
+    file at all.
 
     ``cluster_by`` is OPTIMIZE ZORDER's single-dimension analog: the
     rewrite range-partitions + sorts on the given columns, so each
@@ -1853,11 +1873,10 @@ def compact(
             os.path.getsize(os.path.join(target_path, f)) for f in old
         )
         n_parts = max(1, int(total // target_bytes) + (1 if total % target_bytes else 0))
-        # Partitioned tables must re-write under partitionBy (pass the
-        # table's partition_cols) or the layout flattens. The snapshot
-        # reads under the log's evolved schema so a compaction of a
-        # schema-evolved table rewrites the UNION schema (null-filled),
-        # not whichever file schema inference happened to pick.
+        # The snapshot reads under the log's evolved schema so a
+        # compaction of a schema-evolved table rewrites the UNION schema
+        # (null-filled), not whichever file schema inference happened
+        # to pick.
         # _read_snapshot: a compaction of DV-carrying files reads the
         # DV-filtered rows and removes the old files — the rewrite IS
         # the physical purge, and the output files start DV-free.
@@ -1879,15 +1898,13 @@ def compact(
             ).sortWithinPartitions(*cluster_by)
         else:
             arranged = snapshot.coalesce(n_parts)
-        staged = _stage_files(
-            arranged, snap, partition_cols,
-            size_output=False,  # layout arranged above (coalesce/cluster)
-        )
+        # size_output=False: layout arranged above (coalesce/cluster).
+        staged, _, stats = _stage_files(arranged, snap, size_output=False)
         return len(old), staged, {
             "add": staged,
             "remove": old,
             "compaction": True,
-            "stats": _collect_stats(target_path, staged),
+            "stats": stats,
             "op": "OPTIMIZE",
         }
 
@@ -2217,7 +2234,7 @@ def restore(
             ins if ins is not None else dels
         )
         cdc_staged = _stage_cdc_files(cdc, snap)
-        n = _staged_row_count(target_path, re_add)
+        n = sum(pq.read_metadata(os.path.join(target_path, f)).num_rows for f in re_add)
         # Footer row counts overstate DV-masked files — subtract the
         # target version's kill-list rows for the re-added files.
         re_add_set = set(re_add)
@@ -2364,7 +2381,6 @@ def append_txn(
     batch: DataFrame,
     app_id: str,
     txn_ver: int,
-    partition_cols: Sequence[str] | None = None,
     _pre_commit_hook: Callable[[], None] | None = None,
 ) -> int:
     """Idempotent transactional blind append — Delta's
@@ -2388,12 +2404,11 @@ def append_txn(
         b = _apply_generated(batch, snap)
         _check_type_conflicts(b, snap)
         _enforce_constraints(b, snap)
-        staged = _stage_files(b, snap, partition_cols)
-        n = _staged_row_count(target_path, staged)
+        staged, n, stats = _stage_files(b, snap)
         return n, staged, {
             "add": staged,
             "n": n,
-            "stats": _collect_stats(target_path, staged),
+            "stats": stats,
             "schema": json.dumps(b.schema.jsonValue()),
             "txn": {"app": app_id, "version": txn_ver},
             "op": "STREAMING UPDATE",
@@ -2423,6 +2438,11 @@ def merge_append(
     never suppress an insert — if that writer dies before its commit,
     its keys are still insertable.
 
+    ``partition_cols`` declares or changes the table's layout: the
+    rows stage under those Hive partition keys, and later rewrites keep
+    them. None stages under the table's current layout (flat on an
+    empty table).
+
     ``_pre_commit_hook`` is fault-injection for tests (runs between
     stage and publish, where a concurrent winner can sneak in).
     """
@@ -2449,19 +2469,18 @@ def merge_append(
         # CHECK constraints gate the rows actually WRITTEN (the
         # anti-join survivors), Delta's write-time invariant scope.
         _enforce_constraints(new_rows, snap)
-        # ONE action: stage the insert set, then read the row count
-        # from the staged parquet footers (pyarrow metadata — no second
-        # plan execution, no cache). On object storage this is a
+        # ONE action: stage the insert set; the row count comes from
+        # the staged parquet footers (pyarrow metadata — no second plan
+        # execution, no cache). On object storage this is a
         # footer-ranged read per file, still far cheaper than
         # recomputing the anti-join for a count().
-        staged = _stage_files(new_rows, snap, partition_cols)
-        n = _staged_row_count(target_path, staged)
+        staged, n, stats = _stage_files(new_rows, snap, partition_cols)
         if n == 0:
-            return 0, staged, None  # the writer may emit one empty part
+            return 0, staged, None
         return n, staged, {
             "add": staged,
             "n": n,
-            "stats": _collect_stats(target_path, staged),
+            "stats": stats,
             "schema": json.dumps(new_rows.schema.jsonValue()),
             "op": "MERGE APPEND",
         }
@@ -2556,53 +2575,38 @@ def _stage_dml(
     snap: Snapshot,
     cdc: DataFrame,
     data: DataFrame | None = None,
-    partition_cols: Sequence[str] | None = None,
     kill: DataFrame | None = None,
 ):
-    """Stage a DML commit's files: the typed change rows (counted), the
-    rewritten or post-image data rows and the deletion-vector kill list
-    when given. They are independent Spark actions, submitted
-    concurrently so the commit pays the slowest write, not the sum
-    (guide §2.6: the second job's tasks back-fill the first's straggler
-    tail). Returns ``(data_staged, cdc_staged, dv, (inserted, updated,
-    deleted))`` — ``dv`` is the manifest's deletion-vector entry, None
-    without a kill list."""
+    """The one tail of every DML commit: stage the typed change rows
+    (counted), the rewritten or post-image data rows and the
+    deletion-vector kill list when given. They are independent Spark
+    actions, submitted concurrently so the commit pays the slowest
+    write, not the sum (guide §2.6: the second job's tasks back-fill
+    the first's straggler tail). Returns ``((inserted, updated,
+    deleted), staged, actions)``: ``staged`` lists every file written
+    and ``actions`` holds the manifest entries every DML commit shares
+    (``add``, ``stats``, ``cdc`` and ``dv``, the deletion-vector entry
+    or None); the writer adds its own keys."""
     import pyarrow.parquet as pq
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_dv = None if kill is None else pool.submit(_stage_dv_files, kill, snap.path)
-        f_data = None if data is None else pool.submit(
-            _stage_files, data, snap, partition_cols
-        )
+        f_data = None if data is None else pool.submit(_stage_files, data, snap)
         f_cdc = pool.submit(_stage_cdc_files_counted, cdc, snap)
-        dv_staged = None if f_dv is None else f_dv.result()
-        staged = [] if f_data is None else f_data.result()
+        dv_staged = [] if f_dv is None else f_dv.result()
+        added, _, stats = ([], 0, {}) if f_data is None else f_data.result()
         cdc_staged, counts = f_cdc.result()
-    if dv_staged is None:
-        return staged, cdc_staged, None, counts
-    affected: set[str] = set()
-    n_masked = 0
-    for rel in dv_staged:
-        t = pq.read_table(os.path.join(snap.path, rel), columns=["file"])
-        n_masked += t.num_rows
-        affected.update(t.column(0).to_pylist())
-    dv = {"add": dv_staged, "files": sorted(affected), "n": n_masked}
-    return staged, cdc_staged, dv, counts
-
-
-def _drop_empty(target_path: str, staged: list[str]) -> list[str]:
-    """Delete 0-row staged parts — a rewrite that carries no rows can
-    stage an empty file — and return the rest: an empty data file is
-    never committed."""
-    import pyarrow.parquet as pq
-
-    live: list[str] = []
-    for rel in staged:
-        if pq.ParquetFile(os.path.join(target_path, rel)).metadata.num_rows:
-            live.append(rel)
-        else:
-            os.remove(os.path.join(target_path, rel))
-    return live
+    dv = None
+    if kill is not None:
+        affected: set[str] = set()
+        n_masked = 0
+        for rel in dv_staged:
+            t = pq.read_table(os.path.join(snap.path, rel), columns=["file"])
+            n_masked += t.num_rows
+            affected.update(t.column(0).to_pylist())
+        dv = {"add": dv_staged, "files": sorted(affected), "n": n_masked}
+    actions = {"add": added, "stats": stats, "cdc": cdc_staged, "dv": dv}
+    return counts, added + cdc_staged + dv_staged, actions
 
 
 def _matched_slice(
@@ -2613,17 +2617,19 @@ def _matched_slice(
     dv: bool = False,
 ):
     """The rows of ``snap`` matching ``condition`` — the first half of
-    every DML writer. None when the table is empty or, copy-on-write,
-    when no file matches.
+    every predicate DML writer, for both physical strategies. Returns
+    ``(remove, kill, matched, carried)``; ``([], None, None, None)``
+    when the table is empty or, copy-on-write, when no file matches.
 
-    Copy-on-write: ``(files, touched)`` — the table-relative files
-    holding a matched row (``what`` names the statement for the
-    discovery cap) and ALL their rows, which the rewrite carries or
-    replaces. Deletion vector (``dv``): ``(kill, matched)`` — the
-    ``(file, row_index)`` kill list masking the matched rows, and the
-    matched rows themselves.
+    Copy-on-write: ``remove`` lists the table-relative files holding a
+    matched row (``what`` names the statement for the discovery cap),
+    ``matched`` holds their matching rows and ``carried`` their other
+    rows — a row whose condition is NULL is carried. ``kill`` is None.
+    Deletion vector (``dv``): ``kill`` is the ``(file, row_index)``
+    kill list masking the ``matched`` rows in place; ``remove`` is
+    empty and ``carried`` None.
 
-    Either slice is materialized once (lazy localCheckpoint — the first
+    The slice is materialized once (lazy localCheckpoint — the first
     staging action computes it, the others read the blocks): the
     writer's data, change-data and kill-list writes all branch from it,
     and without the checkpoint each re-ran the predicate scan (r16;
@@ -2632,7 +2638,7 @@ def _matched_slice(
     re-match (they are already deleted), and file identity comes from
     the scan's own metadata."""
     if not snap.files:
-        return None
+        return [], None, None, None
     existing = _read_snapshot(
         spark, snap, snap.files, schema=snap.schema, keep_lineage=True
     )
@@ -2650,14 +2656,17 @@ def _matched_slice(
             .join(F.broadcast(uri_map), "file_uri")
             .select("file", "row_index")
         )
-        return kill, matched.drop(_FP_COL, _RI_COL)
+        return [], kill, matched.drop(_FP_COL, _RI_COL), None
     files = _matched_rel_files(
         existing.filter(condition).select(_FP_COL), os.path.abspath(snap.path), what
     )
     if not files:
-        return None
-    touched = _read_snapshot(spark, snap, files, schema=snap.schema)
-    return files, touched.localCheckpoint(eager=False)
+        return [], None, None, None
+    touched = _read_snapshot(spark, snap, files, schema=snap.schema).localCheckpoint(
+        eager=False
+    )
+    cond_true = F.coalesce(condition, F.lit(False))
+    return files, None, touched.filter(cond_true), touched.filter(~cond_true)
 
 
 def merge_upsert(
@@ -2665,7 +2674,6 @@ def merge_upsert(
     target_path: str,
     batch: DataFrame,
     keys: Sequence[str],
-    partition_cols: Sequence[str] | None = None,
     schema_evolution: bool = False,
     _pre_commit_hook: Callable[[], None] | None = None,
 ) -> tuple[int, int]:
@@ -2705,7 +2713,6 @@ def merge_upsert(
         target_path,
         batch,
         keys,
-        partition_cols=partition_cols,
         _pre_commit_hook=_pre_commit_hook,
         schema_evolution=schema_evolution,
     )
@@ -2718,7 +2725,6 @@ def merge_sync(
     batch: DataFrame,
     keys: Sequence[str],
     delete_condition: Column | None = None,
-    partition_cols: Sequence[str] | None = None,
     schema_evolution: bool = False,
     _pre_commit_hook: Callable[[], None] | None = None,
 ) -> tuple[int, int, int]:
@@ -2752,7 +2758,6 @@ def merge_sync(
         target_path,
         batch,
         keys,
-        partition_cols=partition_cols,
         _pre_commit_hook=_pre_commit_hook,
         nmbs_delete=delete_condition
         if delete_condition is not None
@@ -2768,7 +2773,6 @@ def merge_upsert_txn(
     keys: Sequence[str],
     app_id: str,
     txn_ver: int,
-    partition_cols: Sequence[str] | None = None,
     schema_evolution: bool = False,
     _pre_commit_hook: Callable[[], None] | None = None,
 ) -> tuple[int, int]:
@@ -2790,7 +2794,6 @@ def merge_upsert_txn(
         target_path,
         batch,
         keys,
-        partition_cols=partition_cols,
         _pre_commit_hook=_pre_commit_hook,
         txn={"app": app_id, "version": txn_ver},
         schema_evolution=schema_evolution,
@@ -2805,7 +2808,6 @@ def merge_cdc_txn(
     keys: Sequence[str],
     app_id: str,
     txn_ver: int,
-    partition_cols: Sequence[str] | None = None,
     schema_evolution: bool = False,
     _pre_commit_hook: Callable[[], None] | None = None,
 ) -> tuple[int, int, int]:
@@ -2824,22 +2826,18 @@ def merge_cdc_txn(
     (app_id, txn_ver) like :func:`merge_upsert_txn` — the caller must
     reduce the batch to ONE change per key first (newest wins).
 
-    The batch is pinned (unlike the generic engine's default): a CDC
-    batch usually arrives through the change-feed streaming source,
-    whose reads run in Python workers — see the engine's ``pin_batch``
-    note."""
+    The batch is pinned (unlike the other merges): a CDC batch usually
+    arrives through the change-feed streaming source, whose reads run
+    in Python workers — see the engine's ``apply_changes`` note."""
     return _merge_rows(
         spark,
         target_path,
         batch,
         keys,
-        partition_cols=partition_cols,
         _pre_commit_hook=_pre_commit_hook,
-        matched_delete=F.col(_CHANGE_COL) == "delete",
-        drop_from_data=[_CHANGE_COL],
         txn={"app": app_id, "version": txn_ver},
         schema_evolution=schema_evolution,
-        pin_batch=True,
+        apply_changes=True,
     )
 
 
@@ -2848,71 +2846,61 @@ def _merge_rows(
     target_path: str,
     batch: DataFrame,
     keys: Sequence[str],
-    partition_cols: Sequence[str] | None = None,
     _pre_commit_hook: Callable[[], None] | None = None,
     nmbs_delete: Column | None = None,
-    matched_delete: Column | None = None,
-    drop_from_data: Sequence[str] | None = None,
     txn: dict | None = None,
     schema_evolution: bool = False,
-    pin_batch: bool = False,
+    apply_changes: bool = False,
 ) -> tuple[int, int, int]:
     """Shared MERGE engine behind :func:`merge_upsert` /
     :func:`merge_sync` / :func:`merge_upsert_txn` /
     :func:`merge_cdc_txn`: copy-on-write file-level rewrite with typed
-    CDC. ``nmbs_delete`` adds the WHEN NOT
-    MATCHED BY SOURCE THEN DELETE clause; ``matched_delete`` marks
-    batch rows that are DELETE DIRECTIVES (WHEN MATCHED AND cond THEN
-    DELETE — the CDC-apply shape): their keys delete matching target
-    rows instead of upserting, and a directive with no match is a
-    no-op; ``drop_from_data`` removes directive/metadata columns from
-    the written rows; ``txn`` adds the (app, version) at-most-once
-    marker.
+    CDC. ``nmbs_delete`` adds the WHEN NOT MATCHED BY SOURCE THEN
+    DELETE clause; ``txn`` adds the (app, version) at-most-once marker.
 
-    ``pin_batch`` materializes the incoming batch to JVM-local blocks
-    (localCheckpoint) ONCE, before the engine's several actions over
-    it (touched-file discovery, insert/update split, data + CDC
-    staging). Without it each action re-executes the batch's plan —
-    harmless for a parquet-backed batch, but a batch backed by a
-    Python data source (the CDC change feed) then pays ~6 rounds of
-    Python-worker forks per merge, whose cost scales with process RSS:
-    the late-session inflation the round-15 micro-batch trace
-    decomposed (docs/BENCH_METHOD.md). The pin happens AFTER the
-    txn-ledger short-circuit so a replayed epoch still executes the
-    batch zero times."""
-    if pin_batch:
+    ``apply_changes`` reads the batch as a change-data batch: rows whose
+    ``_change_type`` is ``delete`` are DELETE DIRECTIVES (WHEN MATCHED
+    AND cond THEN DELETE — the CDC-apply shape): their keys delete
+    matching target rows instead of upserting, a directive with no
+    match is a no-op, and the change column is not written. The batch
+    is also materialized to JVM-local blocks (localCheckpoint) ONCE,
+    before the engine's several actions over it (touched-file
+    discovery, insert/update split, data + CDC staging). Without it
+    each action re-executes the batch's plan — harmless for a
+    parquet-backed batch, but a batch backed by a Python data source
+    (the CDC change feed) then pays ~6 rounds of Python-worker forks
+    per merge, whose cost scales with process RSS: the late-session
+    inflation the round-15 micro-batch trace decomposed
+    (docs/BENCH_METHOD.md). The pin happens AFTER the txn-ledger
+    short-circuit so a replayed epoch still executes the batch zero
+    times."""
+    key_cols = list(keys)
+    batch = batch.dropDuplicates(key_cols)
+    delete_keys = None
+    if apply_changes:
         # At-most-once fast path, hoisted ahead of the pin (the
         # per-attempt check below still guards retries): a replayed
         # (app, version) must cost O(#commits) ledger metadata, never
-        # a batch materialization. Scoped to pin_batch — without the
-        # pin there is nothing to execute before the in-loop check, so
-        # the common batch-merge path keeps its one log parse per
+        # a batch materialization. Scoped to the pinned path — without
+        # the pin there is nothing to execute before the in-loop check,
+        # so the common batch-merge path keeps its one log parse per
         # attempt (review r15: don't add parses on the hot path).
-        if txn is not None:
-            seen = last_txn_version(target_path, txn["app"])
-            if seen is not None and seen >= txn["version"]:
-                return 0, 0, 0
-        # Dedupe INSIDE the pin: the key-dedup shuffle folds into the
+        seen = last_txn_version(target_path, txn["app"])
+        if seen is not None and seen >= txn["version"]:
+            return 0, 0, 0
+        # Pin the DEDUPED batch: the key-dedup shuffle folds into the
         # one materialization instead of re-running on top of the
         # pinned blocks in every downstream action (discovery, marker
         # joins, both staging writes — optimization r16, guide §2.4),
         # and the pinned representative-per-key pick is made exactly
         # once rather than per-action.
-        batch = batch.dropDuplicates(list(keys)).localCheckpoint(eager=True)
-    else:
-        batch = batch.dropDuplicates(list(keys))
-    key_cols = list(keys)
+        batch = batch.localCheckpoint(eager=True)
+        is_directive = F.coalesce(F.col(_CHANGE_COL) == "delete", F.lit(False))
+        delete_keys = batch.filter(is_directive).select(*key_cols)
+        batch = batch.filter(~is_directive).drop(_CHANGE_COL)
     nmbs_true = (
         F.coalesce(nmbs_delete, F.lit(False)) if nmbs_delete is not None else None
     )
-    if matched_delete is not None:
-        md_true = F.coalesce(matched_delete, F.lit(False))
-        delete_keys = batch.filter(md_true).select(*key_cols)
-        batch = batch.filter(~md_true)
-    else:
-        delete_keys = None
-    if drop_from_data:
-        batch = batch.drop(*[c for c in drop_from_data if c in batch.columns])
 
     def build(snap: Snapshot):
         if txn is not None:
@@ -3072,22 +3060,14 @@ def _merge_rows(
                 dels.withColumn(_CHANGE_COL, F.lit("delete")),
                 allowMissingColumns=True,
             )
-        staged, cdc_staged, _, (inserted, updated, deleted) = _stage_dml(
-            snap, cdc, new_data, partition_cols
-        )
-        if nmbs_true is not None or delete_keys is not None:
-            # A sync that empties whole files can stage 0-row parts.
-            staged = _drop_empty(target_path, staged)
-        counts = (inserted, updated, deleted)
+        counts, staged, actions = _stage_dml(snap, cdc, new_data)
         if counts == (0, 0, 0):
-            return counts, staged + cdc_staged, None
-        return counts, staged + cdc_staged, {
-            "add": staged,
-            "n": inserted + updated,
+            return counts, staged, None
+        return counts, staged, {
+            **actions,
+            "n": counts[0] + counts[1],
             "remove": matched_files,
-            "stats": _collect_stats(target_path, staged),
             "schema": json.dumps(new_data.schema.jsonValue()),
-            "cdc": cdc_staged,
             "txn": txn,
             "op": "MERGE",
         }
@@ -3099,7 +3079,6 @@ def delete_where(
     spark: SparkSession,
     target_path: str,
     condition: Column,
-    partition_cols: Sequence[str] | None = None,
     _pre_commit_hook: Callable[[], None] | None = None,
 ) -> int:
     """Delta ``DELETE FROM target WHERE condition`` on the parquet
@@ -3116,34 +3095,43 @@ def delete_where(
     files tagging every removed row ``delete``, which
     :func:`table_changes` and the streaming source replay (Delta CDF's
     delete rows)."""
+    return _delete(spark, target_path, condition, _pre_commit_hook, dv=False)
+
+
+def _delete(
+    spark: SparkSession,
+    target_path: str,
+    condition: Column,
+    hook: Callable[[], None] | None,
+    dv: bool,
+) -> int:
+    """The one DELETE build behind :func:`delete_where` (copy-on-write)
+    and :func:`delete_where_dv` (deletion vector): both commit the same
+    typed ``delete`` change rows and return their count."""
 
     def build(snap: Snapshot):
-        matched = _matched_slice(spark, snap, condition, "DELETE")
+        remove, kill, matched, carried = _matched_slice(
+            spark, snap, condition, "DELETE", dv
+        )
         if matched is None:
             return 0, [], None
-        matched_files, touched = matched
-        staged, cdc_staged, _, (_, _, n_deleted) = _stage_dml(
-            snap,
-            touched.filter(condition).withColumn(_CHANGE_COL, F.lit("delete")),
-            # A row whose condition is NULL is not deleted: carry it.
-            touched.filter(~F.coalesce(condition, F.lit(False))),
-            partition_cols,
+        (_, _, n_deleted), staged, actions = _stage_dml(
+            snap, matched.withColumn(_CHANGE_COL, F.lit("delete")), carried, kill
         )
-        staged = _drop_empty(target_path, staged)  # whole files deleted
         if n_deleted == 0:
-            return 0, staged + cdc_staged, None
-        return n_deleted, staged + cdc_staged, {
-            "add": staged,
-            "remove": matched_files,
-            "stats": _collect_stats(target_path, staged),
-            "schema": json.dumps(touched.schema.jsonValue())
+            return 0, staged, None
+        return n_deleted, staged, {
+            **actions,
+            "remove": remove,
+            "schema": json.dumps(matched.schema.jsonValue())
             if snap.schema is None
             else None,
-            "cdc": cdc_staged,
             "op": "DELETE",
         }
 
-    return _transact(target_path, build, "delete_where", _pre_commit_hook)
+    return _transact(
+        target_path, build, "delete_where_dv" if dv else "delete_where", hook
+    )
 
 
 def overwrite_where(
@@ -3151,7 +3139,6 @@ def overwrite_where(
     target_path: str,
     batch: DataFrame,
     condition: Column,
-    partition_cols: Sequence[str] | None = None,
     _pre_commit_hook: Callable[[], None] | None = None,
 ) -> tuple[int, int]:
     """Delta's ``replaceWhere`` — predicate-scoped atomic overwrite:
@@ -3188,33 +3175,25 @@ def overwrite_where(
         b = _apply_generated(batch, snap)
         _check_type_conflicts(b, snap)
         _enforce_constraints(b, snap)
-        matched_files, touched = _matched_slice(
+        remove, _, matched, carried = _matched_slice(
             spark, snap, condition, "overwrite_where"
-        ) or ([], None)
-        new_data = b
+        )
+        data = b
         cdc = b.withColumn(_CHANGE_COL, F.lit("insert"))
-        if touched is not None:
-            cond_true = F.coalesce(condition, F.lit(False))
-            new_data = new_data.unionByName(
-                touched.filter(~cond_true), allowMissingColumns=True
-            )
+        if matched is not None:
+            data = data.unionByName(carried, allowMissingColumns=True)
             cdc = cdc.unionByName(
-                touched.filter(cond_true).withColumn(_CHANGE_COL, F.lit("delete")),
+                matched.withColumn(_CHANGE_COL, F.lit("delete")),
                 allowMissingColumns=True,
             )
-        staged, cdc_staged, _, (inserted, _, deleted) = _stage_dml(
-            snap, cdc, new_data, partition_cols
-        )
-        staged = _drop_empty(target_path, staged)
+        (inserted, _, deleted), staged, actions = _stage_dml(snap, cdc, data)
         if inserted == 0 and deleted == 0:
-            return (0, 0), staged + cdc_staged, None
-        return (inserted, deleted), staged + cdc_staged, {
-            "add": staged,
+            return (0, 0), staged, None
+        return (inserted, deleted), staged, {
+            **actions,
             "n": inserted,
-            "remove": matched_files,
-            "stats": _collect_stats(target_path, staged),
-            "schema": json.dumps(new_data.schema.jsonValue()),
-            "cdc": cdc_staged,
+            "remove": remove,
+            "schema": json.dumps(data.schema.jsonValue()),
             "op": "REPLACE WHERE",
         }
 
@@ -3250,7 +3229,6 @@ def update_where(
     target_path: str,
     set_exprs: dict[str, Column],
     condition: Column,
-    partition_cols: Sequence[str] | None = None,
     _pre_commit_hook: Callable[[], None] | None = None,
 ) -> int:
     """Delta ``UPDATE target SET col = expr, ... WHERE condition`` —
@@ -3266,34 +3244,7 @@ def update_where(
     only the files whose stats admit it; see :func:`update_where_dv`
     for the merge-on-read variant that avoids rewriting unmatched
     neighbors entirely."""
-    cond_true = F.coalesce(condition, F.lit(False))
-
-    def build(snap: Snapshot):
-        matched = _matched_slice(spark, snap, condition, "UPDATE")
-        if matched is None:
-            return 0, [], None
-        matched_files, touched = matched
-        updated, cdc = _updated_frame(touched.filter(cond_true), set_exprs, snap)
-        new_data = updated.unionByName(
-            touched.filter(~cond_true), allowMissingColumns=True
-        )
-        staged, cdc_staged, _, (_, n_updated, _) = _stage_dml(
-            snap, cdc, new_data, partition_cols
-        )
-        staged = _drop_empty(target_path, staged)
-        if n_updated == 0:
-            return 0, staged + cdc_staged, None
-        return n_updated, staged + cdc_staged, {
-            "add": staged,
-            "n": n_updated,
-            "remove": matched_files,
-            "stats": _collect_stats(target_path, staged),
-            "schema": json.dumps(new_data.schema.jsonValue()),
-            "cdc": cdc_staged,
-            "op": "UPDATE",
-        }
-
-    return _transact(target_path, build, "update_where", _pre_commit_hook)
+    return _update(spark, target_path, set_exprs, condition, _pre_commit_hook, dv=False)
 
 
 def update_where_dv(
@@ -3301,7 +3252,6 @@ def update_where_dv(
     target_path: str,
     set_exprs: dict[str, Column],
     condition: Column,
-    partition_cols: Sequence[str] | None = None,
     _pre_commit_hook: Callable[[], None] | None = None,
 ) -> int:
     """Merge-on-read ``UPDATE ... WHERE`` — ONE commit that (a) masks
@@ -3315,31 +3265,46 @@ def update_where_dv(
     compaction folds them together. TYPED CDC: update_preimage +
     update_postimage, indistinguishable from the copy-on-write
     variant (the CDF contract)."""
+    return _update(spark, target_path, set_exprs, condition, _pre_commit_hook, dv=True)
+
+
+def _update(
+    spark: SparkSession,
+    target_path: str,
+    set_exprs: dict[str, Column],
+    condition: Column,
+    hook: Callable[[], None] | None,
+    dv: bool,
+) -> int:
+    """The one UPDATE build behind :func:`update_where` (copy-on-write:
+    post-images and carried rows replace the touched files) and
+    :func:`update_where_dv` (deletion vector: the pre-images are masked
+    and the post-images added) — the same typed change rows either
+    way."""
 
     def build(snap: Snapshot):
-        matched = _matched_slice(spark, snap, condition, "UPDATE", dv=True)
+        remove, kill, matched, carried = _matched_slice(
+            spark, snap, condition, "UPDATE", dv
+        )
         if matched is None:
             return 0, [], None
-        kill, changed = matched
-        updated, cdc = _updated_frame(changed, set_exprs, snap)
-        staged, cdc_staged, dv, (_, n_updated, _) = _stage_dml(
-            snap, cdc, updated, partition_cols, kill
-        )
-        staged = _drop_empty(target_path, staged)
-        files = staged + cdc_staged + dv["add"]
+        data, cdc = _updated_frame(matched, set_exprs, snap)
+        if carried is not None:
+            data = data.unionByName(carried, allowMissingColumns=True)
+        (_, n_updated, _), staged, actions = _stage_dml(snap, cdc, data, kill)
         if n_updated == 0:
-            return 0, files, None
-        return n_updated, files, {
-            "add": staged,
+            return 0, staged, None
+        return n_updated, staged, {
+            **actions,
             "n": n_updated,
-            "stats": _collect_stats(target_path, staged),
-            "schema": json.dumps(updated.schema.jsonValue()),
-            "dv": dv,
-            "cdc": cdc_staged,
+            "remove": remove,
+            "schema": json.dumps(data.schema.jsonValue()),
             "op": "UPDATE",
         }
 
-    return _transact(target_path, build, "update_where_dv", _pre_commit_hook)
+    return _transact(
+        target_path, build, "update_where_dv" if dv else "update_where", hook
+    )
 
 
 def delete_where_dv(
@@ -3376,22 +3341,7 @@ def delete_where_dv(
     consumers cannot tell the physical strategies apart (the CDF
     contract). A delete that loses its commit race to a compaction
     re-targets the compaction's new files."""
-
-    def build(snap: Snapshot):
-        matched = _matched_slice(spark, snap, condition, "DELETE", dv=True)
-        if matched is None:
-            return 0, [], None  # empty table
-        kill, rows = matched
-        _, cdc_staged, dv, _ = _stage_dml(
-            snap, rows.withColumn(_CHANGE_COL, F.lit("delete")), kill=kill
-        )
-        if dv["n"] == 0:
-            return 0, cdc_staged + dv["add"], None
-        return dv["n"], cdc_staged + dv["add"], {
-            "dv": dv, "cdc": cdc_staged, "op": "DELETE",
-        }
-
-    return _transact(target_path, build, "delete_where_dv", _pre_commit_hook)
+    return _delete(spark, target_path, condition, _pre_commit_hook, dv=True)
 
 
 _MAX_FILE_LIST = 1_000_000

@@ -31,7 +31,6 @@ def read_landing(
     spark: SparkSession,
     path: str,
     kind_or_schema: str | T.StructType,
-    fmt: str = "parquet",
     with_arrival_id: bool = True,
 ) -> DataFrame:
     """Read a landing-zone drop with its declared raw schema.
@@ -43,8 +42,7 @@ def read_landing(
     arrival semantics a landing zone has.
     """
     schema = _RAW_SCHEMAS[kind_or_schema] if isinstance(kind_or_schema, str) else kind_or_schema
-    reader = spark.read.schema(schema)
-    df = reader.json(path) if fmt == "json" else reader.parquet(path)
+    df = spark.read.schema(schema).parquet(path)
     if with_arrival_id:
         df = df.withColumn("_arrival_id", F.monotonically_increasing_id())
     return df

@@ -23,7 +23,6 @@ executor state.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -125,9 +124,6 @@ def start_txn_append_stream(
     target_path: str,
     app_id: str,
     checkpoint: str,
-    partition_cols: Sequence[str] | None = None,
-    available_now: bool = True,
-    processing_time: str | None = None,
 ) -> StreamingQuery:
     """EXACTLY-ONCE streaming sink into the parquet txlog — the Delta
     ``writeStream.format("delta")`` contract: each micro-batch commits
@@ -147,29 +143,20 @@ def start_txn_append_stream(
     Blind append per batch — no target read, O(micro-batch) cost
     regardless of table size; the scalable continuous-ingest shape for
     a 100 TB table (contrast :func:`start_merge_stream`, which pays a
-    key anti-join per batch for cross-source dedup)."""
+    key anti-join per batch for cross-source dedup). Runs under
+    ``Trigger.AvailableNow``: drains the backlog, then stops."""
     from stonkwhisperer_spark.sinks.writers import append_txn
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        append_txn(
-            batch_df.sparkSession,
-            target_path,
-            batch_df,
-            app_id,
-            epoch_id,
-            partition_cols=partition_cols,
-        )
+        append_txn(batch_df.sparkSession, target_path, batch_df, app_id, epoch_id)
 
-    writer = (
+    return (
         stream_df.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_txn_merge_ingest(
@@ -180,19 +167,17 @@ def run_txn_merge_ingest(
     keys: Sequence[str],
     app_id: str,
     checkpoint_root: str,
-    max_files_per_trigger: int = 1,
-    shuffle_width: int = 8,
-    timeout_sec: float = 300.0,
 ) -> tuple[int, int]:
     """Exactly-once streaming MERGE ingest, drained and then PROVEN
     replay-safe — the shared engine of the r13 index-maintenance
     streaming arm (bm25_index_stream_upsert / minhash_index_stream_
     upsert):
 
-    1. a rate-limited file-source stream over ``landing`` drains under
-       ``Trigger.AvailableNow`` into ``target_path`` via per-micro-batch
-       :func:`sinks.writers.merge_upsert_txn` keyed (``app_id``, epoch)
-       — Delta's ``foreachBatch + txnVersion`` pattern;
+    1. a file-source stream over ``landing``, one file per trigger,
+       drains under ``Trigger.AvailableNow`` into ``target_path`` via
+       per-micro-batch :func:`sinks.writers.merge_upsert_txn` keyed
+       (``app_id``, epoch) — Delta's ``foreachBatch + txnVersion``
+       pattern;
     2. the drain is asserted to have split across >=2 micro-batches
        (genuinely a stream, not a single batch in disguise) with both
        MERGE arms non-empty cumulatively;
@@ -206,10 +191,11 @@ def run_txn_merge_ingest(
 
     Returns the first drain's cumulative (inserted, updated).
 
-    Per-micro-batch MERGE shuffles run at ``shuffle_width`` (the
+    Per-micro-batch MERGE shuffles run at 8 partitions (the
     ``_stream_shuffle_width`` harness-scale discipline: session width
     over a few-MB batch is pure scheduling overhead; production sizes
-    this to the cluster), restored after each drain.
+    this to the cluster), restored after each drain; each drain must
+    finish within 300 s.
 
     Scale: per poll interval this is the batch path's O(batch) keyed
     copy-on-write MERGE; checkpoint + ledger give exactly-once table
@@ -232,13 +218,10 @@ def run_txn_merge_ingest(
 
     def drain(ckpt: str) -> None:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width))
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
             q = (
-                read_landing_stream(
-                    spark, landing, schema,
-                    max_files_per_trigger=max_files_per_trigger,
-                )
+                read_landing_stream(spark, landing, schema, max_files_per_trigger=1)
                 .writeStream.foreachBatch(sink)
                 .option("checkpointLocation", ckpt)
                 .outputMode("update")
@@ -246,13 +229,11 @@ def run_txn_merge_ingest(
                 .start()
             )
             try:
-                if not q.awaitTermination(timeout_sec):
+                if not q.awaitTermination(300):
                     raise TimeoutError(
-                        f"ingest stream over {landing} did not drain "
-                        f"within {timeout_sec}s"
+                        f"ingest stream over {landing} did not drain within 300s"
                     )
             finally:
-                trace_progress(q, landing)
                 q.stop()
             exc = q.exception()
             if exc is not None:
@@ -296,8 +277,6 @@ def start_cdc_apply_stream(
     keys: Sequence[str],
     app_id: str,
     checkpoint: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
 ) -> StreamingQuery:
     """Stream one txlog table's change-data feed INTO another — the
     canonical CDF consumer (Delta's "replicate a table with
@@ -321,7 +300,8 @@ def start_cdc_apply_stream(
     Scale: the feed is O(changed rows) per poll (never a source table
     scan), the reduction is one bounded shuffle on the merge keys, and
     the merge rewrites only the target files owning matched keys —
-    end-to-end O(delta) replication for a 100 TB source."""
+    end-to-end O(delta) replication for a 100 TB source. Runs under
+    ``Trigger.AvailableNow``: drains the feed, then stops."""
     from pyspark.sql.window import Window
 
     from stonkwhisperer_spark.sinks.writers import merge_cdc_txn
@@ -347,10 +327,10 @@ def start_cdc_apply_stream(
             .drop("_rn", "_commit_version")
         )
         # merge_cdc_txn pins the reduced batch to JVM-local blocks
-        # (pin_batch) AFTER its txn-ledger short-circuit, so a real
-        # apply executes the Python-data-source feed exactly once and
-        # a replayed epoch executes it zero times — see the engine's
-        # pin_batch note and docs/BENCH_METHOD.md round 15.
+        # AFTER its txn-ledger short-circuit, so a real apply executes
+        # the Python-data-source feed exactly once and a replayed
+        # epoch executes it zero times — see the merge engine's
+        # apply_changes note and docs/BENCH_METHOD.md round 15.
         merge_cdc_txn(
             batch_df.sparkSession,
             target_path,
@@ -365,16 +345,13 @@ def start_cdc_apply_stream(
         .option("path", source_path)
         .load()
     )
-    writer = (
+    return (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def join_streams_time_bounded(
@@ -467,44 +444,6 @@ def parse_offset(eo) -> dict | None:
     return off if isinstance(off, dict) else None
 
 
-def trace_progress(query: StreamingQuery, label: str) -> None:
-    """Opt-in micro-batch forensics (``STONKW_STREAM_TRACE=<file>``):
-    append one JSON line per drained stream with every micro-batch's
-    batchId, input rows, and the full ``durationMs`` breakdown
-    (addBatch / getBatch / latestOffset / queryPlanning /
-    triggerExecution / walCommit). Default off — zero cost in normal
-    runs. Exists so a flagged bench number can be decomposed at the
-    mechanism level (per-batch cost × batch count) instead of argued
-    about at the suite level; see docs/BENCH_METHOD.md."""
-    path = os.environ.get("STONKW_STREAM_TRACE")
-    if not path:
-        return
-    import json as _json
-    import time as _time
-
-    recs = []
-    for p in query.recentProgress or []:
-        if not isinstance(p, dict):
-            continue
-        recs.append(
-            {
-                "batchId": p.get("batchId"),
-                "numInputRows": p.get("numInputRows"),
-                "durationMs": p.get("durationMs"),
-            }
-        )
-    try:
-        with open(path, "a") as f:
-            f.write(
-                _json.dumps(
-                    {"label": label, "t": _time.time(), "batches": recs}
-                )
-                + "\n"
-            )
-    except OSError:  # noqa: PERF203 — tracing must never sink the drain
-        pass
-
-
 def run_available_now(
     query: StreamingQuery,
     table_path: str,
@@ -524,20 +463,15 @@ def run_available_now(
     from stonkwhisperer_spark.sinks.writers import _committed_version
 
     head = _committed_version(table_path)
-    try:
-        if not query.awaitTermination(timeout_sec):
-            query.stop()
-            raise TimeoutError(
-                f"availableNow stream over {table_path} still running "
-                f"after {timeout_sec}s"
-            )
-        exc = query.exception()
-        if exc is not None:
-            raise exc
-    finally:
-        # In finally: the forensics hook must record the timed-out and
-        # failed drains too — those are the ones worth decomposing.
-        trace_progress(query, table_path)
+    if not query.awaitTermination(timeout_sec):
+        query.stop()
+        raise TimeoutError(
+            f"availableNow stream over {table_path} still running "
+            f"after {timeout_sec}s"
+        )
+    exc = query.exception()
+    if exc is not None:
+        raise exc
     reached = -1
     p = query.lastProgress
     if p and p.get("sources"):
@@ -605,5 +539,4 @@ def drain_until_caught_up(
             f"{table_path} within {timeout_sec}s (reached {reached})"
         )
     finally:
-        trace_progress(query, table_path)
         query.stop()

@@ -1163,6 +1163,7 @@ def test_vacuum_retention_window(spark, tmp_path):
         committed_files,
         merge_upsert,
         read_committed,
+        read_committed_point,
         read_committed_pruned,
         restore,
         table_changes,
@@ -1197,6 +1198,8 @@ def test_vacuum_retention_window(spark, tmp_path):
         read_committed(spark, target, version=1)
     with pytest.raises(ValueError, match="retention horizon"):
         read_committed_pruned(spark, target, "id", 0, 2, version=1)
+    with pytest.raises(ValueError, match="retention horizon"):
+        read_committed_point(spark, target, "id", 0, version=1)
     with pytest.raises(ValueError, match="retention horizon"):
         table_changes(spark, target, from_version=1)
     with pytest.raises(ValueError, match="retention horizon"):
@@ -2316,7 +2319,6 @@ def test_partial_bloom_index_still_indexes_missing_files(spark, tmp_path):
     every added file absent from the provided map."""
     from stonkwhisperer_spark.sinks.writers import (
         Snapshot,
-        _staged_row_count,
         _stage_files,
         _try_commit,
         merge_append,
@@ -2332,7 +2334,7 @@ def test_partial_bloom_index_still_indexes_missing_files(spark, tmp_path):
     # size_output=False: this test NEEDS a two-file staging (a partial
     # bloom map covering one of two added files); the default rebalance
     # would fuse the tiny batch into one part.
-    staged = _stage_files(batch, snap, None, size_output=False)
+    staged, n, _ = _stage_files(batch, snap, None, size_output=False)
     assert len(staged) == 2
     pre = snap.blooms  # source map covering only older files
     partial = {staged[0]: {"k": {"fake": True}}}  # one of the two new
@@ -2341,7 +2343,7 @@ def test_partial_bloom_index_still_indexes_missing_files(spark, tmp_path):
         snap.version + 1,
         {
             "add": staged,
-            "n": _staged_row_count(target, staged),
+            "n": n,
             "bloom": partial,
             "op": "WRITE",
         },

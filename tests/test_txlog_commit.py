@@ -212,3 +212,85 @@ def test_delete_keeps_rows_whose_condition_is_null(spark, tmp_path, writer):
     assert getattr(wr, writer)(spark, target, F.col("v") > 3) == 1
     got = {r.k: r.v for r in wr.read_committed(spark, target).collect()}
     assert got == {1: None, 3: 1}
+
+
+# ---------------------------------------------------------------------------
+# One staging step: no empty data file is committed, and a rewrite keeps
+# the table's partition layout.
+# ---------------------------------------------------------------------------
+def test_empty_append_txn_commits_only_its_marker(spark, tmp_path):
+    """An empty transactional append records its txn marker and adds no
+    data file; its replay is a no-op."""
+    target = str(tmp_path / "t")
+    assert wr.append_txn(spark, target, _rows(spark, 0, 0), "app", 0) == 0
+    (c,) = wr._commits(target)
+    assert c["add"] == [] and c["txn"] == {"app": "app", "version": 0}
+    assert wr.append_txn(spark, target, _rows(spark, 0, 0), "app", 0) == 0
+    assert wr._committed_version(target) == 1
+
+
+def test_compact_of_fully_masked_table_leaves_no_file(spark, tmp_path):
+    """Compacting a table whose rows are all masked by deletion vectors
+    removes its files and adds none."""
+    target = str(tmp_path / "t")
+    wr.merge_append(spark, target, _rows(spark, 0, 3).coalesce(1), ["k"])
+    wr.merge_append(spark, target, _rows(spark, 3, 6).coalesce(1), ["k"])
+    assert wr.delete_where_dv(spark, target, F.col("k") >= 0) == 6
+    assert wr.compact(spark, target) == 2
+    assert wr.committed_files(target) == []
+    assert wr.read_committed(spark, target) is None
+
+
+def _grp_rows(spark, ks, v=None):
+    df = spark.createDataFrame([(k,) for k in ks], "k long")
+    return df.select(
+        "k",
+        (F.col("k") if v is None else F.lit(v).cast("long")).alias("v"),
+        (F.col("k") % 2).alias("grp"),
+    )
+
+
+LAYOUT_WRITERS = {
+    "delete_where": (
+        lambda s, t: wr.delete_where(s, t, F.col("k") == 0),
+        {0: None},
+    ),
+    "update_where": (
+        lambda s, t: wr.update_where(s, t, {"v": F.col("v") + 100}, F.col("k") == 2),
+        {2: 102},
+    ),
+    "overwrite_where": (
+        lambda s, t: wr.overwrite_where(s, t, _grp_rows(s, [4], 44), F.col("k") == 4),
+        {4: 44},
+    ),
+    "merge_upsert": (
+        lambda s, t: wr.merge_upsert(
+            s, t, _grp_rows(s, [5], 55).unionByName(_grp_rows(s, [6])), ["k"]
+        ),
+        {5: 55, 6: 6},
+    ),
+    "compact": (lambda s, t: wr.compact(s, t), {}),
+}
+
+
+@pytest.mark.parametrize("name", sorted(LAYOUT_WRITERS))
+def test_rewrite_keeps_partition_layout(spark, tmp_path, name):
+    """On a table partitioned by ``grp``, every writer stages under
+    ``grp=<v>/`` and each file holds only its partition's rows."""
+    import pyarrow.parquet as pq
+
+    target = str(tmp_path / "t")
+    for ks in ([0, 1, 2], [3, 4, 5]):
+        wr.merge_append(spark, target, _grp_rows(spark, ks), ["k"], partition_cols=["grp"])
+    write, changes = LAYOUT_WRITERS[name]
+    write(spark, target)
+    want = {k: k for k in range(6)}
+    want.update(changes)
+    want = {k: (v, k % 2) for k, v in want.items() if v is not None}
+    got = {r.k: (r.v, r.grp) for r in wr.read_committed(spark, target).collect()}
+    assert got == want
+    for f in wr.committed_files(target):
+        part, _ = f.split("/")
+        key, value = part.split("=")
+        ks = pq.read_table(os.path.join(target, f), columns=["k"]).column(0).to_pylist()
+        assert key == "grp" and ks and all(k % 2 == int(value) for k in ks), f
