@@ -66,7 +66,7 @@ def main() -> None:
         "_stage_dml",
         "_try_commit",
         "_read_snapshot",
-        "_cdc_counts",
+        "_value_counts",
     ):
         _wrap(wr, name)
 

@@ -69,7 +69,7 @@ def main() -> None:
         "_matched_rel_files",
         "_commits",
         "_read_snapshot",
-        "_cdc_counts",
+        "_value_counts",
         "_try_commit",
         "last_txn_version",
     ):

@@ -2633,10 +2633,14 @@ def q_txlog_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: every step is O(1) driver-side log I/O plus the data writes
     themselves; nothing here scans the table beyond the committed file
     list."""
+    import os
     import shutil
+    import time
 
     from stonkwhisperer_spark.sinks.writers import (
+        _STALE_S,
         _committed_version,
+        _table_files,
         committed_files,
         compact,
         merge_append,
@@ -2686,6 +2690,11 @@ def q_txlog_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(f"CDC replayed {cdc_rows} rows, expected 60")
         if read_committed(spark, target, version=v1).count() != n1:
             raise AssertionError("time travel to v1 drifted")
+        # Age every file past the sweep's in-flight bound, so a staged
+        # part a writer leaked would be swept and counted too.
+        stale = time.time() - 2 * _STALE_S
+        for rel in _table_files(target):
+            os.utime(os.path.join(target, rel), (stale, stale))
         vacuumed = len(vacuum_orphans(target))
         if vacuumed != replaced:
             raise AssertionError("vacuum reclaimed wrong file set")

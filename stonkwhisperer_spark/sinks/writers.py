@@ -53,8 +53,21 @@ log (the same protocol Delta's transaction log uses):
 
 Crash between stage and commit can orphan data files that plain
 readers would see (exactly Delta's un-vacuumed-file situation);
-``read_committed`` gives the strict committed-only view, and
-``vacuum_orphans`` removes unreferenced files.
+``read_committed`` gives the strict committed-only view. Which files
+the log still needs follows one reference rule: a commit references
+its added data files, its change-data files and the kill lists its
+deletion-vector entry adds or resets to (:func:`_refs`); a retention
+window keeps what is live at its cutoff plus everything a later commit
+references (:meth:`Snapshot.retained`). ``vacuum`` reclaims the
+referenced files the window no longer keeps, and ``restore`` and
+``clone_table`` refuse a version whose files are gone. ``vacuum_orphans``
+keeps the live data files and every committed change-data and
+kill-list file; it reclaims a removed data file at once, but a file no
+commit references only once it is older than ``_STALE_S`` (an hour),
+so it never deletes the new part an in-flight writer has staged. A
+``restore`` or ``clone_table`` of an older version is not covered: the
+files it re-adds or links are ones a commit removed, which the sweep
+reclaims at once, whatever their age.
 
 Scale: the anti-join shuffles on the high-cardinality natural key; the
 target side is pruned to key columns only, so the "read the whole
@@ -69,6 +82,7 @@ import os
 import shutil
 import time
 import uuid
+from collections import Counter
 from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from functools import cached_property
@@ -112,19 +126,30 @@ _RI_COL = "__sw_row_index"
 _MARK_M = "__sw_mark_matched"
 _MARK_MB = "__sw_mark_in_batch"
 _MARK_MD = "__sw_mark_del"
+# Seconds after which a file that no commit references is a dead
+# writer's leftover, not an in-flight stage or publish: the sweeps
+# (vacuum_log's manifest temps, vacuum_orphans' parts) spare it until
+# then.
+_STALE_S = 3600
 
 
 def _txlog_path(target_path: str) -> str:
     return os.path.join(target_path, _TXLOG_DIR)
 
 
-def _data_files(target_path: str) -> list[str]:
-    """Relative paths of all parquet data files under the table root,
-    skipping underscore/dot-hidden entries (the same rule Spark's file
-    index applies) — one os.walk, no Spark job."""
+def _table_files(target_path: str) -> list[str]:
+    """Relative paths of every parquet file the log could reference:
+    the data files under the table root, skipping underscore/dot-hidden
+    entries (the same rule Spark's file index applies), plus the
+    change-data and deletion-vector files — one os.walk, no Spark job."""
     out: list[str] = []
     for dirpath, dirnames, filenames in os.walk(target_path):
-        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        dirnames[:] = [
+            d
+            for d in dirnames
+            if not d.startswith(("_", "."))
+            or (dirpath == target_path and d in (_CDC_DIR, _DV_DIR))
+        ]
         for fn in filenames:
             if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
                 out.append(os.path.relpath(os.path.join(dirpath, fn), target_path))
@@ -281,7 +306,7 @@ def vacuum_log(target_path: str) -> list[str]:
             # keep its temp until its link or rename (and may unlink it
             # under us).
             with contextlib.suppress(FileNotFoundError):
-                if time.time() - os.path.getmtime(path) > 3600:
+                if time.time() - os.path.getmtime(path) > _STALE_S:
                     os.remove(path)
                     removed.append(fn)
         elif not ckpt_version:
@@ -295,6 +320,16 @@ def vacuum_log(target_path: str) -> list[str]:
                 os.remove(path)
                 removed.append(fn)
     return sorted(removed)
+
+
+def _refs(c: dict) -> list[str]:
+    """Every file commit ``c`` references: its added data files, its
+    change-data files, and the kill lists its deletion-vector entry adds
+    or (RESTORE, CLONE) resets to. The vacuums keep or reclaim table
+    files by this rule alone."""
+    d = c.get("dv") or {}
+    reset = [r for refs in d.get("reset", {}).values() for r in refs]
+    return [*c["add"], *c.get("cdc", []), *d.get("add", []), *reset]
 
 
 class Snapshot:
@@ -340,6 +375,36 @@ class Snapshot:
                 "reclaimed"
             )
 
+    def check_present(self, rels: Sequence[str], what: str) -> None:
+        """Refuse ``what`` when any of the table-relative files ``rels``
+        is gone from disk — reclaimed by a vacuum that recorded no
+        horizon below it (``vacuum_orphans``)."""
+        missing = [r for r in rels if not os.path.exists(os.path.join(self.path, r))]
+        if missing:
+            raise FileNotFoundError(
+                f"{what} needs vacuumed file(s) {missing[:3]}… at {self.path} "
+                "— target version is beyond the retention window"
+            )
+
+    def kill_lists(self, files: Sequence[str]) -> list[str]:
+        """The deletion-vector files that mask rows of the given live
+        files, in first-seen order."""
+        fset = set(files)
+        return list(
+            dict.fromkeys(d for f, dvs in self.dv.items() if f in fset for d in dvs)
+        )
+
+    def retained(self, cutoff: int) -> set[str]:
+        """The files a retention window from version ``cutoff`` keeps:
+        the data files and kill lists live at ``cutoff``, plus every file
+        a later commit references (:func:`_refs`)."""
+        at = self.as_of(cutoff)
+        keep = {*at.files, *at.kill_lists(at.files)}
+        for c in self.commits:
+            if c["version"] > cutoff:
+                keep.update(_refs(c))
+        return keep
+
     def changes(self, after: int) -> list[tuple[dict, bool, list[str]]]:
         """The change feed's files, per commit after version ``after``,
         as ``(commit, is_cdc, files)``. A commit that wrote typed
@@ -384,9 +449,10 @@ class Snapshot:
     @cached_property
     def sizes(self) -> dict[str, int]:
         """File sizes recorded at write time (since r16): {rel_path:
-        bytes} for the live files. Files from older commits are absent —
-        callers treat unknown as large (the safe direction for
-        cost-of-recompute decisions)."""
+        bytes} for the live files and for every committed change-data
+        file. Files from older commits are absent — callers treat
+        unknown as large (the safe direction for cost-of-recompute
+        decisions)."""
         return self._per_file("sizes")
 
     @cached_property
@@ -761,15 +827,8 @@ def _read_snapshot(
     callers that need per-row file identity (touched-file discovery in
     the merge writers)."""
     target_path = snap.path
-    fset = set(files)
-    dv_files: list[str] = []
-    targeted: set[str] = set()
-    for f, dvs in snap.dv.items():
-        if f in fset and dvs:
-            targeted.add(f)
-            for d in dvs:
-                if d not in dv_files:
-                    dv_files.append(d)
+    targeted = sorted(f for f in files if snap.dv.get(f))
+    dv_files = snap.kill_lists(targeted)
     need_lineage = keep_lineage or bool(targeted)
     dropped = snap.dropped
     if schema is not None and dropped:
@@ -784,7 +843,7 @@ def _read_snapshot(
     df = _read_files(spark, target_path, files, schema=schema, lineage=need_lineage)
     if targeted:
         uri_map = spark.createDataFrame(
-            [(f, _file_uri(target_path, f)) for f in sorted(targeted)],
+            [(f, _file_uri(target_path, f)) for f in targeted],
             "file string, file_uri string",
         )
         kill = (
@@ -879,22 +938,16 @@ def table_detail(target_path: str) -> dict:
         except FileNotFoundError:
             pass
     # Exact masked-row count: live kill-list entries targeting live
-    # files (pyarrow single-column reads, bounded by accumulated
-    # deletes; rewritten files' stale entries don't count).
-    n_masked = 0
-    live_files = set(files)
-    import pyarrow.parquet as pq
-
-    dv_files = {d for dvs in snap.dv.values() for d in dvs}
-    for d in dv_files:
-        t = pq.read_table(os.path.join(target_path, d), columns=["file"])
-        n_masked += sum(1 for v in t.column(0).to_pylist() if v in live_files)
+    # files (bounded by accumulated deletes; rewritten files' stale
+    # entries don't count).
+    dv_files = snap.kill_lists(files)
+    masked = _value_counts(target_path, dv_files, "file")
     return {
         "version": snap.version,
         "num_files": len(files),
         "size_bytes": size,
         "num_dv_files": len(dv_files),
-        "num_dv_masked_rows": n_masked,
+        "num_dv_masked_rows": sum(masked[f] for f in files),
         "constraints": snap.constraints,
         "generated_columns": snap.generated,
         "bloom_columns": snap.bloom_cols,
@@ -1912,47 +1965,36 @@ def compact(
 
 
 def vacuum_orphans(target_path: str) -> list[str]:
-    """Delete every data file the live snapshot does not list: a
-    crashed writer's staged leftovers, files placed in the directory
-    outside the log, and files a commit removed — Delta's VACUUM with
-    zero retention. No vacuum horizon is recorded, so time travel to a
-    version whose removed files were reclaimed fails at the scan
-    instead of with the retention error (:func:`vacuum` records one).
-    Change-data files not referenced by any commit's ``cdc`` entry (a
-    crashed upsert's staged leftovers) are reclaimed the same way;
-    committed change files are kept — they are the feed's history."""
+    """Delete the table files (:func:`_table_files`) the head no longer
+    needs — Delta's VACUUM with zero retention. It keeps the live data
+    files and every committed change-data and kill-list file (the feed's
+    history and the row views of older snapshots). A data file a commit
+    removed is reclaimed at once. A file no commit references — a
+    crashed writer's staged part, a file placed in the directory outside
+    the log — is reclaimed once it is older than :data:`_STALE_S`, so
+    the sweep is safe beside any writer that stages new files and
+    publishes them within that bound. It is not safe beside a
+    ``restore`` or ``clone_table`` of an older version: the removed
+    files they re-add or link are reclaimed at once, so a sweep between
+    their presence check and their publish or link leaves them a
+    missing file. No vacuum horizon is recorded, so time travel to
+    a version whose removed files were reclaimed fails at the scan
+    instead of with the retention error (:func:`vacuum` records one)."""
     snap = Snapshot(target_path)
-    referenced = set(snap.files)
+    keep, referenced = set(snap.files), set()
+    for c in snap.commits:
+        refs = _refs(c)
+        referenced.update(refs)
+        keep.update(set(refs) - set(c["add"]))  # change data, kill lists
     removed = []
-    for rel in _data_files(target_path):
-        if rel not in referenced:
-            os.remove(os.path.join(target_path, rel))
-            removed.append(rel)
-    cdc_dir = os.path.join(target_path, _CDC_DIR)
-    if os.path.isdir(cdc_dir):
-        cdc_referenced: set[str] = set()
-        for c in snap.commits:
-            cdc_referenced.update(c.get("cdc", []))
-        for fn in os.listdir(cdc_dir):
-            rel = os.path.join(_CDC_DIR, fn)
-            if fn.endswith(".parquet") and rel not in cdc_referenced:
-                os.remove(os.path.join(cdc_dir, fn))
-                removed.append(rel)
-    dv_dir = os.path.join(target_path, _DV_DIR)
-    if os.path.isdir(dv_dir):
-        # Same rule for deletion-vector files: a crashed delete's staged
-        # kill list is unreferenced and reclaimed; committed DV files are
-        # part of some snapshot's row view and stay.
-        dv_referenced: set[str] = set()
-        for c in snap.commits:
-            d = c.get("dv") or {}
-            dv_referenced.update(d.get("add", []))
-            for refs in d.get("reset", {}).values():
-                dv_referenced.update(refs)
-        for fn in os.listdir(dv_dir):
-            rel = os.path.join(_DV_DIR, fn)
-            if fn.endswith(".parquet") and rel not in dv_referenced:
-                os.remove(os.path.join(dv_dir, fn))
+    for rel in _table_files(target_path):
+        if rel in keep:
+            continue
+        path = os.path.join(target_path, rel)
+        # FileNotFoundError: a writer that lost its race removed its stage.
+        with contextlib.suppress(FileNotFoundError):
+            if rel in referenced or time.time() - os.path.getmtime(path) > _STALE_S:
+                os.remove(path)
                 removed.append(rel)
     return removed
 
@@ -1965,11 +2007,13 @@ def vacuum(
     unsafe_zero_retention: bool = False,
 ) -> list[str]:
     """Retention-window VACUUM (Delta's ``VACUUM t RETAIN n HOURS``,
-    version- or time-based): physically reclaim data files that no
-    snapshot in the retention window [head-``retain_versions``, head]
-    (or, with ``retain_ms``, every snapshot younger than that age)
-    can reference, plus the change-data files of commits at or below
-    the cutoff. Returns the reclaimed relative paths.
+    version- or time-based): physically reclaim every file a commit
+    references (:func:`_refs`) that the retention window
+    [head-``retain_versions``, head] (or, with ``retain_ms``, every
+    snapshot younger than that age) no longer needs
+    (:meth:`Snapshot.retained`): replaced data files, their kill lists
+    and the change-data files of commits at or below the cutoff.
+    Returns the reclaimed relative paths.
 
     The retention window is EXPLICIT: exactly one of
     ``retain_versions`` / ``retain_ms`` must be passed, and a
@@ -1987,11 +2031,11 @@ def vacuum(
     missing files (the failure Delta surfaces as a FileNotFound deep
     inside a job).
 
-    Only files that commit history itself removed are candidates — a
-    concurrent writer's staged-but-uncommitted files are untouched
+    Only files that commit history itself references are candidates —
+    a concurrent writer's staged-but-uncommitted files are untouched
     (they are not in any manifest), so vacuum is safe to run beside
-    live writers; crashed-stage orphans remain
-    :func:`vacuum_orphans`'s job.
+    live writers; :func:`vacuum_orphans` reclaims crashed-stage
+    orphans once they are stale.
 
     Scale: pure driver-side manifest math + unlink calls — O(#commits
     + #reclaimed files); no Spark job, no data read. Bounded storage
@@ -2045,34 +2089,8 @@ def vacuum(
                 raw_cutoff = max(snap.version - retain_versions, 0)
             prior_horizon = snap.vacuum_cutoff
             cutoff = max(raw_cutoff, prior_horizon)  # horizon ratchets
-            at_cutoff = snap.as_of(cutoff)
-            live = set(at_cutoff.files)
-            ever: set[str] = set()
-            live_cdc: set[str] = set()
-            all_cdc: set[str] = set()
-            # DV files live while any retained snapshot's DV state (the
-            # cutoff snapshot's replayed mapping, or any add/reset in a
-            # retained commit) references them.
-            live_dv: set[str] = set()
-            all_dv: set[str] = set()
-            for dvs in at_cutoff.dv.values():
-                live_dv.update(dvs)
-            for c in snap.commits:
-                all_cdc.update(c.get("cdc", []))
-                d = c.get("dv") or {}
-                dv_refs = set(d.get("add", []))
-                for refs in d.get("reset", {}).values():
-                    dv_refs.update(refs)
-                all_dv.update(dv_refs)
-                if c["version"] > cutoff:
-                    live.update(c["add"])
-                    live_cdc.update(c.get("cdc", []))
-                    live_dv.update(dv_refs)
-                else:
-                    ever.update(c["add"])
-            for rel in sorted(
-                (ever - live) | (all_cdc - live_cdc) | (all_dv - live_dv)
-            ):
+            referenced = {rel for c in snap.commits for rel in _refs(c)}
+            for rel in sorted(referenced - snap.retained(cutoff)):
                 try:
                     os.remove(os.path.join(target_path, rel))
                     removed.append(rel)
@@ -2155,20 +2173,9 @@ def restore(
         )
         if not re_add and not drop and not dv_diff:
             return (0, 0), [], None  # restoring to the current view is a no-op
-        missing = [
-            f for f in re_add if not os.path.exists(os.path.join(target_path, f))
-        ] + [
-            d
-            for dvs in old_dv.values()
-            for d in dvs
-            if not os.path.exists(os.path.join(target_path, d))
-        ]
-        if missing:
-            raise FileNotFoundError(
-                f"restore to v{version} needs vacuumed file(s) {missing[:3]}… "
-                f"at {target_path} — target version is beyond the retention "
-                "window"
-            )
+        snap.check_present(
+            [*re_add, *old.kill_lists(old_files)], f"restore to v{version}"
+        )
         evolved = snap.schema
 
         def _tagged(
@@ -2237,10 +2244,8 @@ def restore(
         n = sum(pq.read_metadata(os.path.join(target_path, f)).num_rows for f in re_add)
         # Footer row counts overstate DV-masked files — subtract the
         # target version's kill-list rows for the re-added files.
-        re_add_set = set(re_add)
-        for d in {d for f in re_add for d in old_dv.get(f, [])}:
-            t = pq.read_table(os.path.join(target_path, d), columns=["file"])
-            n -= sum(1 for v in t.column(0).to_pylist() if v in re_add_set)
+        masked = _value_counts(target_path, old.kill_lists(re_add), "file")
+        n -= sum(masked[f] for f in re_add)
         return (len(re_add), len(drop)), cdc_staged, {
             "add": re_add,
             "n": n,
@@ -2303,20 +2308,21 @@ def clone_table(
         raise ValueError(
             f"version {version} predates the first commit at {src_path}"
         )
+    files = snap.files
+    dv_files = snap.kill_lists(files)
+    snap.check_present([*files, *dv_files], f"clone of v{snap.version}")
     if _commits(dst_path):
         raise ValueError(
             f"clone destination {dst_path} already has a transaction log"
         )
-    if os.path.isdir(dst_path) and _data_files(dst_path):
+    if _table_files(dst_path):
         raise ValueError(
-            f"clone destination {dst_path} already contains data files"
+            f"clone destination {dst_path} already contains table files"
         )
-    files = snap.files
     fset = set(files)
     dv_state = {
         f: list(dvs) for f, dvs in snap.dv.items() if f in fset and dvs
     }
-    dv_files = sorted({d for dvs in dv_state.values() for d in dvs})
     os.makedirs(dst_path, exist_ok=True)
     for rel in [*files, *dv_files]:
         dst_f = os.path.join(dst_path, rel)
@@ -2543,7 +2549,8 @@ def _stage_cdc_files_counted(
     form avoids the manager but leaves no handle to read the metrics
     of a writer's internal QueryExecution."""
     staged = _stage_cdc_files(cdc, snap)
-    return staged, _cdc_counts(snap.path, staged)
+    counts = _value_counts(snap.path, staged, _CHANGE_COL)
+    return staged, (counts["insert"], counts["update_postimage"], counts["delete"])
 
 
 def _stage_dv_files(kill: DataFrame, target_path: str) -> list[str]:
@@ -2552,23 +2559,21 @@ def _stage_dv_files(kill: DataFrame, target_path: str) -> list[str]:
     return _stage_aux_files(kill, target_path, _DV_DIR, "dv")
 
 
-def _cdc_counts(target_path: str, cdc_staged: list[str]) -> tuple[int, int, int]:
-    """(inserted, updated, deleted) row counts from the staged change
-    files — a single-column read of ``_change_type``, no Spark job.
-    Vectorized (pyarrow value_counts over the dictionary column, r16)
-    instead of a per-row Python loop."""
+def _value_counts(target_path: str, files: Sequence[str], col: str) -> Counter:
+    """Row counts per value of column ``col`` over the table-relative
+    parquet ``files`` — one single-column pyarrow read per file, no
+    Spark job: change types of change-data files, target files of kill
+    lists. Vectorized (pyarrow value_counts, r16) instead of a per-row
+    Python loop."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    counts = {"insert": 0, "update_postimage": 0, "delete": 0}
-    for rel in cdc_staged:
-        t = pq.read_table(
-            os.path.join(target_path, rel), columns=[_CHANGE_COL]
-        )
+    out: Counter = Counter()
+    for rel in files:
+        t = pq.read_table(os.path.join(target_path, rel), columns=[col])
         for entry in pc.value_counts(t.column(0)).to_pylist():
-            if entry["values"] in counts:
-                counts[entry["values"]] += entry["counts"]
-    return counts["insert"], counts["update_postimage"], counts["delete"]
+            out[entry["values"]] += entry["counts"]
+    return out
 
 
 def _stage_dml(
@@ -2587,8 +2592,6 @@ def _stage_dml(
     and ``actions`` holds the manifest entries every DML commit shares
     (``add``, ``stats``, ``cdc`` and ``dv``, the deletion-vector entry
     or None); the writer adds its own keys."""
-    import pyarrow.parquet as pq
-
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_dv = None if kill is None else pool.submit(_stage_dv_files, kill, snap.path)
         f_data = None if data is None else pool.submit(_stage_files, data, snap)
@@ -2598,13 +2601,8 @@ def _stage_dml(
         cdc_staged, counts = f_cdc.result()
     dv = None
     if kill is not None:
-        affected: set[str] = set()
-        n_masked = 0
-        for rel in dv_staged:
-            t = pq.read_table(os.path.join(snap.path, rel), columns=["file"])
-            n_masked += t.num_rows
-            affected.update(t.column(0).to_pylist())
-        dv = {"add": dv_staged, "files": sorted(affected), "n": n_masked}
+        masked = _value_counts(snap.path, dv_staged, "file")
+        dv = {"add": dv_staged, "files": sorted(masked), "n": masked.total()}
     actions = {"add": added, "stats": stats, "cdc": cdc_staged, "dv": dv}
     return counts, added + cdc_staged + dv_staged, actions
 

@@ -6,12 +6,15 @@ rewriting files; every read surface applies them; rewrites purge them.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
 from stonkwhisperer_spark.sinks.writers import (
+    _STALE_S,
     Snapshot,
     _commits,
+    _table_files,
     committed_files,
     compact,
     delete_where_dv,
@@ -169,7 +172,11 @@ def test_vacuum_respects_then_reclaims_dv_files(spark, tmp_path):
         d for dvs in Snapshot(target).dv.values() for d in dvs
     ]
     assert dv_files
-    # Orphan sweep keeps committed DV files.
+    # Orphan sweep keeps committed DV files. Every file is aged past the
+    # sweep's in-flight bound, so a leaked stage is swept too.
+    stale = time.time() - 2 * _STALE_S
+    for rel in _table_files(target):
+        os.utime(os.path.join(target, rel), (stale, stale))
     assert vacuum_orphans(target) == []
     compact(spark, target)
     # Retention vacuum with a window spanning the DV snapshot keeps it…

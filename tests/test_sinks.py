@@ -5,6 +5,7 @@ idempotence invariant — re-running a batch inserts 0 rows
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -146,6 +147,7 @@ def test_vacuum_orphans_removes_crashed_stage(spark, tmp_path):
     writer that died between stage and CAS) is invisible to
     read_committed and removed by vacuum_orphans."""
     from stonkwhisperer_spark.sinks.writers import (
+        _STALE_S,
         merge_append,
         read_committed,
         vacuum_orphans,
@@ -166,6 +168,8 @@ def test_vacuum_orphans_removes_crashed_stage(spark, tmp_path):
 
     assert spark.read.parquet(target).count() == 2  # plain read sees the orphan
     assert read_committed(spark, target).count() == 1  # committed view does not
+    stale = time.time() - 2 * _STALE_S  # past the sweep's in-flight bound
+    os.utime(os.path.join(target, "part-orphan.parquet"), (stale, stale))
     assert vacuum_orphans(target) == ["part-orphan.parquet"]
     assert spark.read.parquet(target).count() == 1
 
@@ -277,7 +281,9 @@ def test_compact_swaps_files_atomically(spark, tmp_path):
     import os as _os
 
     from stonkwhisperer_spark.sinks.writers import (
+        _STALE_S,
         _committed_version,
+        _table_files,
         committed_files,
         compact,
         merge_append,
@@ -305,7 +311,11 @@ def test_compact_swaps_files_atomically(spark, tmp_path):
     assert table_changes(spark, target, from_version=pre_version) is None
     # Time travel to the pre-compaction snapshot still resolves...
     assert read_committed(spark, target, version=pre_version).count() == 4
-    # ...until vacuum reclaims the replaced files.
+    # ...until vacuum reclaims the replaced files. Every file is aged
+    # past the sweep's in-flight bound, so a leaked stage is swept too.
+    stale = time.time() - 2 * _STALE_S
+    for rel in _table_files(target):
+        _os.utime(_os.path.join(target, rel), (stale, stale))
     removed = vacuum_orphans(target)
     assert sorted(removed) == sorted(pre_files)
     assert {(r.k, r.v) for r in read_committed(spark, target).collect()} == got
@@ -696,6 +706,7 @@ def test_merge_upsert_vacuum_and_time_travel(spark, tmp_path):
     import os as _os
 
     from stonkwhisperer_spark.sinks.writers import (
+        _STALE_S,
         _committed_version,
         merge_append,
         merge_upsert,
@@ -727,6 +738,8 @@ def test_merge_upsert_vacuum_and_time_travel(spark, tmp_path):
     orphan = _os.path.join(target, "_change_data", "cdc-deadbeef.parquet")
     with open(orphan, "wb") as fh:
         fh.write(b"not really parquet")
+    stale = time.time() - 2 * _STALE_S  # past the sweep's in-flight bound
+    _os.utime(orphan, (stale, stale))
     removed = vacuum_orphans(target)
     assert _os.path.join("_change_data", "cdc-deadbeef.parquet") in removed
     # committed change files survive: the feed still replays

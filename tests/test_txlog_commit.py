@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -75,6 +76,13 @@ WRITERS = {
 }
 
 
+def _backdate(target, *rels):
+    """Age table files past the orphan sweep's in-flight bound."""
+    stale = time.time() - 2 * wr._STALE_S
+    for rel in rels:
+        os.utime(os.path.join(target, rel), (stale, stale))
+
+
 def _committed_rows(spark, path):
     df = wr.read_committed(spark, path)
     return sorted(tuple(r) for r in df.collect()) if df is not None else []
@@ -106,7 +114,10 @@ def test_writer_survives_lost_commit_race(spark, tmp_path, monkeypatch, base_tab
     assert got == expected
     assert wr._committed_version(raced) == head + 1
     # The base already holds files that history removed; the lost
-    # attempt's staged files must not add to them.
+    # attempt's staged files must not add to them. Every file is aged
+    # past the sweep's in-flight bound, so a leaked stage is swept too.
+    for t in (calm, raced):
+        _backdate(t, *wr._table_files(t))
     assert sorted(wr.vacuum_orphans(raced)) == sorted(wr.vacuum_orphans(calm))
     assert _committed_rows(spark, raced) == _committed_rows(spark, calm)
 
@@ -186,6 +197,8 @@ def test_crashed_first_writer_leaves_no_rows(spark, tmp_path):
         wr.merge_append(spark, target, _rows(spark, 9, 10), ["k"], _pre_commit_hook=die)
     assert wr.merge_append(spark, target, _rows(spark, 1, 2), ["k"]) == 1
     assert _keys(spark, target) == [1]
+    assert wr.vacuum_orphans(target) == []  # not yet stale: could be in flight
+    _backdate(target, *set(wr._table_files(target)) - set(wr.committed_files(target)))
     assert wr.vacuum_orphans(target)  # the dead writer's staged part
 
 
@@ -198,7 +211,62 @@ def test_plain_parquet_in_target_is_not_table_state(spark, tmp_path):
     assert wr.merge_append(spark, target, _rows(spark, 1, 3), ["k"]) == 2
     assert _keys(spark, target) == [1, 2]
     assert plain not in wr.committed_files(target)
+    _backdate(target, plain)
     assert wr.vacuum_orphans(target) == [plain]
+
+
+# ---------------------------------------------------------------------------
+# One reference rule: the files a version needs, for the sweeps, restore
+# and clone.
+# ---------------------------------------------------------------------------
+def test_orphan_sweep_spares_a_live_writers_stage(spark, tmp_path):
+    """vacuum_orphans run between a writer's stage and publish must not
+    delete the staged part the writer is about to commit."""
+    target = str(tmp_path / "t")
+    wr.merge_append(spark, target, _rows(spark, 1, 2), ["k"])
+    swept = []
+
+    def sweep():
+        swept.extend(wr.vacuum_orphans(target))
+
+    assert wr.merge_append(spark, target, _rows(spark, 2, 3), ["k"], _pre_commit_hook=sweep) == 1
+    assert swept == []
+    assert _keys(spark, target) == [1, 2]
+
+
+def test_clone_of_vacuumed_version_links_nothing(spark, tmp_path):
+    """A clone of a version whose files were reclaimed fails before it
+    creates or links anything, so the destination stays usable."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    wr.merge_append(spark, src, _rows(spark, 1, 2), ["k"])
+    wr.merge_append(spark, src, _rows(spark, 2, 3), ["k"])
+    assert wr.delete_where(spark, src, F.col("k") == 2) == 1
+    assert wr.vacuum_orphans(src)
+    with pytest.raises(FileNotFoundError, match="retention"):
+        wr.clone_table(src, dst, version=2)
+    assert not (os.path.isdir(dst) and os.listdir(dst))
+    wr.clone_table(src, dst)
+    assert _keys(spark, dst) == [1]
+
+
+def test_vacuum_keeps_kill_lists_a_restore_brought_back(spark, tmp_path):
+    """A RESTORE to a deletion-vector-masked version resets the kill
+    lists; vacuum and the orphan sweep must keep them, or the masked
+    rows come back."""
+    target = str(tmp_path / "t")
+    wr.merge_append(spark, target, _rows(spark, 0, 10).coalesce(1), ["k"])
+    wr.merge_append(spark, target, _rows(spark, 10, 20).coalesce(1), ["k"])
+    assert wr.delete_where_dv(spark, target, F.col("k") < 5) == 5
+    masked = wr._committed_version(target)
+    kill_lists = {d for dvs in wr.Snapshot(target).dv.values() for d in dvs}
+    assert kill_lists
+    assert wr.compact(spark, target) == 2
+    wr.restore(spark, target, version=masked)
+    wr.vacuum(target, retain_versions=0, unsafe_zero_retention=True)
+    _backdate(target, *wr._table_files(target))  # a leaked stage is swept too
+    assert wr.vacuum_orphans(target) == []
+    assert all(os.path.exists(os.path.join(target, d)) for d in kill_lists)
+    assert _keys(spark, target) == list(range(5, 20))
 
 
 @pytest.mark.parametrize("writer", ["delete_where", "delete_where_dv"])
