@@ -1527,6 +1527,64 @@ def _try_commit(target_path: str, version: int, actions: dict, snap: Snapshot) -
     return True
 
 
+# A leaf whose size Spark does not know reports spark.sql.defaultSizeInBytes
+# (Long.MaxValue), sometimes scaled down by a projection above it; no real
+# input comes near 2^60 bytes.
+_UNKNOWN_BYTES = 1 << 60
+
+
+def _estimated_bytes(plan) -> int:
+    """The bytes a logical ``plan`` reads from its leaves: each leaf
+    counts its ``stats().sizeInBytes`` (0 when unknown, see
+    :data:`_UNKNOWN_BYTES`), a left-anti or left-semi join counts only
+    its left side and every other node sums its children. Spark's own
+    estimate multiplies a join's two sides, which sized a fact ⋈
+    dimension batch at ~1e23 bytes."""
+    total, todo = 0, [plan]
+    while todo:
+        node = todo.pop()
+        children = node.children()
+        n = children.size()
+        if n == 0:
+            size = int(node.stats().sizeInBytes())
+            total += 0 if size >= _UNKNOWN_BYTES else size
+        elif node.nodeName() == "Join" and node.joinType().toString() in ("LeftAnti", "LeftSemi"):
+            todo.append(children.apply(0))
+        else:
+            todo.extend(children.apply(i) for i in range(n))
+    return total
+
+
+def _sized(df: DataFrame, partition_cols: Sequence[str] = ()) -> DataFrame:
+    """``df`` arranged for a staging write into few advisory-sized
+    files (``spark.sql.adaptive.advisoryPartitionSizeInBytes``), by one
+    of two means chosen by the session that will run it:
+
+    * AQE on: a ``rebalance`` hint on ``partition_cols``. AQE measures
+      the shuffled bytes, so it coalesces a small write to one file,
+      sizes a filtered or joined rewrite by what it really holds and
+      splits a partition value larger than the advisory size.
+    * AQE off — every streaming micro-batch with a stateful operator —
+      Spark drops that hint, so the rows go through ``repartition(n,
+      *partition_cols)`` with ``n = clamp(ceil(estimate / advisory), 1,
+      shuffle.partitions)``; the estimate is :func:`_estimated_bytes`
+      of the analyzed plan. It cannot see a filter's selectivity, and
+      hashed on ``partition_cols`` each value gets one file per commit,
+      so it is only the fallback. ``repartition``, never ``coalesce``:
+      a coalesce would narrow the upstream stage (a stateful dedup's
+      shuffle partitions) into n tasks."""
+    spark = df.sparkSession
+    if spark.conf.get("spark.sql.adaptive.enabled").lower() == "true":
+        return df.hint("rebalance", *partition_cols)
+    target = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    estimate = _estimated_bytes(df._jdf.queryExecution().analyzed())
+    n = min(max(-(-estimate // target), 1), cap)
+    return df.repartition(n, *partition_cols)
+
+
 def _stage_files(
     new_rows: DataFrame,
     snap: Snapshot,
@@ -1552,17 +1610,15 @@ def _stage_files(
     translation happens here, at the disk boundary, so writers compute
     in logical space and renamed tables keep one on-disk schema.
 
-    ``size_output`` (default): REBALANCE the rows before the write so
-    AQE sizes the output files to ``advisoryPartitionSizeInBytes``
-    instead of one tiny file per upstream task (guide §6: small files
-    hurt twice — Delta's "optimized writes" shuffle). Without it a
-    merge whose plan unions N-partition branches staged up to N
-    near-empty parts PER COMMIT, and every later snapshot read,
-    matched-file discovery and footer-stats pass paid O(files) opens
-    (measured r15: a 3-commit bm25-index table held ~100 files; the
-    merge engine re-scans it 3+ times per MERGE). Callers that arrange
-    their own layout (compact's range/Z-order clustering) pass False —
-    a rebalance there would destroy the clustering."""
+    ``size_output`` (default): size the output by :func:`_sized` —
+    advisory-sized files, with AQE on or off, instead of one near-empty
+    part per upstream task (guide §6: small files hurt twice — Delta's
+    "optimized writes" shuffle). Without it a streaming micro-batch
+    staged one part per shuffle partition PER COMMIT, and every later
+    snapshot read, matched-file discovery and footer-stats pass paid
+    O(files) opens. Callers that arrange their own layout (compact's
+    range/Z-order clustering) pass False — a shuffle there would
+    destroy the clustering."""
     import pyarrow.parquet as pq
 
     target_path = snap.path
@@ -1572,9 +1628,9 @@ def _stage_files(
     else:
         partition_cols = [snap.colmap.get(c, c) for c in partition_cols]
     if size_output:
-        # Partitioned writes rebalance ON the partition columns so each
+        # Partitioned writes shuffle ON the partition columns so each
         # output directory gets few well-sized files, not one per task.
-        new_rows = new_rows.hint("rebalance", *partition_cols)
+        new_rows = _sized(new_rows, partition_cols)
     stage = os.path.join(target_path, f".stage-{uuid.uuid4().hex}")
     writer = new_rows.write.mode("overwrite")
     if partition_cols:
@@ -2504,7 +2560,7 @@ def _stage_aux_files(
     # Same output-file sizing as _stage_files: CDC/DV families are read
     # back by feeds and snapshot reads — one near-empty part per
     # upstream task inflates every later open.
-    df = df.hint("rebalance")
+    df = _sized(df)
     dest = os.path.join(target_path, subdir)
     os.makedirs(dest, exist_ok=True)
     stage = os.path.join(target_path, f".stage-{prefix}-{uuid.uuid4().hex}")

@@ -4,6 +4,7 @@ idempotence invariant — re-running a batch inserts 0 rows
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 
@@ -2345,8 +2346,8 @@ def test_partial_bloom_index_still_indexes_missing_files(spark, tmp_path):
     snap = Snapshot(target)
     batch = spark.range(50, 100).select(F.col("id").alias("k")).coalesce(2)
     # size_output=False: this test NEEDS a two-file staging (a partial
-    # bloom map covering one of two added files); the default rebalance
-    # would fuse the tiny batch into one part.
+    # bloom map covering one of two added files); the default sizing
+    # would stage the tiny batch as one part.
     staged, n, _ = _stage_files(batch, snap, None, size_output=False)
     assert len(staged) == 2
     pre = snap.blooms  # source map covering only older files
@@ -2436,6 +2437,124 @@ _CLONE_PIN = [
     ("CLONE", [*_BASE_KEYS, "rename"], ["column-mapping"]),
     ("CLONE", [*_BASE_KEYS, "drop_col"], ["column-mapping"]),
 ]
+
+
+def _last(target, key="add"):
+    from stonkwhisperer_spark.sinks.writers import _commits
+
+    return _commits(target)[-1].get(key, [])
+
+
+@contextlib.contextmanager
+def _session_conf(spark, settings):
+    """Set session ``settings`` for the block and restore them after."""
+    prev = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+# With AQE off, as in every streaming micro-batch with a stateful
+# operator, staging sizes its output by the explicit estimate rule.
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+def _hashed_rows(spark, path, n=5000):
+    """``n`` rows of (k, 64-char hex h, grp in a/b/c) written as parquet
+    at ``path``: some hundred KB, far above a 4k advisory size."""
+    spark.range(n).select(
+        F.col("id").alias("k"),
+        F.sha2(F.col("id").cast("string"), 256).alias("h"),
+        F.element_at(F.array(*map(F.lit, "abc")), (F.col("id") % 3 + 1).cast("int")).alias("grp"),
+    ).write.parquet(path)
+    size = sum(os.path.getsize(os.path.join(path, f)) for f in os.listdir(path) if f.endswith(".parquet"))
+    assert size > 16 * 1024
+
+
+def test_staging_sizes_a_joined_batch_as_one_file(spark, tmp_path):
+    """With AQE off, a file-sourced batch inner-joined to a
+    createDataFrame dimension and merged into a non-empty table stages
+    ONE file: the dimension's size is unknown to Spark (it counts 0,
+    not Long.MaxValue) and the join sums its sides instead of
+    multiplying them — either wrong rule sends the write to the
+    shuffle-partition cap, one file per task."""
+    src, target = str(tmp_path / "src"), str(tmp_path / "tbl")
+    spark.range(200).select(
+        F.col("id").alias("k"), (F.col("id") % 4).alias("c")
+    ).write.parquet(src)
+    dim = spark.createDataFrame([(i, f"name {i}") for i in range(4)], "c long, name string")
+    with _session_conf(spark, _AQE_OFF):
+        merge_append(spark, target, spark.read.parquet(src).where("k < 10").join(dim, "c"), ["k"])
+        batch = spark.read.parquet(src).join(dim, "c")
+        assert merge_append(spark, target, batch, ["k"]) == 190
+    assert len(_last(target)) == 1
+
+
+def test_staging_file_count_follows_advisory_size(spark, tmp_path):
+    """With AQE off, the staged file count is the batch's estimated
+    bytes over spark.sql.adaptive.advisoryPartitionSizeInBytes, capped
+    at spark.sql.shuffle.partitions; a partitioned batch is hashed on
+    its partition column and stages one file under each value it
+    holds."""
+    src = str(tmp_path / "src")
+    _hashed_rows(spark, src)
+    flat, parted = str(tmp_path / "flat"), str(tmp_path / "parted")
+    with _session_conf(spark, {**_AQE_OFF, _ADVISORY: "4k"}):
+        assert merge_append(spark, flat, spark.read.parquet(src), ["k"]) == 5000
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert 1 < len(_last(flat)) <= cap
+        assert merge_append(
+            spark, parted, spark.read.parquet(src), ["k"], partition_cols=["grp"]
+        ) == 5000
+    dirs = sorted(os.path.dirname(f) for f in _last(parted))
+    assert dirs == ["grp=a", "grp=b", "grp=c"]
+
+
+def test_staging_with_aqe_splits_a_large_partition_value(spark, tmp_path):
+    """With AQE on, a partition value whose rows exceed the advisory
+    size is split into several files instead of one task's file. AQE
+    splits a value only at the boundaries of the upstream tasks, so the
+    coalescing floor is lowered too: the batch's dedup stage keeps
+    several tasks instead of one."""
+    src, parted = str(tmp_path / "src"), str(tmp_path / "parted")
+    _hashed_rows(spark, src)
+    floor = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    with _session_conf(spark, {_ADVISORY: "4k", floor: "4k"}):
+        assert merge_append(
+            spark, parted, spark.read.parquet(src), ["k"], partition_cols=["grp"]
+        ) == 5000
+    dirs = [os.path.dirname(f) for f in _last(parted)]
+    assert sorted(set(dirs)) == ["grp=a", "grp=b", "grp=c"]
+    assert all(dirs.count(d) > 1 for d in set(dirs))
+
+
+def test_staging_with_aqe_sizes_rewrites_by_measured_bytes(spark, tmp_path):
+    """With AQE on, a rewrite stages by the bytes it really writes, not
+    by a plan estimate: a file-sourced merge_upsert into a
+    parquet-seeded table (its touched slice is checkpointed after a
+    join) stages one data and one change-data file, and a deletion-vector
+    delete of a few rows of a table far larger than the advisory size
+    (its slice is a checkpointed filter) stages one kill list."""
+    from stonkwhisperer_spark.sinks.writers import delete_where_dv, merge_upsert
+
+    src, target = str(tmp_path / "src"), str(tmp_path / "tbl")
+    _hashed_rows(spark, src)
+    merge_append(spark, target, spark.read.parquet(src), ["k"])
+    upd = str(tmp_path / "upd")
+    spark.read.parquet(src).where("k % 50 = 0 or k >= 4990").withColumn(
+        "k", F.col("k") + 5
+    ).write.parquet(upd)
+    assert merge_upsert(spark, target, spark.read.parquet(upd), ["k"]) == (5, 105)
+    assert (len(_last(target)), len(_last(target, "cdc"))) == (1, 1)
+    with _session_conf(spark, {_ADVISORY: "4k"}):
+        assert delete_where_dv(spark, target, F.col("k") < 3) == 3
+    assert len(_last(target, "dv")["add"]) == 1
+    assert len(_last(target, "cdc")) == 1
 
 
 def test_feature_flags_stamped_on_commits(spark, tmp_path):

@@ -70,6 +70,31 @@ def test_stream_dedup_and_merge(spark, landing, tmp_path):
     assert spark.read.parquet(target).count() == 3
 
 
+def test_stream_commits_stage_one_file_each(spark, tmp_path):
+    """Each micro-batch commit of start_merge_stream stages ONE file,
+    not one per shuffle partition: a stateful micro-batch runs with AQE
+    off, so the staging write sizes its output by an explicit count."""
+    import datetime as dt
+
+    from stonkwhisperer_spark.sinks.writers import _commits, read_committed
+
+    t0 = dt.datetime(2024, 1, 1, 9, 0, 0)
+    landing, target = str(tmp_path / "landing"), str(tmp_path / "articles")
+    for drop in range(2):
+        _drop(spark, landing, [(f"u/{drop}/{i}", "t", t0) for i in range(40)])
+    stream = read_landing_stream(spark, landing, NEWS_SCHEMA, max_files_per_trigger=1)
+    q = start_merge_stream(
+        dedup_within_watermark(stream, ["url"], "published_at"),
+        target,
+        ["url"],
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    adds = [len(c["add"]) for c in _commits(target)]
+    assert adds == [1, 1]
+    assert read_committed(spark, target).count() == 80
+
+
 def test_streaming_minute_bars_match_batch(spark, tmp_path):
     import datetime as dt
 
