@@ -1,8 +1,10 @@
 """SparkSession factory.
 
 Scale posture (SURVEY.md §7.2 M6): AQE on (runtime coalesce + skew-join),
-shuffle partitions sized to cores for local mode (a cluster deployment
-would size to 2-3x total executor cores), Arrow enabled for the few
+32 shuffle partitions whatever the core count (``shuffle_partitions`` or
+``SPARK_SHUFFLE_PARTITIONS`` overrides it; AQE coalesces them for batch
+queries, and the stream starters in ``streaming/jobs.py`` start each
+query at ``min(this, defaultParallelism)``), Arrow enabled for the few
 Pandas-UDF paths, UTC session timezone so timestamp semantics match the
 reference (TIMESTAMPTZ, UTC everywhere — reference
 data_pipeline/tasks/transformation.py:59-60).

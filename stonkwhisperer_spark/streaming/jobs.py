@@ -18,12 +18,15 @@ semantics map to:
 State stays bounded: every stateful op (dedup, window agg) sits behind
 the watermark, so state for closed windows/expired keys is evicted —
 the property that keeps a 100 TB/day stream from accumulating unbounded
-executor state.
+executor state. Every starter here starts its query through
+:func:`_start`, at the task-slot width, so a micro-batch commits one
+state store per slot rather than one per batch shuffle partition.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import threading
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +34,52 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from stonkwhisperer_spark.sinks.writers import merge_append
+
+# Held by _start from foreachBatch to the restore, so two starters on one
+# session cannot restore each other's narrowed width as the original.
+_START_LOCK = threading.Lock()
+
+
+def _start(
+    stream_df: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    output_mode: str,
+    **trigger: str | bool,
+) -> StreamingQuery:
+    """Start a ``foreachBatch(sink)`` query over ``stream_df`` at
+    ``min(spark.sql.shuffle.partitions, defaultParallelism)`` shuffle
+    partitions: one state store and one task per task slot, not the
+    batch width. ``trigger`` is one ``DataStreamWriter.trigger``
+    keyword, or none for Spark's default trigger.
+
+    ``start()`` clones the session and the first micro-batch records
+    the width in the offset log, so it holds for the checkpoint's life:
+    the state stores and every shuffle inside ``foreachBatch`` run at
+    it, and a restart from an existing checkpoint keeps the width that
+    checkpoint was first started with. A session setting below the
+    slot count wins. The session's own setting is narrowed only while
+    the query starts and is restored whether ``start()`` returns or
+    raises; a batch query that another thread plans on the same session
+    inside that window plans at the narrowed width.
+
+    The lock also covers ``foreachBatch``: its first call in a process
+    starts PySpark's callback server by an unguarded check-then-act,
+    which concurrent first calls race on."""
+    spark = stream_df.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(min(int(prev), spark.sparkContext.defaultParallelism)))
+        try:
+            writer = (
+                stream_df.writeStream.foreachBatch(sink)
+                .option("checkpointLocation", checkpoint)
+                .outputMode(output_mode)
+            )
+            return (writer.trigger(**trigger) if trigger else writer).start()
+        finally:
+            spark.conf.set(key, prev)
 
 
 def read_landing_stream(
@@ -107,16 +156,11 @@ def start_merge_stream(
     def sink(batch_df: DataFrame, _epoch: int) -> None:
         merge_append(batch_df.sparkSession, target_path, batch_df, keys)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
     if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        trigger = {"processingTime": processing_time}
+    else:
+        trigger = {"availableNow": True} if available_now else {}
+    return _start(stream_df, sink, checkpoint, "update", **trigger)
 
 
 def start_txn_append_stream(
@@ -150,13 +194,7 @@ def start_txn_append_stream(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         append_txn(batch_df.sparkSession, target_path, batch_df, app_id, epoch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream_df, sink, checkpoint, "append", availableNow=True)
 
 
 def run_txn_merge_ingest(
@@ -191,11 +229,9 @@ def run_txn_merge_ingest(
 
     Returns the first drain's cumulative (inserted, updated).
 
-    Per-micro-batch MERGE shuffles run at 8 partitions (the
-    ``_stream_shuffle_width`` harness-scale discipline: session width
-    over a few-MB batch is pure scheduling overhead; production sizes
-    this to the cluster), restored after each drain; each drain must
-    finish within 300 s.
+    Each drain starts at the task-slot width (:func:`_start`), so the
+    per-micro-batch MERGE shuffles run one task per slot; each drain
+    must finish within 300 s.
 
     Scale: per poll interval this is the batch path's O(batch) keyed
     copy-on-write MERGE; checkpoint + ledger give exactly-once table
@@ -217,29 +253,23 @@ def run_txn_merge_ingest(
         )
 
     def drain(ckpt: str) -> None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        q = _start(
+            read_landing_stream(spark, landing, schema, max_files_per_trigger=1),
+            sink,
+            ckpt,
+            "update",
+            availableNow=True,
+        )
         try:
-            q = (
-                read_landing_stream(spark, landing, schema, max_files_per_trigger=1)
-                .writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        f"ingest stream over {landing} did not drain within 300s"
-                    )
-            finally:
-                q.stop()
-            exc = q.exception()
-            if exc is not None:
-                raise exc
+            if not q.awaitTermination(300):
+                raise TimeoutError(
+                    f"ingest stream over {landing} did not drain within 300s"
+                )
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            q.stop()
+        exc = q.exception()
+        if exc is not None:
+            raise exc
 
     drain(f"{checkpoint_root}/ckpt1")
     if len(arms) < 2:
@@ -345,13 +375,7 @@ def start_cdc_apply_stream(
         .option("path", source_path)
         .load()
     )
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, sink, checkpoint, "append", availableNow=True)
 
 
 def join_streams_time_bounded(

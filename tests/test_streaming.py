@@ -95,6 +95,118 @@ def test_stream_commits_stage_one_file_each(spark, tmp_path):
     assert read_committed(spark, target).count() == 80
 
 
+WIDTH = "spark.sql.shuffle.partitions"
+
+
+def _merge_drain(spark, landing, target, ckpt) -> int:
+    """Drain ``landing`` through start_merge_stream over the watermarked
+    dedup; returns the state partitions the query reported."""
+    stream = read_landing_stream(spark, landing, NEWS_SCHEMA, max_files_per_trigger=1)
+    q = start_merge_stream(
+        dedup_within_watermark(stream, ["url"], "published_at"), target, ["url"], ckpt
+    )
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert q.exception() is None
+    return q.recentProgress[-1]["stateOperators"][0]["numShufflePartitions"]
+
+
+def test_stream_starts_at_task_slot_width(spark, landing, tmp_path):
+    """A stream starts at min(session width, task slots): one state store
+    per slot, not one per batch shuffle partition. The session's own
+    setting is left as it was."""
+    before = spark.conf.get(WIDTH)
+    width = _merge_drain(spark, landing, str(tmp_path / "articles"), str(tmp_path / "ckpt"))
+    assert spark.conf.get(WIDTH) == before
+    assert width == min(int(before), spark.sparkContext.defaultParallelism)
+
+
+def test_stream_restart_keeps_checkpoint_width(spark, tmp_path):
+    """The width is fixed at a checkpoint's first start: a session set
+    lower than the slot count wins there, and a restart after the
+    session was raised keeps the checkpoint's width and its dedup."""
+    import datetime as dt
+
+    from stonkwhisperer_spark.sinks.writers import read_committed
+
+    t0 = dt.datetime(2024, 1, 1, 9, 0, 0)
+    landing, target, ckpt = (str(tmp_path / n) for n in ("landing", "articles", "ckpt"))
+    before = spark.conf.get(WIDTH)
+    try:
+        spark.conf.set(WIDTH, "2")
+        _drop(spark, landing, [(f"u/{i}", "t", t0) for i in range(20)])
+        assert _merge_drain(spark, landing, target, ckpt) == 2
+        _drop(spark, landing, [(f"u/{i}", "t-again", t0) for i in range(15, 30)])
+        spark.conf.set(WIDTH, "8")
+        assert _merge_drain(spark, landing, target, ckpt) == 2
+    finally:
+        spark.conf.set(WIDTH, before)
+    urls = read_committed(spark, target).select("url")
+    assert urls.count() == 30
+    assert urls.distinct().count() == 30
+
+
+def test_stream_start_failure_restores_session_width(spark, landing, tmp_path):
+    """A starter whose start() raises still restores the session width:
+    append mode refuses an unwatermarked streaming aggregation."""
+    from pyspark.errors import AnalysisException
+
+    from stonkwhisperer_spark.streaming.jobs import start_txn_append_stream
+
+    before = spark.conf.get(WIDTH)
+    counts = read_landing_stream(spark, landing, NEWS_SCHEMA).groupBy().count()
+    with pytest.raises(AnalysisException):
+        start_txn_append_stream(counts, str(tmp_path / "tbl"), "counts", str(tmp_path / "ckpt"))
+    assert spark.conf.get(WIDTH) == before
+
+
+def test_concurrent_starters_restore_session_width(spark, landing, tmp_path, monkeypatch):
+    """Starters racing from a thread pool each start at the slot width,
+    and none restores another's narrowed value as the session's. start()
+    is slowed so that the starters' narrow-start-restore windows would
+    overlap if they were not serialized."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    start, guard = DataStreamWriter.start, threading.Lock()
+    inside = {"now": 0, "peak": 0}
+
+    def slow_start(self, *args, **kwargs):
+        with guard:
+            inside["now"] += 1
+            inside["peak"] = max(inside["peak"], inside["now"])
+        try:
+            time.sleep(0.3)
+            return start(self, *args, **kwargs)
+        finally:
+            with guard:
+                inside["now"] -= 1
+
+    monkeypatch.setattr(DataStreamWriter, "start", slow_start)
+    before = spark.conf.get(WIDTH)
+    n = 6  # more starters than local[4] has cores
+
+    def run(i: int) -> int:
+        return _merge_drain(spark, landing, str(tmp_path / f"t{i}"), str(tmp_path / f"c{i}"))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=n) as pool:
+            widths = list(pool.map(run, range(n), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert spark.conf.get(WIDTH) == before
+    assert inside["peak"] == 1
+    assert widths == [min(int(before), spark.sparkContext.defaultParallelism)] * n
+
+
 def test_streaming_minute_bars_match_batch(spark, tmp_path):
     import datetime as dt
 
