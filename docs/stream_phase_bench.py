@@ -64,7 +64,7 @@ def main() -> None:
 
     for name in (
         "_stage_files",
-        "_stage_cdc_files",
+        "_file_meta",
         "_stage_cdc_files_counted",
         "_matched_rel_files",
         "_commits",

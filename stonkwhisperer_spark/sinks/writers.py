@@ -26,12 +26,15 @@ log (the same protocol Delta's transaction log uses):
   * data files are uniquely-named parquet parts in the table root, or
     under its Hive partition directories — plain
     ``spark.read.parquet(path)`` keeps working;
-  * every data-writing path stages through :func:`_stage_files`, which
-    keeps two rules: a rewrite stages under the table's layout — the
-    partition keys in the path of the newest live file
-    (:attr:`Snapshot.partition_cols`), which
-    ``merge_append(partition_cols=)`` declares or changes — and no
-    empty data file is ever committed;
+  * every writing path stages its data, change-data and kill-list
+    files through :func:`_stage_files`, which keeps three rules: a
+    rewrite stages under the table's layout — the partition keys in
+    the path of the newest live file (:attr:`Snapshot.partition_cols`),
+    which ``merge_append(partition_cols=)`` declares or changes; no
+    empty data, change-data or kill-list file is ever committed; and
+    the build records every file's metadata (rows, size, zone map,
+    bloom filters) in one open of the file, so publication only
+    serializes, fsyncs and links;
   * ``_txlog/<version>.json`` manifests record each commit's files;
     the underscore prefix hides the log from Spark's file index;
   * a file is part of the table only if the log lists it: every
@@ -83,7 +86,7 @@ import shutil
 import time
 import uuid
 from collections import Counter
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from functools import cached_property
 
@@ -411,14 +414,16 @@ class Snapshot:
         change-data files contributes them (carried-over rows of a
         rewrite are not changes); any other commit contributes its
         added files, every row an insert. Compaction commits change no
-        rows and are skipped, as are commits that add nothing."""
+        rows and are skipped, as are commits that add nothing and
+        RESTORE commits without change data (their re-added rows were
+        all masked at the target version: no visible row changed)."""
         out = []
         for c in self.commits:
             if c["version"] <= after or c.get("compaction"):
                 continue
             if c.get("cdc"):
                 out.append((c, True, c["cdc"]))
-            elif c["add"]:
+            elif c["add"] and "restore" not in c:
                 out.append((c, False, c["add"]))
         return out
 
@@ -1040,45 +1045,39 @@ def _bloom_hashes(value, m: int) -> list[int]:
     return [(h1 + i * h2) % m for i in range(_BLOOM_K)]
 
 
-def _bloom_build(target_path: str, files: list[str], cols: list[str]) -> dict:
-    """Per-file bloom filters for the indexed columns — one pyarrow
-    column read per (file, col), O(staged batch) at write time. ~10
-    bits/row (fpp ≈ 1%), base64 in the manifest; files larger than
-    _BLOOM_MAX_ROWS rows skip the index (they stay unprunable, never
+def _bloom_build(pf, cols: Sequence[str]) -> dict[str, dict]:
+    """One file's bloom filters on the indexed columns ``cols`` — one
+    pyarrow read of those columns from the open ``ParquetFile`` ``pf``,
+    O(staged batch) at write time. ~10 bits/row (fpp ≈ 1%), base64 in
+    the manifest; a file larger than _BLOOM_MAX_ROWS rows, or holding
+    none of ``cols``, gets no filter (it stays unprunable, never
     wrong). At production scale the bitsets would move to sidecar
     index files; the protocol is identical."""
     import base64
 
-    import pyarrow.parquet as pq
-
-    out: dict[str, dict] = {}
-    for rel in files:
-        pf = pq.ParquetFile(os.path.join(target_path, rel))
-        present = [c for c in cols if c in pf.schema_arrow.names]
-        if not present or pf.metadata.num_rows > _BLOOM_MAX_ROWS:
-            continue
-        n = max(pf.metadata.num_rows, 1)
-        m = 1 << max(6, (10 * n - 1).bit_length())  # ≥10 bits/row, pow2
-        specs: dict[str, dict] = {}
-        t = pf.read(columns=present)
-        for col in present:
-            bits = bytearray(m // 8)
-            any_val = False
-            for v in t.column(col).to_pylist():
-                if v is None:
-                    continue
-                any_val = True
-                for pos in _bloom_hashes(v, m):
-                    bits[pos >> 3] |= 1 << (pos & 7)
-            if any_val:
-                specs[col] = {
-                    "m": m,
-                    "k": _BLOOM_K,
-                    "b64": base64.b64encode(bytes(bits)).decode("ascii"),
-                }
-        if specs:
-            out[rel] = specs
-    return out
+    present = [c for c in cols if c in pf.schema_arrow.names]
+    if not present or pf.metadata.num_rows > _BLOOM_MAX_ROWS:
+        return {}
+    n = max(pf.metadata.num_rows, 1)
+    m = 1 << max(6, (10 * n - 1).bit_length())  # ≥10 bits/row, pow2
+    specs: dict[str, dict] = {}
+    t = pf.read(columns=present)
+    for col in present:
+        bits = bytearray(m // 8)
+        any_val = False
+        for v in t.column(col).to_pylist():
+            if v is None:
+                continue
+            any_val = True
+            for pos in _bloom_hashes(v, m):
+                bits[pos >> 3] |= 1 << (pos & 7)
+        if any_val:
+            specs[col] = {
+                "m": m,
+                "k": _BLOOM_K,
+                "b64": base64.b64encode(bytes(bits)).decode("ascii"),
+            }
+    return specs
 
 
 def _bloom_admits(spec: dict, value) -> bool:
@@ -1397,22 +1396,31 @@ def _transact(
     parses the log once into a :class:`Snapshot` and calls
     ``build(snap)``, which returns ``(result, staged, actions)``:
     ``staged`` lists the table-relative files it wrote and ``actions``
-    the manifest entries to publish. ``actions`` None is an early
-    result — nothing is committed and the staged files are deleted.
-    Otherwise ``hook`` runs (fault injection for tests, between stage
-    and publish, where a concurrent winner can sneak in), version
-    ``snap.version + 1`` is published, and on a lost race the staged
-    files are deleted and ``build`` runs again against a snapshot that
-    holds the winner's commit — so it never commits under-informed
-    (a merge recomputes its anti-join, a txn writer sees the winner's
-    marker). Returns ``result``."""
+    the manifest entries to publish, every per-file fact among them
+    (rows, sizes, zone maps, bloom filters) already recorded by the
+    build's staging pass (:func:`_stage_files`). ``actions`` None is an
+    early result — nothing is committed and the staged files are
+    deleted. Otherwise the commit schema's logical field names become
+    physical ones (commit schemas union with file footers), ``hook``
+    runs (fault injection for tests, between stage and publish, where a
+    concurrent winner can sneak in), version ``snap.version + 1`` is
+    published, and on a lost race the staged files are deleted and
+    ``build`` runs again against a snapshot that holds the winner's
+    commit — so it never commits under-informed (a merge recomputes its
+    anti-join, a txn writer sees the winner's marker). Returns
+    ``result``."""
     for _ in range(_MAX_ATTEMPTS):
         snap = Snapshot(target_path)
         result, staged, actions = build(snap)
         if actions is not None:
+            if actions.get("schema") is not None and snap.colmap:
+                schema = json.loads(actions["schema"])
+                for field in schema.get("fields", []):
+                    field["name"] = snap.colmap.get(field["name"], field["name"])
+                actions["schema"] = json.dumps(schema)
             if hook is not None:
                 hook()
-            if _try_commit(target_path, snap.version + 1, actions, snap):
+            if _try_commit(target_path, snap.version + 1, actions):
                 return result
         for rel in staged:
             with contextlib.suppress(FileNotFoundError):
@@ -1436,10 +1444,12 @@ _MANIFEST_KEYS = (
 )
 
 
-def _try_commit(target_path: str, version: int, actions: dict, snap: Snapshot) -> bool:
+def _try_commit(target_path: str, version: int, actions: dict) -> bool:
     """Publish ``actions`` (manifest keys, see :data:`_MANIFEST_KEYS`)
-    as ``_txlog/{version}.json``, built against ``snap``; False when
-    another writer holds the version (a lost race).
+    as ``_txlog/{version}.json``; False when another writer holds the
+    version (a lost race). Publication only serializes, fsyncs and
+    links: it opens, stats and reads no data file — every per-file
+    entry (``sizes``, ``stats``, ``bloom``) comes from the build.
 
     The body is written to a temp file in ``_txlog/`` whose name does
     not end in ``.json`` (no log reader lists it), fsynced, then
@@ -1447,42 +1457,16 @@ def _try_commit(target_path: str, version: int, actions: dict, snap: Snapshot) -
     exists, so exactly one writer wins a version, and no reader or
     crash can observe a partial manifest. A crash leaves at most the
     temp file, which :func:`vacuum_log` reclaims."""
-    add = actions.get("add", [])
     # Commit timestamp (epoch millis) — the anchor for timestamp-based
     # time travel (Delta's `timestampAsOf`); version order remains the
     # authoritative order.
-    body = {"add": add, "n": actions.get("n", 0), "ts": time.time_ns() // 1_000_000}
-    entries = dict(actions)
-    # File sizes of the commit's data + change files, recorded AT WRITE
-    # TIME: the streaming source's split packing and table_detail read
-    # them from the log instead of re-statting every file on every poll
-    # (on object storage, a HEAD per file per poll). Advisory — no
-    # reader misreads a manifest without it, so it is not a feature.
-    entries["sizes"] = {}
-    for rel in [*add, *actions.get("cdc", [])]:
-        with contextlib.suppress(OSError):  # legacy unstatable file
-            entries["sizes"][rel] = os.path.getsize(os.path.join(target_path, rel))
-    # Bloom-index the added files when the table declares index columns
-    # (this commit's declaration wins). A caller-provided map (CLONE
-    # carrying the source's filters) is honored per file, but any added
-    # file ABSENT from it is still built here — a partial map must never
-    # leave files silently unindexed on a bloom-declared table.
-    entries["bloom"] = dict(actions.get("bloom") or {})
-    missing = [f for f in add if f not in entries["bloom"]]
-    bloom_cols = actions.get("bloom_cols")
-    if bloom_cols is None:
-        bloom_cols = snap.bloom_cols
-    if missing and bloom_cols:
-        entries["bloom"].update(_bloom_build(target_path, missing, list(bloom_cols)))
-    if actions.get("schema") is not None and snap.colmap:
-        # Commit schemas live in PHYSICAL name space (they union with
-        # file footers): translate logical field names.
-        schema = json.loads(actions["schema"])
-        for field in schema.get("fields", []):
-            field["name"] = snap.colmap.get(field["name"], field["name"])
-        entries["schema"] = json.dumps(schema)
+    body = {
+        "add": actions.get("add", []),
+        "n": actions.get("n", 0),
+        "ts": time.time_ns() // 1_000_000,
+    }
     for key in _MANIFEST_KEYS:
-        value = entries.get(key)
+        value = actions.get(key)
         if value is None or value is False:
             continue
         if value in ([], {}) and key != "bloom_cols":
@@ -1585,20 +1569,47 @@ def _sized(df: DataFrame, partition_cols: Sequence[str] = ()) -> DataFrame:
     return df.repartition(n, *partition_cols)
 
 
+def _file_meta(path: str, bloom_cols: Sequence[str]) -> tuple[int, int, dict, dict]:
+    """One open of the parquet file at ``path``: its rows, its bytes,
+    its zone map (:func:`_zone_map`) and its bloom filters on
+    ``bloom_cols`` (:func:`_bloom_build`)."""
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(path) as pf:
+        md = pf.metadata
+        return md.num_rows, os.path.getsize(path), _zone_map(md), _bloom_build(pf, bloom_cols)
+
+
+# Change-data and kill-list files: the file-name prefix of each family.
+_AUX_PREFIX = {_CDC_DIR: "cdc", _DV_DIR: "dv"}
+
+
 def _stage_files(
     new_rows: DataFrame,
     snap: Snapshot,
     partition_cols: Sequence[str] | None = None,
     size_output: bool = True,
-) -> tuple[list[str], int, dict[str, dict]]:
-    """The one staging step of every data-writing path: write the rows
-    to a dot-hidden staging dir inside the table, then os.replace each
-    part file into the table (same filesystem ⇒ atomic rename; readers
-    never observe a partial file). Returns ``(staged, rows,
-    zone_maps)``: the table-relative paths of the staged files, their
-    row count and their zone maps (:func:`_zone_map`), all from ONE
-    footer read per part. A 0-row part is deleted, never staged — an
-    empty data file is never committed.
+    subdir: str | None = None,
+) -> dict:
+    """The one staging step of every writing path: write the rows to a
+    dot-hidden staging dir inside the table, then os.replace each part
+    file into the table (same filesystem ⇒ atomic rename; readers never
+    observe a partial file). A 0-row part is deleted, never staged — no
+    empty data, change-data or kill-list file is ever committed.
+
+    Returns the manifest entries of the staged files, all recorded in
+    ONE open of each part (:func:`_file_meta`), so publication reads no
+    data file: ``add`` (their table-relative paths), ``n`` (their
+    rows), ``stats`` (zone maps), ``sizes`` ({path: bytes} — the
+    streaming source's split packing and ``table_detail`` read them
+    from the log instead of statting every file on every poll;
+    advisory, so not a feature) and ``bloom`` (filters on the table's
+    :attr:`Snapshot.bloom_cols`).
+
+    ``subdir`` (``_CDC_DIR`` or ``_DV_DIR``) stages change-data or
+    kill-list rows flat into that directory: no partition layout, zone
+    map or bloom filter, and kill-list rows ``(file, row_index)`` keep
+    their names.
 
     Layout: the rows stage under ``partition_cols`` (logical names)
     when the caller names them, else under the table's current layout
@@ -1606,9 +1617,10 @@ def _stage_files(
     that the rows carry), so a rewrite keeps the table's partition
     directories.
 
-    Data files always store PHYSICAL column names: the logical→physical
-    translation happens here, at the disk boundary, so writers compute
-    in logical space and renamed tables keep one on-disk schema.
+    Data and change-data files store PHYSICAL column names: the
+    logical→physical translation happens here, at the disk boundary, so
+    writers compute in logical space and renamed tables keep one
+    on-disk schema.
 
     ``size_output`` (default): size the output by :func:`_sized` —
     advisory-sized files, with AQE on or off, instead of one near-empty
@@ -1619,11 +1631,13 @@ def _stage_files(
     O(files) opens. Callers that arrange their own layout (compact's
     range/Z-order clustering) pass False — a shuffle there would
     destroy the clustering."""
-    import pyarrow.parquet as pq
-
     target_path = snap.path
-    new_rows = _to_physical(new_rows, snap)
-    if partition_cols is None:
+    if subdir != _DV_DIR:
+        new_rows = _to_physical(new_rows, snap)
+    bloom_cols = snap.bloom_cols
+    if subdir is not None:
+        partition_cols, bloom_cols = [], []
+    elif partition_cols is None:
         partition_cols = [c for c in snap.partition_cols if c in new_rows.columns]
     else:
         partition_cols = [snap.colmap.get(c, c) for c in partition_cols]
@@ -1631,35 +1645,37 @@ def _stage_files(
         # Partitioned writes shuffle ON the partition columns so each
         # output directory gets few well-sized files, not one per task.
         new_rows = _sized(new_rows, partition_cols)
-    stage = os.path.join(target_path, f".stage-{uuid.uuid4().hex}")
+    prefix = "part" if subdir is None else _AUX_PREFIX[subdir]
+    stage = os.path.join(target_path, f".stage-{prefix}-{uuid.uuid4().hex}")
     writer = new_rows.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(stage)
-    staged: list[str] = []
-    rows = 0
-    zone_maps: dict[str, dict] = {}
+    entries: dict = {"add": [], "n": 0, "stats": {}, "sizes": {}, "bloom": {}}
     for dirpath, dirnames, filenames in os.walk(stage):
         dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
         for fn in filenames:
             if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
                 continue
-            md = pq.read_metadata(os.path.join(dirpath, fn))
-            if not md.num_rows:
+            rows, size, zone_map, bloom = _file_meta(os.path.join(dirpath, fn), bloom_cols)
+            if not rows:
                 continue  # left in the stage dir, removed with it
-            rel_dir = os.path.relpath(dirpath, stage)
-            rel = f"part-{uuid.uuid4().hex}.parquet"
-            if rel_dir != ".":
-                rel = os.path.join(rel_dir, rel)
+            # Under ``subdir``, or under the part's Hive partition dirs.
+            rel = os.path.normpath(os.path.join(
+                subdir or "", os.path.relpath(dirpath, stage),
+                f"{prefix}-{uuid.uuid4().hex}.parquet",
+            ))
             os.makedirs(os.path.dirname(os.path.join(target_path, rel)), exist_ok=True)
             os.replace(os.path.join(dirpath, fn), os.path.join(target_path, rel))
-            staged.append(rel)
-            rows += md.num_rows
-            zone_map = _zone_map(md)
-            if zone_map:
-                zone_maps[rel] = zone_map
+            entries["add"].append(rel)
+            entries["n"] += rows
+            entries["sizes"][rel] = size
+            if zone_map and subdir is None:
+                entries["stats"][rel] = zone_map
+            if bloom:
+                entries["bloom"][rel] = bloom
     shutil.rmtree(stage, ignore_errors=True)
-    return staged, rows, zone_maps
+    return entries
 
 
 def _zone_map(md) -> dict[str, list]:
@@ -2008,12 +2024,12 @@ def compact(
         else:
             arranged = snapshot.coalesce(n_parts)
         # size_output=False: layout arranged above (coalesce/cluster).
-        staged, _, stats = _stage_files(arranged, snap, size_output=False)
-        return len(old), staged, {
-            "add": staged,
+        staged = _stage_files(arranged, snap, size_output=False)
+        return len(old), staged["add"], {
+            **staged,
+            "n": 0,  # a compaction changes no rows
             "remove": old,
             "compaction": True,
-            "stats": stats,
             "op": "OPTIMIZE",
         }
 
@@ -2178,9 +2194,9 @@ def restore(
 
     The restore is itself a commit (history is never erased — time
     travel to the pre-restore state keeps working, as in Delta), and
-    it is O(#commits) driver metadata plus footer reads for the
-    re-added row count: at 100 TB nothing re-writes, the manifest just
-    flips adds/removes. Files the target view needs must still exist
+    it is O(#commits) driver metadata plus one open of each re-added
+    file for its row count, size and bloom filters: at 100 TB nothing
+    re-writes, the manifest just flips adds/removes. Files the target view needs must still exist
     (not vacuumed) — missing files raise loudly rather than committing
     a view that cannot be read, the same guard Delta's RESTORE applies
     against its retention window.
@@ -2198,8 +2214,6 @@ def restore(
     target version remain in the read schema and null-fill over
     re-added files.
     """
-    import pyarrow.parquet as pq
-
     if timestamp_ms is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp_ms, not both")
@@ -2296,18 +2310,27 @@ def restore(
         cdc = ins.unionByName(dels) if ins is not None and dels is not None else (
             ins if ins is not None else dels
         )
-        cdc_staged = _stage_cdc_files(cdc, snap)
-        n = sum(pq.read_metadata(os.path.join(target_path, f)).num_rows for f in re_add)
+        staged = _stage_files(cdc, snap, subdir=_CDC_DIR)
+        # The re-added files' rows, sizes and bloom filters (on the
+        # head's index columns), from one open of each.
+        n, sizes, bloom = 0, {}, {}
+        for f in re_add:
+            rows, sizes[f], _, bloom[f] = _file_meta(
+                os.path.join(target_path, f), snap.bloom_cols
+            )
+            n += rows
         # Footer row counts overstate DV-masked files — subtract the
         # target version's kill-list rows for the re-added files.
         masked = _value_counts(target_path, old.kill_lists(re_add), "file")
         n -= sum(masked[f] for f in re_add)
-        return (len(re_add), len(drop)), cdc_staged, {
+        return (len(re_add), len(drop)), staged["add"], {
             "add": re_add,
             "n": n,
             "remove": drop,
             "stats": {f: old.stats[f] for f in re_add if f in old.stats},
-            "cdc": cdc_staged,
+            "sizes": {**sizes, **staged["sizes"]},
+            "bloom": {f: b for f, b in bloom.items() if b},
+            "cdc": staged["add"],
             # Restoring the file view restores the DV state with it —
             # a reset entry replaces the replayed mapping wholesale.
             "dv": {"reset": old_dv, "n": 0} if old_dv != cur_dv else None,
@@ -2336,8 +2359,11 @@ def clone_table(
     copy — the manifest-level mechanics are identical.
 
     Everything the snapshot's logical view depends on is carried: the
-    live file list, zone maps, per-file bloom filters (not rebuilt —
-    linked files keep their indexes), the merged physical schema, the
+    live file list, zone maps, file sizes, per-file bloom filters
+    (linked files keep their indexes; on a bloom-declared table, a file
+    the source never indexed — committed before the declaration — is
+    indexed here, so no clone file is left without one), the merged
+    physical schema, the
     deletion-vector state (as a reset entry), CHECK constraints,
     generated columns, bloom index columns, and the column-mapping
     state (net renames and drops re-emitted as metadata commits). The
@@ -2346,12 +2372,15 @@ def clone_table(
     contract — and the source's vacuum horizon does not carry (every
     linked file is live at the cloned snapshot).
 
-    Cost at 100 TB: O(#files) driver-side metadata + link calls, zero
-    data I/O, no Spark job. Returns the clone's head version.
+    Cost at 100 TB: O(#files) driver-side metadata + link calls, no
+    Spark job, and no data I/O beyond indexing the unindexed files.
+    Returns the clone's head version.
 
     Reference parity: the reference snapshots tables by re-writing
     parquet per ingestion date (load_to_s3.py:16-27); CLONE is the
     table-format-native upgrade of that snapshot step."""
+    import pyarrow.parquet as pq
+
     if timestamp_ms is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp_ms, not both")
@@ -2387,13 +2416,20 @@ def clone_table(
             os.link(os.path.join(src_path, rel), dst_f)
         except OSError:  # cross-device or FS without hardlinks
             shutil.copy2(os.path.join(src_path, rel), dst_f)
+    bloom = {f: b for f, b in snap.blooms.items() if f in fset}
+    if snap.bloom_cols:
+        for rel in files:
+            if rel not in bloom:
+                with pq.ParquetFile(os.path.join(dst_path, rel)) as pf:
+                    bloom[rel] = _bloom_build(pf, snap.bloom_cols)
     struct = snap.schema
     base = {
         "add": files,
         "stats": {f: s for f, s in snap.stats.items() if f in fset},
+        "sizes": {f: b for f, b in snap.sizes.items() if f in fset},
         "schema": json.dumps(struct.jsonValue()) if struct is not None else None,
         "dv": {"reset": dv_state} if dv_state else None,
-        "bloom": {f: b for f, b in snap.blooms.items() if f in fset},
+        "bloom": {f: b for f, b in bloom.items() if b},
         "bloom_cols": snap.bloom_cols or None,
         "constraints_add": snap.constraints,
         "generated_add": snap.generated,
@@ -2420,9 +2456,8 @@ def clone_table(
             replay.append({"drop_col": dict(c["drop_col"])})
     # The clone's log starts empty; a publish that finds its version
     # taken means another writer is creating the same table.
-    empty = Snapshot(dst_path, commits=[])
     for v, actions in enumerate(replay, start=1):
-        if not _try_commit(dst_path, v, {**actions, "op": "CLONE"}, empty):
+        if not _try_commit(dst_path, v, {**actions, "op": "CLONE"}):
             raise RuntimeError(
                 f"clone destination {dst_path} committed concurrently"
             )
@@ -2466,11 +2501,9 @@ def append_txn(
         b = _apply_generated(batch, snap)
         _check_type_conflicts(b, snap)
         _enforce_constraints(b, snap)
-        staged, n, stats = _stage_files(b, snap)
-        return n, staged, {
-            "add": staged,
-            "n": n,
-            "stats": stats,
+        staged = _stage_files(b, snap)
+        return staged["n"], staged["add"], {
+            **staged,
             "schema": json.dumps(b.schema.jsonValue()),
             "txn": {"app": app_id, "version": txn_ver},
             "op": "STREAMING UPDATE",
@@ -2536,13 +2569,11 @@ def merge_append(
         # execution, no cache). On object storage this is a
         # footer-ranged read per file, still far cheaper than
         # recomputing the anti-join for a count().
-        staged, n, stats = _stage_files(new_rows, snap, partition_cols)
-        if n == 0:
-            return 0, staged, None
-        return n, staged, {
-            "add": staged,
-            "n": n,
-            "stats": stats,
+        staged = _stage_files(new_rows, snap, partition_cols)
+        if staged["n"] == 0:
+            return 0, staged["add"], None
+        return staged["n"], staged["add"], {
+            **staged,
             "schema": json.dumps(new_rows.schema.jsonValue()),
             "op": "MERGE APPEND",
         }
@@ -2550,47 +2581,16 @@ def merge_append(
     return _transact(target_path, build, "merge_append", _pre_commit_hook)
 
 
-def _stage_aux_files(
-    df: DataFrame, target_path: str, subdir: str, prefix: str
-) -> list[str]:
-    """Shared stage-then-atomic-rename for auxiliary file families
-    (change data, deletion vectors): write to a dot-hidden staging dir,
-    move each part into ``subdir`` under a unique name, return the
-    table-relative paths."""
-    # Same output-file sizing as _stage_files: CDC/DV families are read
-    # back by feeds and snapshot reads — one near-empty part per
-    # upstream task inflates every later open.
-    df = _sized(df)
-    dest = os.path.join(target_path, subdir)
-    os.makedirs(dest, exist_ok=True)
-    stage = os.path.join(target_path, f".stage-{prefix}-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(stage)
-    staged: list[str] = []
-    for fn in os.listdir(stage):
-        if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
-            continue
-        unique = f"{prefix}-{uuid.uuid4().hex}.parquet"
-        os.replace(os.path.join(stage, fn), os.path.join(dest, unique))
-        staged.append(os.path.join(subdir, unique))
-    shutil.rmtree(stage, ignore_errors=True)
-    return staged
-
-
-def _stage_cdc_files(cdc: DataFrame, snap: Snapshot) -> list[str]:
-    """Write the typed change rows to ``_change_data/`` (underscore
-    prefix: invisible to plain parquet readers and the data-file walk),
-    for the manifest's ``cdc`` entry — physical column names on disk
-    (``table_changes`` translates back on read)."""
-    return _stage_aux_files(_to_physical(cdc, snap), snap.path, _CDC_DIR, "cdc")
-
-
 def _stage_cdc_files_counted(
     cdc: DataFrame, snap: Snapshot
-) -> tuple[list[str], tuple[int, int, int]]:
-    """:func:`_stage_cdc_files` plus the (inserted, updated, deleted)
-    change-type counts of what was staged — ONE vectorized
-    dictionary-column read per staged file, bounded by changed rows
-    per commit (never table size).
+) -> tuple[dict[str, int], tuple[int, int, int]]:
+    """Stage the typed change rows into ``_change_data/`` (underscore
+    prefix: invisible to plain parquet readers and the data-file walk;
+    physical column names on disk, ``table_changes`` translates back on
+    read). Returns the staged files with their sizes, ``{path: bytes}``,
+    and the (inserted, updated, deleted) change-type counts of what was
+    staged — ONE vectorized dictionary-column read per staged file,
+    bounded by changed rows per commit (never table size).
 
     Measured and REJECTED (r16): fusing the counts into the staging
     write with ``df.observe``/CollectMetrics. It works, and it removes
@@ -2604,18 +2604,12 @@ def _stage_cdc_files_counted(
     session-wide landmine, not a local trade-off. The named-observation
     form avoids the manager but leaves no handle to read the metrics
     of a writer's internal QueryExecution."""
-    staged = _stage_cdc_files(cdc, snap)
-    counts = _value_counts(snap.path, staged, _CHANGE_COL)
-    return staged, (counts["insert"], counts["update_postimage"], counts["delete"])
+    sizes = _stage_files(cdc, snap, subdir=_CDC_DIR)["sizes"]
+    counts = _value_counts(snap.path, sizes, _CHANGE_COL)
+    return sizes, (counts["insert"], counts["update_postimage"], counts["delete"])
 
 
-def _stage_dv_files(kill: DataFrame, target_path: str) -> list[str]:
-    """Write kill-list rows — ``(file string, row_index bigint)``, file
-    table-relative — to ``_deletion_vectors/``."""
-    return _stage_aux_files(kill, target_path, _DV_DIR, "dv")
-
-
-def _value_counts(target_path: str, files: Sequence[str], col: str) -> Counter:
+def _value_counts(target_path: str, files: Iterable[str], col: str) -> Counter:
     """Row counts per value of column ``col`` over the table-relative
     parquet ``files`` — one single-column pyarrow read per file, no
     Spark job: change types of change-data files, target files of kill
@@ -2646,21 +2640,33 @@ def _stage_dml(
     the first's straggler tail). Returns ``((inserted, updated,
     deleted), staged, actions)``: ``staged`` lists every file written
     and ``actions`` holds the manifest entries every DML commit shares
-    (``add``, ``stats``, ``cdc`` and ``dv``, the deletion-vector entry
-    or None); the writer adds its own keys."""
+    (``add``, ``stats``, ``bloom``, ``sizes`` of the data and
+    change-data files, ``cdc`` and ``dv``, the deletion-vector entry or
+    None); the writer adds its own keys."""
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_dv = None if kill is None else pool.submit(_stage_dv_files, kill, snap.path)
+        f_dv = None if kill is None else pool.submit(_stage_files, kill, snap, subdir=_DV_DIR)
         f_data = None if data is None else pool.submit(_stage_files, data, snap)
         f_cdc = pool.submit(_stage_cdc_files_counted, cdc, snap)
-        dv_staged = [] if f_dv is None else f_dv.result()
-        added, _, stats = ([], 0, {}) if f_data is None else f_data.result()
-        cdc_staged, counts = f_cdc.result()
+        dv_staged = [] if f_dv is None else f_dv.result()["add"]
+        added = (
+            {"add": [], "stats": {}, "sizes": {}, "bloom": {}}
+            if f_data is None
+            else f_data.result()
+        )
+        cdc_sizes, counts = f_cdc.result()
     dv = None
     if kill is not None:
         masked = _value_counts(snap.path, dv_staged, "file")
         dv = {"add": dv_staged, "files": sorted(masked), "n": masked.total()}
-    actions = {"add": added, "stats": stats, "cdc": cdc_staged, "dv": dv}
-    return counts, added + cdc_staged + dv_staged, actions
+    actions = {
+        "add": added["add"],
+        "stats": added["stats"],
+        "bloom": added["bloom"],
+        "sizes": {**added["sizes"], **cdc_sizes},
+        "cdc": list(cdc_sizes),
+        "dv": dv,
+    }
+    return counts, [*added["add"], *cdc_sizes, *dv_staged], actions
 
 
 def _matched_slice(

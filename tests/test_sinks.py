@@ -1420,7 +1420,6 @@ def test_table_history_describes_every_commit(spark, tmp_path):
     """DESCRIBE HISTORY: one row per commit in version order with the
     recorded operation tag; pre-op-tag commits classify structurally."""
     from stonkwhisperer_spark.sinks.writers import (
-        Snapshot,
         _try_commit,
         add_constraint,
         delete_where,
@@ -1449,7 +1448,7 @@ def test_table_history_describes_every_commit(spark, tmp_path):
     restore(spark, target, version=1)
     vacuum(target, retain_versions=0, unsafe_zero_retention=True)
     # a legacy commit with no op tag → structural classification
-    _try_commit(target, 7, {"compaction": True}, Snapshot(target))
+    _try_commit(target, 7, {"compaction": True})
 
     h = table_history(spark, target).orderBy("version").collect()
     assert [(r.version, r.operation) for r in h] == [
@@ -2296,7 +2295,6 @@ def test_clone_replays_rename_swaps(spark, tmp_path):
     — another writer can legally produce it — so the swap commits are
     laid down directly."""
     from stonkwhisperer_spark.sinks.writers import (
-        Snapshot,
         _try_commit,
         clone_table,
         merge_append,
@@ -2313,7 +2311,7 @@ def test_clone_replays_rename_swaps(spark, tmp_path):
         ]
     ):
         assert _try_commit(
-            src, 2 + i, {"rename": r, "op": "RENAME"}, Snapshot(src)
+            src, 2 + i, {"rename": r, "op": "RENAME"}
         )
     src_rows = {
         (r["url"], r["title"]) for r in read_committed(spark, src).collect()
@@ -2326,51 +2324,36 @@ def test_clone_replays_rename_swaps(spark, tmp_path):
     assert got == src_rows
 
 
-def test_partial_bloom_index_still_indexes_missing_files(spark, tmp_path):
-    """ADVICE-r6: a caller passing a PARTIAL bloom_index to the commit
-    (legitimate for CLONE carrying source filters) must not leave the
-    other added files silently unindexed — the commit builds blooms for
-    every added file absent from the provided map."""
-    from stonkwhisperer_spark.sinks.writers import (
-        Snapshot,
-        _stage_files,
-        _try_commit,
-        merge_append,
-        set_bloom_columns,
-    )
+def test_partial_bloom_index_still_indexes_missing_files(spark, tmp_path, monkeypatch):
+    """A bloom map that covers only some of a commit's added files must
+    not leave the others silently unindexed on a bloom-declared table.
+    CLONE carries such a map: a source file committed before
+    set_bloom_columns has no filter. The clone indexes that file, and
+    carries the source's filter for the other one (not rebuilt)."""
+    from stonkwhisperer_spark.sinks import writers as wr
 
-    target = str(tmp_path / "tbl")
-    df = spark.range(50).select(F.col("id").alias("k"))
-    merge_append(spark, target, df.coalesce(1), ["k"])
-    set_bloom_columns(target, ["k"])
-    snap = Snapshot(target)
-    batch = spark.range(50, 100).select(F.col("id").alias("k")).coalesce(2)
-    # size_output=False: this test NEEDS a two-file staging (a partial
-    # bloom map covering one of two added files); the default sizing
-    # would stage the tiny batch as one part.
-    staged, n, _ = _stage_files(batch, snap, None, size_output=False)
-    assert len(staged) == 2
-    pre = snap.blooms  # source map covering only older files
-    partial = {staged[0]: {"k": {"fake": True}}}  # one of the two new
-    assert _try_commit(
-        target,
-        snap.version + 1,
-        {
-            "add": staged,
-            "n": n,
-            "bloom": partial,
-            "op": "WRITE",
-        },
-        snap,
-    )
-    state = Snapshot(target).blooms
-    for f in staged:
-        assert f in state and "k" in state[f], f"file {f} left unindexed"
-    # the caller-provided entry is honored verbatim, not rebuilt
-    assert state[staged[0]]["k"] == {"fake": True}
-    assert state[staged[1]]["k"] != {"fake": True}
-    for f in pre:
-        assert f in state  # older files' blooms untouched
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    merge_append(spark, src, _articles(spark, n=5).coalesce(1), ["url"])
+    wr.set_bloom_columns(src, ["url"])
+    merge_append(spark, src, _articles(spark, n=5, offset=5).coalesce(1), ["url"])
+    source = wr.Snapshot(src)
+    assert len(source.files) == 2 and len(source.blooms) == 1
+    built = []
+    build = wr._bloom_build
+
+    def counted(*args, **kwargs):
+        built.append(args)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(wr, "_bloom_build", counted)
+    wr.clone_table(src, dst)
+    blooms = wr.Snapshot(dst).blooms
+    assert sorted(blooms) == sorted(source.files)
+    for f in source.files:
+        assert "url" in blooms[f], f"file {f} left unindexed"
+    (indexed,) = source.blooms
+    assert blooms[indexed] == source.blooms[indexed]
+    assert len(built) == 1  # only the unindexed file was read
 
 
 def test_unknown_reader_feature_refuses_to_read(spark, tmp_path):

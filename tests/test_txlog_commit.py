@@ -362,3 +362,87 @@ def test_rewrite_keeps_partition_layout(spark, tmp_path, name):
         key, value = part.split("=")
         ks = pq.read_table(os.path.join(target, f), columns=["k"]).column(0).to_pylist()
         assert key == "grp" and ks and all(k % 2 == int(value) for k in ks), f
+
+
+# ---------------------------------------------------------------------------
+# One metadata pass at stage time: the build records every file's rows,
+# size and filters, publication reads no data file, and no empty
+# change-data or kill-list file is committed.
+# ---------------------------------------------------------------------------
+def test_publish_reads_no_data_file(spark, tmp_path, monkeypatch):
+    """Between stage and publish, opening, statting or reading a data
+    file fails; every commit still lands with ``sizes`` for each added
+    and change-data file and a bloom filter for each added file."""
+    import pyarrow.parquet as pq
+
+    def forbid_data_io():
+        def touched(*args, **kwargs):
+            raise AssertionError(f"publish touched a data file: {args}")
+
+        monkeypatch.setattr(pq, "ParquetFile", touched)
+        monkeypatch.setattr(pq, "read_metadata", touched)
+        monkeypatch.setattr(os.path, "getsize", touched)
+
+    target = str(tmp_path / "t")
+    wr.merge_append(spark, target, _rows(spark, 0, 10), ["k"])
+    wr.set_bloom_columns(target, ["k"])
+    writers = [
+        lambda hook: wr.merge_append(
+            spark, target, _rows(spark, 10, 20), ["k"], _pre_commit_hook=hook
+        ),
+        lambda hook: wr.merge_upsert(
+            spark, target, _rows(spark, 15, 25).withColumn("v", F.col("v") + 1), ["k"],
+            _pre_commit_hook=hook,
+        ),
+        lambda hook: wr.delete_where_dv(spark, target, F.col("k") == 3, _pre_commit_hook=hook),
+    ]
+    for write in writers:
+        head = wr._committed_version(target)
+        write(forbid_data_io)
+        monkeypatch.undo()
+        c = wr._commits(target)[-1]
+        assert c["version"] == head + 1
+        assert c["add"] or c["cdc"]
+        assert sorted(c["sizes"]) == sorted([*c["add"], *c.get("cdc", [])])
+        assert sorted(c.get("bloom", {})) == sorted(c["add"])
+        assert all("k" in c["bloom"][f] for f in c["add"])
+
+
+def test_restore_commits_no_empty_change_data_file(spark, tmp_path):
+    """A RESTORE whose file diff holds no visible row — it drops a file
+    whose rows are all masked — commits no 0-row change-data file, and
+    the change feed holds no row for it."""
+    import pyarrow.parquet as pq
+
+    target = str(tmp_path / "t")
+    wr.merge_append(spark, target, _rows(spark, 1, 3), ["k"])
+    assert wr.delete_where_dv(spark, target, F.col("k") < 3) == 2
+    wr.merge_append(spark, target, _rows(spark, 5, 6), ["k"])
+    assert wr.delete_where_dv(spark, target, F.col("k") == 5) == 1
+    assert wr.restore(spark, target, version=2) == (0, 1)
+    c = wr._commits(target)[-1]
+    assert c["version"] == 5
+    for rel in wr._refs(c):
+        assert pq.read_metadata(os.path.join(target, rel)).num_rows > 0, rel
+    feed = wr.table_changes(spark, target, 4)
+    assert feed is None or feed.count() == 0
+    view_v2 = wr.read_committed(spark, target, version=2)
+    assert _committed_rows(spark, target) == (
+        sorted(tuple(r) for r in view_v2.collect()) if view_v2 is not None else []
+    )
+
+
+def test_restore_of_masked_files_adds_no_feed_rows(spark, tmp_path):
+    """A RESTORE that re-adds a file whose rows were all masked at the
+    target version changes no visible row: it stages no change data,
+    and the feed does not read the re-added file as inserts."""
+    target = str(tmp_path / "t")
+    wr.merge_append(spark, target, _rows(spark, 1, 2), ["k"])
+    assert wr.delete_where_dv(spark, target, F.col("k") == 1) == 1
+    assert wr.compact(spark, target, min_files=1) == 1
+    assert wr.restore(spark, target, version=2) == (1, 0)
+    c = wr._commits(target)[-1]
+    assert c["add"] and c["n"] == 0
+    feed = wr.table_changes(spark, target, 3)
+    assert feed is None or feed.count() == 0
+    assert _committed_rows(spark, target) == []
