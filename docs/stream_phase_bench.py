@@ -85,9 +85,8 @@ def main() -> None:
         mb_times.append(time.perf_counter() - t0)
         return out
 
-    wr.merge_upsert_txn = timed_merge_txn
-    # run_txn_merge_ingest resolves merge_upsert_txn via import inside the
-    # function body — wrap at the writers module is enough.
+    # run_txn_merge_ingest calls the name streaming.jobs imported at load.
+    sj.merge_upsert_txn = timed_merge_txn
 
     for rnd in range(n_rounds):
         PHASES.clear()

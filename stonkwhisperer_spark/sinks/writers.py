@@ -43,7 +43,15 @@ log (the same protocol Delta's transaction log uses):
   * every writer commits through one loop, :func:`_transact`: each
     attempt parses the log once into a :class:`Snapshot`, lets the
     writer stage its files and name its manifest actions against that
-    snapshot, and publishes version ``snapshot.version + 1``;
+    snapshot, and publishes version ``snapshot.version + 1``. Every
+    call parses each table's log once per attempt (a reader once per
+    call): timestamp travel resolves on that same parse
+    (:meth:`Snapshot.version_as_of`);
+  * the ``(app, version)`` transaction ledger (Delta's
+    ``txnAppId``/``txnVersion``) is checked and stamped only by that
+    loop: an attempt whose snapshot already holds the transaction ends
+    the call before the writer builds anything, and a committing
+    attempt records the marker — no writer's build reads or writes it;
   * publication (:func:`_try_commit`) writes the manifest to a temp
     file in ``_txlog/``, fsyncs it, and ``os.link``s it to the version
     name. The link fails if the name exists — put-if-absent, atomic on
@@ -361,8 +369,16 @@ class Snapshot:
             self.path, commits=[c for c in self.commits if c["version"] <= version]
         )
 
-    def readable_as_of(self, version: int | None) -> Snapshot:
-        """:meth:`as_of`, refusing a version below the vacuum horizon."""
+    def readable_as_of(
+        self, version: int | None, timestamp_ms: int | None = None
+    ) -> Snapshot:
+        """:meth:`as_of` ``version``, or the version :meth:`version_as_of`
+        resolves ``timestamp_ms`` to (passing both raises, as in Delta),
+        refusing a version below the vacuum horizon."""
+        if timestamp_ms is not None:
+            if version is not None:
+                raise ValueError("pass version OR timestamp_ms, not both")
+            version = self.version_as_of(timestamp_ms)
         if version is not None:
             self.check_horizon(version, f"version {version}")
         return self.as_of(version)
@@ -620,6 +636,26 @@ class Snapshot:
             ),
             default=None,
         )
+
+    def version_as_of(self, timestamp_ms: int) -> int:
+        """Timestamp-based time travel (Delta's ``timestampAsOf``): the
+        LATEST committed version whose commit timestamp is <= the given
+        epoch-millis instant. Raises if the instant predates the first
+        commit (Delta raises the same way — there is no table state to
+        serve). Driver-side metadata over this parse, no data touched."""
+        if not self.commits:
+            raise ValueError(f"no commits at {self.path}")
+        chosen: int | None = None
+        for c in self.commits:
+            if _commit_ts(self.path, c) <= timestamp_ms:
+                chosen = c["version"]
+        if chosen is None:
+            first = _commit_ts(self.path, self.commits[0])
+            raise ValueError(
+                f"timestamp {timestamp_ms} predates the first commit ({first}) "
+                f"at {self.path}"
+            )
+        return chosen
 
 
 def _to_physical(df: DataFrame, snap: Snapshot) -> DataFrame:
@@ -1363,24 +1399,9 @@ def _commit_ts(target_path: str, c: dict) -> int:
 
 def version_as_of(target_path: str, timestamp_ms: int) -> int:
     """Timestamp-based time travel (Delta's ``timestampAsOf``): the
-    LATEST committed version whose commit timestamp is <= the given
-    epoch-millis instant. Raises if the instant predates the first
-    commit (Delta raises the same way — there is no table state to
-    serve). Driver-side O(#commits) metadata scan, no data touched."""
-    commits = _commits(target_path)
-    if not commits:
-        raise ValueError(f"no commits at {target_path}")
-    chosen: int | None = None
-    for c in commits:
-        if _commit_ts(target_path, c) <= timestamp_ms:
-            chosen = c["version"]
-    if chosen is None:
-        first = _commit_ts(target_path, commits[0])
-        raise ValueError(
-            f"timestamp {timestamp_ms} predates the first commit ({first}) "
-            f"at {target_path}"
-        )
-    return chosen
+    latest version committed at or before ``timestamp_ms`` —
+    :meth:`Snapshot.version_as_of` on one parse of the table's log."""
+    return Snapshot(target_path).version_as_of(timestamp_ms)
 
 
 _MAX_ATTEMPTS = 20  # lost commit races before a writer gives up
@@ -1391,10 +1412,12 @@ def _transact(
     build: Callable[[Snapshot], tuple],
     what: str,
     hook: Callable[[], None] | None = None,
+    txn: dict | None = None,
 ):
     """The one optimistic-commit loop every writer runs. Each attempt
-    parses the log once into a :class:`Snapshot` and calls
-    ``build(snap)``, which returns ``(result, staged, actions)``:
+    parses the log once into a :class:`Snapshot` — the only parse of
+    the table's log the attempt makes — and calls ``build(snap)``,
+    which returns ``(result, staged, actions)``:
     ``staged`` lists the table-relative files it wrote and ``actions``
     the manifest entries to publish, every per-file fact among them
     (rows, sizes, zone maps, bloom filters) already recorded by the
@@ -1407,10 +1430,21 @@ def _transact(
     published, and on a lost race the staged files are deleted and
     ``build`` runs again against a snapshot that holds the winner's
     commit — so it never commits under-informed (a merge recomputes its
-    anti-join, a txn writer sees the winner's marker). Returns
-    ``result``."""
+    anti-join). Returns ``result``.
+
+    ``txn`` (``{"app": ..., "version": ...}``) makes the call an
+    at-most-once transaction, and the ledger is checked and stamped
+    here alone: an attempt whose snapshot already holds ``app`` at
+    ``version`` or higher ends the call before ``build`` runs — nothing
+    is staged and the call returns None — and a committing attempt
+    records ``txn`` in its manifest. Of two racing instances of one app
+    only one lands the transaction: the loser's retry sees the
+    winner's marker."""
     for _ in range(_MAX_ATTEMPTS):
         snap = Snapshot(target_path)
+        seen = snap.txn_version(txn["app"]) if txn is not None else None
+        if seen is not None and seen >= txn["version"]:
+            return None  # this transaction (or a later one) landed
         result, staged, actions = build(snap)
         if actions is not None:
             if actions.get("schema") is not None and snap.colmap:
@@ -1420,7 +1454,7 @@ def _transact(
                 actions["schema"] = json.dumps(schema)
             if hook is not None:
                 hook()
-            if _try_commit(target_path, snap.version + 1, actions):
+            if _try_commit(target_path, snap.version + 1, {**actions, "txn": txn}):
                 return result
         for rel in staged:
             with contextlib.suppress(FileNotFoundError):
@@ -1814,20 +1848,16 @@ def read_committed(
     Pass ``version`` for time travel (the snapshot as of that commit;
     earlier files must not have been vacuumed yet, same rule as Delta's
     retention window) or ``timestamp_ms`` for timestamp-based travel
-    (resolved to a version via :func:`version_as_of`; passing both
-    raises, as in Delta). ``basePath`` keeps partition-directory
-    columns recoverable.
+    (resolved to a version on the same parse of the log,
+    :meth:`Snapshot.version_as_of`; passing both raises, as in Delta).
+    ``basePath`` keeps partition-directory columns recoverable.
 
     Schema comes from the LOG when commits recorded one (the union of
     writer schemas — additive evolution): files written before a column
     existed null-fill it, and no footer round-trip per file is needed
     (the mergeSchema-option cost Delta also avoids by logging schemas).
     """
-    if timestamp_ms is not None:
-        if version is not None:
-            raise ValueError("pass version OR timestamp_ms, not both")
-        version = version_as_of(target_path, timestamp_ms)
-    snap = Snapshot(target_path).readable_as_of(version)
+    snap = Snapshot(target_path).readable_as_of(version, timestamp_ms)
     if not snap.files:
         return None
     return _read_snapshot(spark, snap, snap.files, schema=snap.schema)
@@ -1841,17 +1871,18 @@ def table_changes(
 ) -> DataFrame | None:
     """TYPED change-data-feed read (Delta CDF contract): every row of
     every commit with version > ``from_version``, tagged with
-    ``_change_type`` ∈ {insert, update_preimage, update_postimage}.
-    Insert-only commits derive the feed from their add files directly
-    (zero extra storage — Delta's same optimization for blind appends)
-    and tag every row ``insert``; upsert commits (:func:`merge_upsert`)
-    read the ``_change_data`` parquet files the writer recorded, which
-    carry their own ``_change_type`` column with pre- AND post-image
-    rows for every update. Compaction commits rewrite existing rows
-    without changing table contents, so they are excluded. Incremental
-    consumers poll ``_committed_version`` and read only the delta —
-    the pattern that turns a 100 TB table into a streamable source
-    without rescanning history.
+    ``_change_type`` ∈ {insert, update_preimage, update_postimage,
+    delete}. Insert-only commits derive the feed from their add files
+    directly (zero extra storage — Delta's same optimization for blind
+    appends) and tag every row ``insert``; commits that update or
+    delete rows (merges, DML, restore) read the ``_change_data``
+    parquet files the writer recorded, which carry their own
+    ``_change_type`` column: pre- AND post-image rows for every update,
+    a ``delete`` row for every deleted one. Compaction commits rewrite
+    existing rows without changing table contents, so they are
+    excluded. Incremental consumers poll ``_committed_version`` and
+    read only the delta — the pattern that turns a 100 TB table into a
+    streamable source without rescanning history.
 
     ``with_version=True`` additionally tags every row with its
     originating commit as ``_commit_version`` (Delta CDF's column).
@@ -2140,8 +2171,8 @@ def vacuum(
         if cutoff is None:  # fixed on first attempt; CAS retries re-use it
             if retain_ms is not None:
                 try:
-                    raw_cutoff = version_as_of(
-                        target_path, int(time.time() * 1000) - retain_ms
+                    raw_cutoff = snap.version_as_of(
+                        int(time.time() * 1000) - retain_ms
                     )
                 except ValueError:
                     # The retention window predates the first commit — a
@@ -2214,14 +2245,16 @@ def restore(
     target version remain in the read schema and null-fill over
     re-added files.
     """
-    if timestamp_ms is not None:
-        if version is not None:
-            raise ValueError("pass version OR timestamp_ms, not both")
-        version = version_as_of(target_path, timestamp_ms)
+    if timestamp_ms is not None and version is not None:
+        raise ValueError("pass version OR timestamp_ms, not both")
 
     def build(snap: Snapshot):
+        nonlocal version
         if not snap.commits:
             raise ValueError(f"no commits at {target_path}")
+        if version is None and timestamp_ms is not None:
+            # Resolved on the first attempt's parse; CAS retries re-use it.
+            version = snap.version_as_of(timestamp_ms)
         head = snap.version
         if version is None or version > head:
             raise ValueError(f"restore target {version} not in log (head={head})")
@@ -2381,14 +2414,10 @@ def clone_table(
     table-format-native upgrade of that snapshot step."""
     import pyarrow.parquet as pq
 
-    if timestamp_ms is not None:
-        if version is not None:
-            raise ValueError("pass version OR timestamp_ms, not both")
-        version = version_as_of(src_path, timestamp_ms)
     src = Snapshot(src_path)
     if not src.commits:
         raise ValueError(f"no commits at {src_path}")
-    snap = src.readable_as_of(version)
+    snap = src.readable_as_of(version, timestamp_ms)
     if not snap.commits:
         raise ValueError(
             f"version {version} predates the first commit at {src_path}"
@@ -2488,16 +2517,14 @@ def append_txn(
     gets exactly-once table contents without any key-based dedup.
 
     The already-committed check runs on every commit attempt's
-    snapshot, so of two racing instances of the same app only one
-    lands the transaction. Blind append = no target read at all —
+    snapshot (:func:`_transact`), so of two racing instances of the
+    same app only one lands the transaction. An empty batch still
+    commits its marker. Blind append = no target read at all —
     O(batch) regardless of table size, the cheapest possible write
     path at 100 TB.
     """
 
     def build(snap: Snapshot):
-        seen = snap.txn_version(app_id)
-        if seen is not None and seen >= txn_ver:
-            return 0, [], None  # this transaction (or a later one) already landed
         b = _apply_generated(batch, snap)
         _check_type_conflicts(b, snap)
         _enforce_constraints(b, snap)
@@ -2505,11 +2532,11 @@ def append_txn(
         return staged["n"], staged["add"], {
             **staged,
             "schema": json.dumps(b.schema.jsonValue()),
-            "txn": {"app": app_id, "version": txn_ver},
             "op": "STREAMING UPDATE",
         }
 
-    return _transact(target_path, build, "append_txn", _pre_commit_hook)
+    txn = {"app": app_id, "version": txn_ver}
+    return _transact(target_path, build, "append_txn", _pre_commit_hook, txn) or 0
 
 
 def merge_append(
@@ -2847,8 +2874,8 @@ def merge_upsert_txn(
     a replayed batch would re-update rows a LATER batch already
     rewrote, resurrecting stale values; the txn ledger makes the replay
     structurally a no-op. The marker check runs on every commit
-    attempt's snapshot, so two racing instances of the same app cannot
-    both land one transaction."""
+    attempt's snapshot (:func:`_transact`), so two racing instances of
+    the same app cannot both land one transaction."""
     inserted, updated, _ = _merge_rows(
         spark,
         target_path,
@@ -2916,7 +2943,9 @@ def _merge_rows(
     :func:`merge_sync` / :func:`merge_upsert_txn` /
     :func:`merge_cdc_txn`: copy-on-write file-level rewrite with typed
     CDC. ``nmbs_delete`` adds the WHEN NOT MATCHED BY SOURCE THEN
-    DELETE clause; ``txn`` adds the (app, version) at-most-once marker.
+    DELETE clause; ``txn`` makes the merge an (app, version)
+    at-most-once transaction (:func:`_transact`). A merge that changes
+    no row commits nothing, its marker included.
 
     ``apply_changes`` reads the batch as a change-data batch: rows whose
     ``_change_type`` is ``delete`` are DELETE DIRECTIVES (WHEN MATCHED
@@ -2931,42 +2960,30 @@ def _merge_rows(
     (the CDC change feed) then pays ~6 rounds of Python-worker forks
     per merge, whose cost scales with process RSS: the late-session
     inflation the round-15 micro-batch trace decomposed
-    (docs/BENCH_METHOD.md). The pin happens AFTER the txn-ledger
-    short-circuit so a replayed epoch still executes the batch zero
-    times."""
+    (docs/BENCH_METHOD.md). The pin runs in the build, on the first
+    attempt the txn ledger admits, and CAS retries reuse it: a
+    replayed epoch ends in :func:`_transact` before any build runs, so
+    it executes the batch zero times."""
     key_cols = list(keys)
     batch = batch.dropDuplicates(key_cols)
     delete_keys = None
-    if apply_changes:
-        # At-most-once fast path, hoisted ahead of the pin (the
-        # per-attempt check below still guards retries): a replayed
-        # (app, version) must cost O(#commits) ledger metadata, never
-        # a batch materialization. Scoped to the pinned path — without
-        # the pin there is nothing to execute before the in-loop check,
-        # so the common batch-merge path keeps its one log parse per
-        # attempt (review r15: don't add parses on the hot path).
-        seen = last_txn_version(target_path, txn["app"])
-        if seen is not None and seen >= txn["version"]:
-            return 0, 0, 0
-        # Pin the DEDUPED batch: the key-dedup shuffle folds into the
-        # one materialization instead of re-running on top of the
-        # pinned blocks in every downstream action (discovery, marker
-        # joins, both staging writes — optimization r16, guide §2.4),
-        # and the pinned representative-per-key pick is made exactly
-        # once rather than per-action.
-        batch = batch.localCheckpoint(eager=True)
-        is_directive = F.coalesce(F.col(_CHANGE_COL) == "delete", F.lit(False))
-        delete_keys = batch.filter(is_directive).select(*key_cols)
-        batch = batch.filter(~is_directive).drop(_CHANGE_COL)
     nmbs_true = (
         F.coalesce(nmbs_delete, F.lit(False)) if nmbs_delete is not None else None
     )
 
     def build(snap: Snapshot):
-        if txn is not None:
-            seen = snap.txn_version(txn["app"])
-            if seen is not None and seen >= txn["version"]:
-                return (0, 0, 0), [], None  # this transaction (or a later one) landed
+        nonlocal batch, delete_keys
+        if apply_changes and delete_keys is None:
+            # Pin the DEDUPED batch: the key-dedup shuffle folds into
+            # the one materialization instead of re-running on top of
+            # the pinned blocks in every downstream action (discovery,
+            # marker joins, both staging writes — optimization r16,
+            # guide §2.4), and the pinned representative-per-key pick
+            # is made exactly once rather than per-action.
+            batch = batch.localCheckpoint(eager=True)
+            is_directive = F.coalesce(F.col(_CHANGE_COL) == "delete", F.lit(False))
+            delete_keys = batch.filter(is_directive).select(*key_cols)
+            batch = batch.filter(~is_directive).drop(_CHANGE_COL)
         b = _apply_generated(batch, snap)
         declared = snap.schema
         _check_type_conflicts(b, snap)
@@ -3128,11 +3145,10 @@ def _merge_rows(
             "n": counts[0] + counts[1],
             "remove": matched_files,
             "schema": json.dumps(new_data.schema.jsonValue()),
-            "txn": txn,
             "op": "MERGE",
         }
 
-    return _transact(target_path, build, "merge", _pre_commit_hook)
+    return _transact(target_path, build, "merge", _pre_commit_hook, txn) or (0, 0, 0)
 
 
 def delete_where(

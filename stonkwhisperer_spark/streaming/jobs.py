@@ -32,8 +32,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.window import Window
 
-from stonkwhisperer_spark.sinks.writers import merge_append
+from stonkwhisperer_spark.sinks.writers import (
+    _committed_version,
+    append_txn,
+    merge_append,
+    merge_cdc_txn,
+    merge_upsert_txn,
+)
 
 # Held by _start from foreachBatch to the restore, so two starters on one
 # session cannot restore each other's narrowed width as the original.
@@ -189,8 +196,6 @@ def start_txn_append_stream(
     a 100 TB table (contrast :func:`start_merge_stream`, which pays a
     key anti-join per batch for cross-source dedup). Runs under
     ``Trigger.AvailableNow``: drains the backlog, then stops."""
-    from stonkwhisperer_spark.sinks.writers import append_txn
-
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         append_txn(batch_df.sparkSession, target_path, batch_df, app_id, epoch_id)
 
@@ -237,11 +242,6 @@ def run_txn_merge_ingest(
     copy-on-write MERGE; checkpoint + ledger give exactly-once table
     contents end-to-end; the maintained table is the only state — no
     watermark, no state store."""
-    from stonkwhisperer_spark.sinks.writers import (
-        _committed_version,
-        merge_upsert_txn,
-    )
-
     key_cols = list(keys)
     arms: list[tuple[int, int]] = []
 
@@ -332,10 +332,6 @@ def start_cdc_apply_stream(
     the merge rewrites only the target files owning matched keys —
     end-to-end O(delta) replication for a 100 TB source. Runs under
     ``Trigger.AvailableNow``: drains the feed, then stops."""
-    from pyspark.sql.window import Window
-
-    from stonkwhisperer_spark.sinks.writers import merge_cdc_txn
-
     key_cols = list(keys)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -356,11 +352,12 @@ def start_cdc_apply_stream(
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_commit_version")
         )
-        # merge_cdc_txn pins the reduced batch to JVM-local blocks
-        # AFTER its txn-ledger short-circuit, so a real apply executes
-        # the Python-data-source feed exactly once and a replayed
-        # epoch executes it zero times — see the merge engine's
-        # apply_changes note and docs/BENCH_METHOD.md round 15.
+        # merge_cdc_txn pins the reduced batch to JVM-local blocks once,
+        # on the first commit attempt the txn ledger admits, so a real
+        # apply executes the Python-data-source feed exactly once and a
+        # replayed epoch, stopped by the ledger, executes it zero times
+        # — see the merge engine's apply_changes note and
+        # docs/BENCH_METHOD.md round 15.
         merge_cdc_txn(
             batch_df.sparkSession,
             target_path,
@@ -484,8 +481,6 @@ def run_available_now(
     Scale: one driver-side blocking await plus O(1) log metadata; no
     polling, no empty micro-batches — the wrapper terminates the query
     the moment the captured offset is reached."""
-    from stonkwhisperer_spark.sinks.writers import _committed_version
-
     head = _committed_version(table_path)
     if not query.awaitTermination(timeout_sec):
         query.stop()
@@ -539,8 +534,6 @@ def drain_until_caught_up(
     Scale: pure driver-side progress polling — no extra Spark jobs, no
     data reads beyond what the stream itself plans."""
     import time as _time
-
-    from stonkwhisperer_spark.sinks.writers import _committed_version
 
     head = _committed_version(table_path)
     deadline = _time.monotonic() + timeout_sec

@@ -5,9 +5,11 @@ triggers drain the backlog so tests are deterministic."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from stonkwhisperer_spark.streaming import jobs
 from stonkwhisperer_spark.streaming.jobs import (
     dedup_within_watermark,
     minute_bars,
@@ -526,6 +528,142 @@ def test_txn_append_stream_exactly_once(spark, tmp_path):
 
     run(str(tmp_path / "ckpt2"))  # full replay, fresh checkpoint
     assert read_committed(spark, target).count() == 5  # no duplicates
+
+
+class _CommitThenCrash:
+    """Stands in for the writer a stream sink calls. Every call runs the
+    writer and records its result; the second call, epoch 1, then
+    raises, so the query fails after the table commit and before its
+    commit log records the epoch."""
+
+    def __init__(self, writer):
+        self.writer, self.results = writer, []
+
+    def __call__(self, *args, **kwargs):
+        self.results.append(self.writer(*args, **kwargs))
+        if len(self.results) == 2:
+            raise RuntimeError("crash between the table commit and the commit log")
+        return self.results[-1]
+
+
+def _run(q, crashes: bool = False) -> None:
+    """Wait for an availableNow query to end: by the crash, or cleanly."""
+    try:
+        if crashes:
+            with pytest.raises(StreamingQueryException, match="crash between"):
+                q.awaitTermination(120)
+        else:
+            assert q.awaitTermination(120)
+            assert q.exception() is None
+    finally:
+        q.stop()
+
+
+def test_merge_stream_restart_replays_committed_epoch_as_zero_rows(
+    spark, landing, tmp_path, monkeypatch
+):
+    """start_merge_stream restarted on its checkpoint after a crash
+    between epoch 1's table commit and the query's commit log: the
+    replayed epoch's anti-join inserts 0 rows and commits nothing."""
+    from stonkwhisperer_spark.sinks.writers import _committed_version, read_committed
+
+    target, ckpt = str(tmp_path / "articles"), str(tmp_path / "ckpt")
+    sink = _CommitThenCrash(jobs.merge_append)
+    monkeypatch.setattr(jobs, "merge_append", sink)
+
+    def start():
+        stream = read_landing_stream(spark, landing, NEWS_SCHEMA, max_files_per_trigger=1)
+        deduped = dedup_within_watermark(stream, ["url"], "published_at")
+        return start_merge_stream(deduped, target, ["url"], ckpt)
+
+    _run(start(), crashes=True)
+    assert sink.results == [2, 1]
+    head = _committed_version(target)
+    _run(start())
+    # The replayed epoch 1, and any no-data batch after it, insert 0.
+    assert sink.results[2] == 0 and sum(sink.results[2:]) == 0
+    assert _committed_version(target) == head
+    urls = read_committed(spark, target).select("url")
+    assert urls.count() == 3 and urls.distinct().count() == 3
+
+
+def test_txn_append_stream_restart_replays_committed_epoch_as_no_op(
+    spark, tmp_path, monkeypatch
+):
+    """start_txn_append_stream restarted on its checkpoint after a crash
+    between epoch 1's table commit and the query's commit log: the
+    ledger already holds (app, 1), so the replay lands 0 rows and
+    commits no version."""
+    import datetime as dt
+
+    from stonkwhisperer_spark.sinks.writers import _committed_version, read_committed
+    from stonkwhisperer_spark.streaming.jobs import start_txn_append_stream
+
+    t0 = dt.datetime(2024, 1, 1, 9, 0, 0)
+    landing, target, ckpt = (str(tmp_path / n) for n in ("landing", "tbl", "ckpt"))
+    _drop(spark, landing, [(f"u/{i}", "t", t0) for i in range(3)])
+    _drop(spark, landing, [(f"u/{i}", "t", t0) for i in range(3, 5)])
+    sink = _CommitThenCrash(jobs.append_txn)
+    monkeypatch.setattr(jobs, "append_txn", sink)
+
+    def start():
+        stream = read_landing_stream(spark, landing, NEWS_SCHEMA, max_files_per_trigger=1)
+        return start_txn_append_stream(stream, target, "news-ingest", ckpt)
+
+    _run(start(), crashes=True)
+    assert sink.results == [3, 2]
+    head = _committed_version(target)
+    _run(start())
+    assert sink.results[2:] == [0]
+    assert _committed_version(target) == head
+    assert read_committed(spark, target).count() == 5
+
+
+def test_cdc_apply_stream_restart_replays_committed_epoch_as_no_op(
+    spark, tmp_path, monkeypatch
+):
+    """start_cdc_apply_stream restarted on its checkpoint after a crash
+    between epoch 1's replica commit and the query's commit log: the
+    replica's ledger already holds (app, 1), so the replay applies
+    nothing and commits no version, and the replica holds exactly the
+    source's keys."""
+    from stonkwhisperer_spark.sinks.writers import (
+        _committed_version,
+        delete_where,
+        merge_append,
+        merge_upsert,
+        read_committed,
+    )
+    from stonkwhisperer_spark.sources.txlog_stream import TxlogChangeFeedDataSource
+    from stonkwhisperer_spark.streaming.jobs import start_cdc_apply_stream
+
+    try:
+        spark.dataSource.register(TxlogChangeFeedDataSource)
+    except Exception:  # noqa: BLE001 — already registered in this session
+        pass
+    source, replica, ckpt = (str(tmp_path / n) for n in ("source", "replica", "ckpt"))
+
+    def rows(ks, v):
+        return spark.createDataFrame([(k, v) for k in ks], "k long, v string")
+
+    sink = _CommitThenCrash(jobs.merge_cdc_txn)
+    monkeypatch.setattr(jobs, "merge_cdc_txn", sink)
+
+    def drain(crashes: bool = False) -> None:
+        _run(start_cdc_apply_stream(spark, source, replica, ["k"], "repl", ckpt), crashes)
+
+    merge_append(spark, source, rows(range(5), "v0"), ["k"])
+    drain()  # epoch 0: the insert
+    merge_upsert(spark, source, rows(range(3, 7), "v1"), ["k"])
+    delete_where(spark, source, F.col("k") == 0)
+    drain(crashes=True)  # epoch 1: the upsert and the delete
+    assert sink.results == [(5, 0, 0), (2, 2, 1)]
+    head = _committed_version(replica)
+    drain()  # replays epoch 1
+    assert sink.results[2:] == [(0, 0, 0)]
+    assert _committed_version(replica) == head
+    got = {r.k: r.v for r in read_committed(spark, replica).collect()}
+    assert got == {1: "v0", 2: "v0", 3: "v1", 4: "v1", 5: "v1", 6: "v1"}
 
 
 def test_run_txn_merge_ingest_drains_and_replays_noop(spark, tmp_path):

@@ -446,3 +446,72 @@ def test_restore_of_masked_files_adds_no_feed_rows(spark, tmp_path):
     feed = wr.table_changes(spark, target, 3)
     assert feed is None or feed.count() == 0
     assert _committed_rows(spark, target) == []
+
+
+# ---------------------------------------------------------------------------
+# The transaction ledger lives in the commit loop, and every call parses
+# each table's log once per attempt.
+# ---------------------------------------------------------------------------
+def _changes(spark, lo, hi):
+    return _rows(spark, lo, hi).withColumn("_change_type", F.lit("insert"))
+
+
+@pytest.fixture(scope="module")
+def ledger_table(spark, tmp_path_factory):
+    """A txn merge of keys 0-4 as ("repl", 0), then a plain merge of 5-9;
+    returns the path and the first commit's timestamp."""
+    path = str(tmp_path_factory.mktemp("ledger") / "base")
+    assert wr.merge_cdc_txn(spark, path, _changes(spark, 0, 5), ["k"], "repl", 0) == (5, 0, 0)
+    wr.merge_append(spark, path, _rows(spark, 5, 10), ["k"])
+    return path, wr._commits(path)[0]["ts"]
+
+
+PARSE_CASES = {
+    "merge_cdc_txn": lambda s, t, ts: wr.merge_cdc_txn(s, t, _changes(s, 3, 12), ["k"], "repl", 1),
+    "merge_cdc_txn_replay": lambda s, t, ts: wr.merge_cdc_txn(s, t, _changes(s, 3, 12), ["k"], "repl", 0),
+    "read_committed": lambda s, t, ts: wr.read_committed(s, t, timestamp_ms=ts),
+    "restore": lambda s, t, ts: wr.restore(s, t, timestamp_ms=ts),
+    "vacuum": lambda s, t, ts: wr.vacuum(t, retain_ms=1),
+    "clone_table": lambda s, t, ts: wr.clone_table(t, f"{t}-clone", timestamp_ms=ts),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PARSE_CASES))
+def test_one_log_parse_per_table_per_attempt(spark, tmp_path, monkeypatch, ledger_table, name):
+    """A txn merge (fresh or replayed) and timestamp travel parse each
+    table's log once: the ledger check and the timestamp resolve on the
+    attempt's own snapshot. A clone parses its source and its
+    destination once each."""
+    base, ts = ledger_table
+    target = str(tmp_path / "t")
+    shutil.copytree(base, target)
+    parse, parses = wr._commits, {}
+
+    def counted(path, *args, **kwargs):
+        parses[path] = parses.get(path, 0) + 1
+        return parse(path, *args, **kwargs)
+
+    monkeypatch.setattr(wr, "_commits", counted)
+    PARSE_CASES[name](spark, target, ts)
+    monkeypatch.undo()
+    tables = [target, f"{target}-clone"] if name == "clone_table" else [target]
+    assert parses == dict.fromkeys(tables, 1)
+
+
+def test_replayed_merge_cdc_txn_executes_its_batch_zero_times(spark, tmp_path):
+    """A replayed (app, version) ends at the ledger before the batch is
+    pinned: a batch whose evaluation raises is never evaluated, the
+    replay returns (0, 0, 0) and the committed version does not move."""
+    target = str(tmp_path / "t")
+    assert wr.merge_cdc_txn(spark, target, _changes(spark, 0, 5), ["k"], "repl", 0) == (5, 0, 0)
+    head = wr._committed_version(target)
+
+    @F.udf("long")
+    def boom(k):
+        raise RuntimeError("the replayed batch was evaluated")
+
+    replay = _changes(spark, 0, 5).withColumn("v", boom("k"))
+    with pytest.raises(Exception, match="the replayed batch was evaluated"):
+        replay.collect()
+    assert wr.merge_cdc_txn(spark, target, replay, ["k"], "repl", 0) == (0, 0, 0)
+    assert wr._committed_version(target) == head
