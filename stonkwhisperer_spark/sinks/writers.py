@@ -24,8 +24,10 @@ so the writers carry their own minimal optimistic-concurrency commit
 log (the same protocol Delta's transaction log uses):
 
   * data files are uniquely-named parquet parts in the table root, or
-    under its Hive partition directories — plain
-    ``spark.read.parquet(path)`` keeps working;
+    under its Hive partition directories. :func:`read_committed` is the
+    table's view; a plain ``spark.read.parquet(path)`` is not: it also
+    reads the files a later commit removed (until a vacuum reclaims
+    them) and the rows that deletion vectors mask;
   * every writing path stages its data, change-data and kill-list
     files through :func:`_stage_files`, which keeps three rules: a
     rewrite stages under the table's layout — the partition keys in
@@ -424,23 +426,31 @@ class Snapshot:
                 keep.update(_refs(c))
         return keep
 
-    def changes(self, after: int) -> list[tuple[dict, bool, list[str]]]:
+    def changes(
+        self, after: int
+    ) -> list[tuple[dict, bool, list[str], dict[str, list[str]]]]:
         """The change feed's files, per commit after version ``after``,
-        as ``(commit, is_cdc, files)``. A commit that wrote typed
+        as ``(commit, is_cdc, files, masks)``. A commit that wrote typed
         change-data files contributes them (carried-over rows of a
         rewrite are not changes); any other commit contributes its
-        added files, every row an insert. Compaction commits change no
-        rows and are skipped, as are commits that add nothing and
-        RESTORE commits without change data (their re-added rows were
-        all masked at the target version: no visible row changed)."""
+        added files, every visible row an insert. ``masks`` maps each of
+        those added files that the commit's own deletion-vector reset
+        masks (CLONE of a table with deletion vectors) to its kill
+        lists: the feed must drop those rows, as a read of that version
+        does. Compaction commits change no rows and are skipped, as are
+        commits that add nothing and RESTORE commits without change
+        data (their re-added rows were all masked at the target
+        version: no visible row changed)."""
         out = []
         for c in self.commits:
             if c["version"] <= after or c.get("compaction"):
                 continue
             if c.get("cdc"):
-                out.append((c, True, c["cdc"]))
+                out.append((c, True, c["cdc"], {}))
             elif c["add"] and "restore" not in c:
-                out.append((c, False, c["add"]))
+                reset = (c.get("dv") or {}).get("reset", {})
+                masks = {f: reset[f] for f in c["add"] if reset.get(f)}
+                out.append((c, False, c["add"], masks))
         return out
 
     @cached_property
@@ -842,6 +852,31 @@ def _file_uri(target_path: str, rel: str) -> str:
     )
 
 
+def _drop_masked(
+    spark: SparkSession,
+    target_path: str,
+    df: DataFrame,
+    masks: dict[str, list[str]],
+) -> DataFrame:
+    """``df``, read with lineage (:func:`_read_files`), minus the rows
+    that the kill lists in ``masks`` (``{data file: [kill lists]}``)
+    mask in their data files."""
+    uri_map = spark.createDataFrame(
+        [(f, _file_uri(target_path, f)) for f in masks],
+        "file string, file_uri string",
+    )
+    kill_lists = dict.fromkeys(d for dvs in masks.values() for d in dvs)
+    kill = (
+        spark.read.parquet(*[os.path.join(target_path, d) for d in kill_lists])
+        .join(F.broadcast(uri_map), "file")
+        .select(
+            F.col("file_uri").alias(_FP_COL),
+            F.col("row_index").alias(_RI_COL),
+        )
+    )
+    return df.join(F.broadcast(kill), [_FP_COL, _RI_COL], "left_anti")
+
+
 def _read_snapshot(
     spark: SparkSession,
     snap: Snapshot,
@@ -868,9 +903,8 @@ def _read_snapshot(
     callers that need per-row file identity (touched-file discovery in
     the merge writers)."""
     target_path = snap.path
-    targeted = sorted(f for f in files if snap.dv.get(f))
-    dv_files = snap.kill_lists(targeted)
-    need_lineage = keep_lineage or bool(targeted)
+    masks = {f: snap.dv[f] for f in sorted(files) if snap.dv.get(f)}
+    need_lineage = keep_lineage or bool(masks)
     dropped = snap.dropped
     if schema is not None and dropped:
         # Logically-dropped columns are pruned AT THE SCAN (explicit
@@ -882,22 +916,8 @@ def _read_snapshot(
             [f for f in schema.fields if f.name not in dropped]
         )
     df = _read_files(spark, target_path, files, schema=schema, lineage=need_lineage)
-    if targeted:
-        uri_map = spark.createDataFrame(
-            [(f, _file_uri(target_path, f)) for f in targeted],
-            "file string, file_uri string",
-        )
-        kill = (
-            spark.read.parquet(
-                *[os.path.join(target_path, d) for d in dv_files]
-            )
-            .join(F.broadcast(uri_map), "file")
-            .select(
-                F.col("file_uri").alias(_FP_COL),
-                F.col("row_index").alias(_RI_COL),
-            )
-        )
-        df = df.join(F.broadcast(kill), [_FP_COL, _RI_COL], "left_anti")
+    if masks:
+        df = _drop_masked(spark, target_path, df, masks)
     if need_lineage and not keep_lineage:
         df = df.drop(_FP_COL, _RI_COL)
     # Column mapping: files store physical names; every consumer sees
@@ -1874,7 +1894,9 @@ def table_changes(
     ``_change_type`` ∈ {insert, update_preimage, update_postimage,
     delete}. Insert-only commits derive the feed from their add files
     directly (zero extra storage — Delta's same optimization for blind
-    appends) and tag every row ``insert``; commits that update or
+    appends) and tag every row ``insert``, less the rows that the
+    commit's own deletion-vector reset masks (a CLONE of a table with
+    deletion vectors links masked files whole); commits that update or
     delete rows (merges, DML, restore) read the ``_change_data``
     parquet files the writer recorded, which carry their own
     ``_change_type`` column: pre- AND post-image rows for every update,
@@ -1901,7 +1923,7 @@ def table_changes(
     snap.check_horizon(from_version, f"change feed from version {from_version}")
     evolved = snap.schema
     parts: list[DataFrame] = []
-    for c, is_cdc, files in snap.changes(from_version):
+    for c, is_cdc, files, masks in snap.changes(from_version):
         if is_cdc:
             # Change-data files are flat (partition columns are physical
             # there) and carry _change_type — no basePath needed.
@@ -1915,8 +1937,13 @@ def table_changes(
             part = reader.parquet(*[os.path.join(target_path, rel) for rel in files])
         else:
             part = _read_files(
-                spark, target_path, files, schema=evolved
-            ).withColumn(_CHANGE_COL, F.lit("insert"))
+                spark, target_path, files, schema=evolved, lineage=bool(masks)
+            )
+            if masks:
+                part = _drop_masked(spark, target_path, part, masks).drop(
+                    _FP_COL, _RI_COL
+                )
+            part = part.withColumn(_CHANGE_COL, F.lit("insert"))
         if with_version:
             part = part.withColumn(
                 "_commit_version", F.lit(c["version"]).cast("bigint")

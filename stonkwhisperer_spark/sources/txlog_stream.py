@@ -88,10 +88,18 @@ class _FilePartition(InputPartition):
     of one per near-empty file (each Python-source task forks a worker,
     the dominant fixed cost of a small micro-batch), while a catch-up
     window over large files still fans out to one task per ~target
-    bytes (optimization r15, guide §6/§2.2)."""
+    bytes (optimization r15, guide §6/§2.2). ``masks`` maps a file
+    whose adding commit masks some of its rows (the deletion-vector
+    reset of a CLONE) to ``(table-relative name, kill-list paths)``;
+    the group keeps the entries of its own files."""
 
-    def __init__(self, files: list[tuple[str, int, bool]]):
+    def __init__(
+        self,
+        files: list[tuple[str, int, bool]],
+        masks: dict[str, tuple[str, list[str]]],
+    ):
         self.files = files
+        self.masks = {path: masks[path] for path, _, _ in files if path in masks}
 
 
 def _table_schema(path: str) -> StructType:
@@ -226,8 +234,14 @@ class _TxlogStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         self._current = max(self._current, start["version"], end["version"])
         entries: list[tuple[str, int, bool, int | None]] = []
+        masks: dict[str, tuple[str, list[str]]] = {}
         feed = Snapshot(self._path, end["version"]).changes(start["version"])
-        for c, is_cdc, files in feed:
+        for c, is_cdc, files, kills in feed:
+            for rel, dvs in kills.items():
+                masks[os.path.join(self._path, rel)] = (
+                    rel,
+                    [os.path.join(self._path, d) for d in dvs],
+                )
             # File sizes come from the commit manifest (recorded at
             # write time, r16): zero per-poll stat syscalls for commits
             # that carry them, and replay-stable packing even after a
@@ -260,12 +274,12 @@ class _TxlogStreamReader(DataSourceStreamReader):
                     sz = self._max_part_bytes  # unstatable: isolate it
             cost = sz + self._open_cost_bytes
             if group and group_bytes + cost > self._max_part_bytes:
-                parts.append(_FilePartition(group))
+                parts.append(_FilePartition(group, masks))
                 group, group_bytes = [], 0
             group.append((path, version, cdc))
             group_bytes += cost
         if group:
-            parts.append(_FilePartition(group))
+            parts.append(_FilePartition(group, masks))
         return parts
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -274,12 +288,26 @@ class _TxlogStreamReader(DataSourceStreamReader):
         # (null-filling fields a file predates — additive schema
         # evolution), cast to the declared types, append the change tag
         # (from the file for change-data files, literal 'insert' for
-        # add files) and the commit tag.
+        # add files) and the commit tag. Rows that the adding commit's
+        # kill lists mask are dropped, as a read of that version drops
+        # them.
+        import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         for path, version, cdc in partition.files:
             pf = pq.ParquetFile(path)
+            dead, row = None, 0
+            if path in partition.masks:
+                rel, kill_lists = partition.masks[path]
+                dead = np.concatenate(
+                    [
+                        pq.read_table(
+                            k, columns=["row_index"], filters=[("file", "==", rel)]
+                        )["row_index"].to_numpy()
+                        for k in kill_lists
+                    ]
+                )
             present = set(pf.schema_arrow.names)
             want = [
                 self._phys[n] for n in self._fields if self._phys[n] in present
@@ -287,6 +315,10 @@ class _TxlogStreamReader(DataSourceStreamReader):
             if cdc:
                 want = want + [CHANGE_COL]
             for batch in pf.iter_batches(columns=want):
+                if dead is not None:
+                    live = ~np.isin(np.arange(row, row + batch.num_rows), dead)
+                    row += batch.num_rows
+                    batch = batch.filter(pa.array(live))
                 arrays = []
                 for name in self._fields:
                     typ = self._arrow_schema.field(name).type

@@ -43,8 +43,43 @@ from stonkwhisperer_spark.sinks.writers import (
 )
 
 # Held by _start from foreachBatch to the restore, so two starters on one
-# session cannot restore each other's narrowed width as the original.
+# session cannot restore each other's narrowed settings as the originals.
 _START_LOCK = threading.Lock()
+
+_WIDTH = "spark.sql.shuffle.partitions"
+_NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+# Logical nodes that output a row only for an input row of the same
+# micro-batch: a plan of these alone emits nothing in a batch that reads
+# no input. The dedups evict state on watermark advance but emit nothing
+# then. Every other node (an aggregate, a join, arbitrary state) may emit
+# when the watermark passes, so it keeps the session's setting.
+_SILENT_WITHOUT_INPUT = frozenset(
+    {
+        "Project",
+        "Filter",
+        "SubqueryAlias",
+        "EventTimeWatermark",
+        "Deduplicate",
+        "DeduplicateWithinWatermark",
+        "StreamingRelation",
+        "StreamingRelationV2",
+    }
+)
+
+
+def _silent_without_input(stream_df: DataFrame) -> bool:
+    """Whether every node of ``stream_df``'s analyzed plan is in
+    :data:`_SILENT_WITHOUT_INPUT`, so a no-data micro-batch of its query
+    can output no row."""
+    stack = [stream_df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() not in _SILENT_WITHOUT_INPUT:
+            return False
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return True
 
 
 def _start(
@@ -65,20 +100,44 @@ def _start(
     the state stores and every shuffle inside ``foreachBatch`` run at
     it, and a restart from an existing checkpoint keeps the width that
     checkpoint was first started with. A session setting below the
-    slot count wins. The session's own setting is narrowed only while
-    the query starts and is restored whether ``start()`` returns or
-    raises; a batch query that another thread plans on the same session
-    inside that window plans at the narrowed width.
+    slot count wins.
+
+    A query whose analyzed plan cannot output a row without new input
+    (every node in :data:`_SILENT_WITHOUT_INPUT`: projections, filters,
+    watermarks, dedups and the stream relation) also starts with
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false``. Spark
+    then runs no micro-batch that reads no input only to advance the
+    watermark: a dedup evicts its expired keys at the next data batch
+    instead, and its committed rows are the same. Any other node, such
+    as the aggregate of :func:`minute_bars`, keeps the session's
+    setting, because a window that only the watermark's advance closes
+    is emitted by a no-data batch. The rule is not moved into the sink
+    (returning early from an empty batch): a ``foreachBatch`` sink that
+    does not evaluate a stateful batch fails the query in Spark 4.1.2
+    with ``stateStoreCommitValidationFailed``, so the stateful operator
+    must run on every batch that Spark starts. Spark reads this setting
+    when the query starts, not from the checkpoint, so a restart
+    decides it again.
+
+    The session's own settings are changed only while the query starts
+    and are restored whether ``start()`` returns or raises; a batch
+    query that another thread plans on the same session inside that
+    window plans at the narrowed width.
 
     The lock also covers ``foreachBatch``: its first call in a process
     starts PySpark's callback server by an unguarded check-then-act,
     which concurrent first calls race on."""
     spark = stream_df.sparkSession
-    key = "spark.sql.shuffle.partitions"
+    silent = _silent_without_input(stream_df)
     with _START_LOCK:
-        prev = spark.conf.get(key)
-        spark.conf.set(key, str(min(int(prev), spark.sparkContext.defaultParallelism)))
+        width = spark.conf.get(_WIDTH)
+        start_with = {_WIDTH: str(min(int(width), spark.sparkContext.defaultParallelism))}
+        if silent:
+            start_with[_NO_DATA] = "false"
+        prev = {key: spark.conf.get(key) for key in start_with}
         try:
+            for key, value in start_with.items():
+                spark.conf.set(key, value)
             writer = (
                 stream_df.writeStream.foreachBatch(sink)
                 .option("checkpointLocation", checkpoint)
@@ -86,7 +145,8 @@ def _start(
             )
             return (writer.trigger(**trigger) if trigger else writer).start()
         finally:
-            spark.conf.set(key, prev)
+            for key, value in prev.items():
+                spark.conf.set(key, value)
 
 
 def read_landing_stream(
@@ -158,7 +218,15 @@ def start_merge_stream(
     ``available_now=True`` drains the backlog then stops (the batch-
     shaped trigger used in tests and backfills);
     ``processing_time='5 seconds'`` instead runs continuously, firing a
-    micro-batch per interval — the long-lived ingest deployment shape."""
+    micro-batch per interval — the long-lived ingest deployment shape.
+
+    Over :func:`dedup_within_watermark` (or any plan that cannot output
+    a row without input, see :func:`_start`) the query runs no no-data
+    micro-batch: a drain of N drops is N micro-batches, and the dedup
+    evicts expired keys at the next data batch instead of in a batch of
+    its own. The sink always merges the batch Spark hands it; returning
+    early from an empty one fails a stateful query in Spark 4.1.2
+    (``stateStoreCommitValidationFailed``)."""
 
     def sink(batch_df: DataFrame, _epoch: int) -> None:
         merge_append(batch_df.sparkSession, target_path, batch_df, keys)

@@ -2282,6 +2282,45 @@ def test_clone_carries_constraints_and_dv(spark, tmp_path):
         merge_append(spark, dst, bad, ["url"])
 
 
+def test_clone_change_feed_omits_masked_rows(spark, tmp_path):
+    """A CLONE of a table with deletion vectors links the masked files
+    whole. Its change feed from version 0, batch and streaming, must
+    apply the clone commit's own kill lists: inserts for exactly the
+    rows the clone reads."""
+    from stonkwhisperer_spark.sinks.writers import (
+        clone_table,
+        delete_where_dv,
+        read_committed,
+        table_changes,
+    )
+    from stonkwhisperer_spark.sources.txlog_stream import _table_schema, _TxlogStreamReader
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    rows = spark.createDataFrame([(k, f"v{k}") for k in range(5)], "k long, v string")
+    merge_append(spark, src, rows, ["k"])
+    delete_where_dv(spark, src, F.col("k") < 2)
+    clone_table(src, dst)
+    assert sorted(r.k for r in read_committed(spark, dst).collect()) == [2, 3, 4]
+    feed = table_changes(spark, dst, 0).collect()
+    assert sorted((r.k, r._change_type) for r in feed) == [
+        (2, "insert"),
+        (3, "insert"),
+        (4, "insert"),
+    ]
+    reader = _TxlogStreamReader(_table_schema(dst), {"path": dst})
+    streamed = [
+        row
+        for p in reader.partitions(reader.initialOffset(), reader.latestOffset())
+        for rb in reader.read(p)
+        for row in rb.to_pylist()
+    ]
+    assert sorted((r["k"], r["_change_type"]) for r in streamed) == [
+        (2, "insert"),
+        (3, "insert"),
+        (4, "insert"),
+    ]
+
+
 def test_clone_replays_rename_swaps(spark, tmp_path):
     """ADVICE-r6: a rename cycle (a->t, b->a, t->b, i.e. swap url/title)
     nets to {url: title, title: url}; replayed as direct renames those

@@ -45,16 +45,21 @@ def landing(spark, tmp_path):
             ("u/2", "b-dup-in-stream", t0),  # in-stream dup (same key)
         ],
     )
-    _drop(spark, path, [("u/3", "c", t0), ("u/1", "a-cross-file-dup", t0)])
+    # Five minutes later: the watermark advances after the last batch.
+    t1 = t0 + dt.timedelta(minutes=5)
+    _drop(spark, path, [("u/3", "c", t1), ("u/1", "a-cross-file-dup", t1)])
     return path
 
 
 def test_stream_dedup_and_merge(spark, landing, tmp_path):
+    """A dedup-only stream runs one micro-batch per drop and no no-data
+    batch after them: its plan cannot output a row without input."""
     target = str(tmp_path / "articles")
     stream = read_landing_stream(spark, landing, NEWS_SCHEMA, max_files_per_trigger=1)
     deduped = dedup_within_watermark(stream, ["url"], "published_at", "10 minutes")
     q = start_merge_stream(deduped, target, ["url"], str(tmp_path / "ckpt"))
     q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress] == [3, 2]
     out = spark.read.parquet(target)
     assert out.count() == 3  # u/1, u/2, u/3 exactly once
     assert out.select("url").distinct().count() == 3
@@ -98,11 +103,12 @@ def test_stream_commits_stage_one_file_each(spark, tmp_path):
 
 
 WIDTH = "spark.sql.shuffle.partitions"
+NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
-def _merge_drain(spark, landing, target, ckpt) -> int:
+def _merge_drain(spark, landing, target, ckpt) -> list[dict]:
     """Drain ``landing`` through start_merge_stream over the watermarked
-    dedup; returns the state partitions the query reported."""
+    dedup; returns the query's progress, one entry per micro-batch."""
     stream = read_landing_stream(spark, landing, NEWS_SCHEMA, max_files_per_trigger=1)
     q = start_merge_stream(
         dedup_within_watermark(stream, ["url"], "published_at"), target, ["url"], ckpt
@@ -112,17 +118,23 @@ def _merge_drain(spark, landing, target, ckpt) -> int:
     finally:
         q.stop()
     assert q.exception() is None
-    return q.recentProgress[-1]["stateOperators"][0]["numShufflePartitions"]
+    return q.recentProgress
+
+
+def _width(progress: list[dict]) -> int:
+    """The state partitions a drain's query reported."""
+    return progress[-1]["stateOperators"][0]["numShufflePartitions"]
 
 
 def test_stream_starts_at_task_slot_width(spark, landing, tmp_path):
     """A stream starts at min(session width, task slots): one state store
     per slot, not one per batch shuffle partition. The session's own
-    setting is left as it was."""
-    before = spark.conf.get(WIDTH)
-    width = _merge_drain(spark, landing, str(tmp_path / "articles"), str(tmp_path / "ckpt"))
-    assert spark.conf.get(WIDTH) == before
-    assert width == min(int(before), spark.sparkContext.defaultParallelism)
+    settings, the width and the no-data batch switch, are left as they
+    were."""
+    before, no_data = spark.conf.get(WIDTH), spark.conf.get(NO_DATA)
+    progress = _merge_drain(spark, landing, str(tmp_path / "articles"), str(tmp_path / "ckpt"))
+    assert (spark.conf.get(WIDTH), spark.conf.get(NO_DATA)) == (before, no_data)
+    assert _width(progress) == min(int(before), spark.sparkContext.defaultParallelism)
 
 
 def test_stream_restart_keeps_checkpoint_width(spark, tmp_path):
@@ -139,10 +151,10 @@ def test_stream_restart_keeps_checkpoint_width(spark, tmp_path):
     try:
         spark.conf.set(WIDTH, "2")
         _drop(spark, landing, [(f"u/{i}", "t", t0) for i in range(20)])
-        assert _merge_drain(spark, landing, target, ckpt) == 2
+        assert _width(_merge_drain(spark, landing, target, ckpt)) == 2
         _drop(spark, landing, [(f"u/{i}", "t-again", t0) for i in range(15, 30)])
         spark.conf.set(WIDTH, "8")
-        assert _merge_drain(spark, landing, target, ckpt) == 2
+        assert _width(_merge_drain(spark, landing, target, ckpt)) == 2
     finally:
         spark.conf.set(WIDTH, before)
     urls = read_committed(spark, target).select("url")
@@ -150,18 +162,39 @@ def test_stream_restart_keeps_checkpoint_width(spark, tmp_path):
     assert urls.distinct().count() == 30
 
 
-def test_stream_start_failure_restores_session_width(spark, landing, tmp_path):
-    """A starter whose start() raises still restores the session width:
-    append mode refuses an unwatermarked streaming aggregation."""
+def test_stream_start_failure_restores_session_width(spark, landing, tmp_path, monkeypatch):
+    """A starter whose start() raises still restores the session's
+    settings: append mode refuses an unwatermarked streaming
+    aggregation, and a dedup-only query, which starts with no-data
+    batches off, fails inside start()."""
     from pyspark.errors import AnalysisException
+    from pyspark.sql.streaming import DataStreamWriter
 
     from stonkwhisperer_spark.streaming.jobs import start_txn_append_stream
 
-    before = spark.conf.get(WIDTH)
+    before, no_data = spark.conf.get(WIDTH), spark.conf.get(NO_DATA)
     counts = read_landing_stream(spark, landing, NEWS_SCHEMA).groupBy().count()
     with pytest.raises(AnalysisException):
         start_txn_append_stream(counts, str(tmp_path / "tbl"), "counts", str(tmp_path / "ckpt"))
-    assert spark.conf.get(WIDTH) == before
+    assert (spark.conf.get(WIDTH), spark.conf.get(NO_DATA)) == (before, no_data)
+
+    seen = []
+
+    def failing_start(self, *args, **kwargs):
+        seen.append(spark.conf.get(NO_DATA))
+        raise RuntimeError("start failed")
+
+    monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+    stream = read_landing_stream(spark, landing, NEWS_SCHEMA)
+    with pytest.raises(RuntimeError, match="start failed"):
+        start_merge_stream(
+            dedup_within_watermark(stream, ["url"], "published_at"),
+            str(tmp_path / "articles"),
+            ["url"],
+            str(tmp_path / "ckpt2"),
+        )
+    assert seen == ["false"]
+    assert (spark.conf.get(WIDTH), spark.conf.get(NO_DATA)) == (before, no_data)
 
 
 def test_concurrent_starters_restore_session_width(spark, landing, tmp_path, monkeypatch):
@@ -191,11 +224,13 @@ def test_concurrent_starters_restore_session_width(spark, landing, tmp_path, mon
                 inside["now"] -= 1
 
     monkeypatch.setattr(DataStreamWriter, "start", slow_start)
-    before = spark.conf.get(WIDTH)
+    before, no_data = spark.conf.get(WIDTH), spark.conf.get(NO_DATA)
     n = 6  # more starters than local[4] has cores
 
     def run(i: int) -> int:
-        return _merge_drain(spark, landing, str(tmp_path / f"t{i}"), str(tmp_path / f"c{i}"))
+        return _width(
+            _merge_drain(spark, landing, str(tmp_path / f"t{i}"), str(tmp_path / f"c{i}"))
+        )
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -204,12 +239,17 @@ def test_concurrent_starters_restore_session_width(spark, landing, tmp_path, mon
             widths = list(pool.map(run, range(n), timeout=300))
     finally:
         sys.setswitchinterval(interval)
-    assert spark.conf.get(WIDTH) == before
+    assert (spark.conf.get(WIDTH), spark.conf.get(NO_DATA)) == (before, no_data)
     assert inside["peak"] == 1
     assert widths == [min(int(before), spark.sparkContext.defaultParallelism)] * n
 
 
-def test_streaming_minute_bars_match_batch(spark, tmp_path):
+TICK_SCHEMA = "symbol string, ts timestamp, price double"
+
+
+def _sentinel_ticks(spark, tmp_path) -> str:
+    """Ticks of two symbols over three minutes in one file, then a
+    sentinel tick 1h later in a second file; returns the directory."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1, 9, 30, 0)
@@ -218,24 +258,34 @@ def test_streaming_minute_bars_match_batch(spark, tmp_path):
         for i, s in enumerate([5, 20, 40, 65, 80, 125])
     ] + [("MSFT", t0 + dt.timedelta(seconds=10), 370.0)]
     ticks_path = str(tmp_path / "ticks")
-    schema = "symbol string, ts timestamp, price double"
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(ticks_path)
+    spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.parquet(ticks_path)
     # Sentinel tick 1h later in a second file: advances the watermark so
     # append mode closes (emits) every real window; its own window stays
-    # open and is excluded from the comparison below.
+    # open and is excluded from the comparisons.
     sentinel_ts = t0 + dt.timedelta(hours=1)
-    spark.createDataFrame([("ZZZ", sentinel_ts, 0.0)], schema).coalesce(1).write.mode(
+    spark.createDataFrame([("ZZZ", sentinel_ts, 0.0)], TICK_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(ticks_path)
+    return ticks_path
 
-    stream = (
-        spark.readStream.schema("symbol string, ts timestamp, price double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ticks_path)
-    )
+
+def _bar_map(rows) -> dict:
+    return {
+        (r.symbol, r.bar_ts.minute): (r.open, r.high, r.low, r.close, r.n_ticks)
+        for r in rows
+        if r.symbol != "ZZZ"  # sentinel's own window never closes in the stream
+    }
+
+
+def _tick_stream(spark, ticks_path):
+    return spark.readStream.schema(TICK_SCHEMA).option("maxFilesPerTrigger", 1).parquet(ticks_path)
+
+
+def test_streaming_minute_bars_match_batch(spark, tmp_path):
+    ticks_path = _sentinel_ticks(spark, tmp_path)
     out_path = str(tmp_path / "bars_out")
     q = (
-        minute_bars(stream, key_col="symbol", value_col="price")
+        minute_bars(_tick_stream(spark, ticks_path), key_col="symbol", value_col="price")
         .writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -244,20 +294,39 @@ def test_streaming_minute_bars_match_batch(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    got = {
-        (r.symbol, r.bar_ts.minute): (r.open, r.high, r.low, r.close, r.n_ticks)
-        for r in spark.read.parquet(out_path).collect()
-    }
-    batch = {
-        (r.symbol, r.bar_ts.minute): (r.open, r.high, r.low, r.close, r.n_ticks)
-        for r in minute_bars(
+    got = _bar_map(spark.read.parquet(out_path).collect())
+    batch = _bar_map(
+        minute_bars(
             spark.read.parquet(ticks_path), key_col="symbol", value_col="price", watermark=None
         ).collect()
-        if r.symbol != "ZZZ"  # sentinel's own window never closes in the stream
-    }
+    )
     assert got == batch
     assert got[("AAPL", 30)] == (100.0, 102.0, 100.0, 102.0, 3)
     assert got[("MSFT", 30)][4] == 1
+
+
+def test_windowed_append_stream_emits_windows_closed_without_input(spark, tmp_path):
+    """A starter keeps Spark's no-data batches for a windowed
+    aggregation: the sentinel's batch moves the watermark past every
+    real window, and only the batch after it, which reads no input,
+    emits them. Under availableNow the txlog table still gets every
+    closed window."""
+    from stonkwhisperer_spark.sinks.writers import read_committed
+    from stonkwhisperer_spark.streaming.jobs import start_txn_append_stream
+
+    ticks_path = _sentinel_ticks(spark, tmp_path)
+    bars = minute_bars(_tick_stream(spark, ticks_path), key_col="symbol", value_col="price")
+    target = str(tmp_path / "bars")
+    q = start_txn_append_stream(bars, target, "bars", str(tmp_path / "ckpt"))
+    _run(q)
+    batch = _bar_map(
+        minute_bars(
+            spark.read.parquet(ticks_path), key_col="symbol", value_col="price", watermark=None
+        ).collect()
+    )
+    assert len(batch) == 4
+    assert _bar_map(read_committed(spark, target).collect()) == batch
+    assert [p["numInputRows"] for p in q.recentProgress] == [7, 1, 0]
 
 
 def test_late_data_beyond_watermark_dropped(spark, tmp_path):
@@ -585,6 +654,36 @@ def test_merge_stream_restart_replays_committed_epoch_as_zero_rows(
     assert _committed_version(target) == head
     urls = read_committed(spark, target).select("url")
     assert urls.count() == 3 and urls.distinct().count() == 3
+
+
+def test_dedup_stream_restarts_after_ending_without_no_data_batch(
+    spark, landing, tmp_path, monkeypatch
+):
+    """A dedup-only stream ends after its last data batch, with its keys
+    still in state. Restarted on the same checkpoint over a new drop
+    that re-sends an earlier url inside the watermark, the dedup drops
+    that url and the sink lands only the new one."""
+    import datetime as dt
+
+    from stonkwhisperer_spark.sinks.writers import read_committed
+
+    target, ckpt = str(tmp_path / "articles"), str(tmp_path / "ckpt")
+    inserted, merge = [], jobs.merge_append
+
+    def recording(*args, **kwargs):
+        inserted.append(merge(*args, **kwargs))
+        return inserted[-1]
+
+    monkeypatch.setattr(jobs, "merge_append", recording)
+    assert [p["numInputRows"] for p in _merge_drain(spark, landing, target, ckpt)] == [3, 2]
+    assert inserted == [2, 1]
+    t0 = dt.datetime(2024, 1, 1, 9, 0, 0)
+    _drop(spark, landing, [("u/2", "b-resent", t0), ("u/4", "d", t0)])
+    (progress,) = _merge_drain(spark, landing, target, ckpt)
+    assert progress["stateOperators"][0]["customMetrics"]["numDroppedDuplicateRows"] == 1
+    assert inserted == [2, 1, 1]
+    urls = read_committed(spark, target).select("url")
+    assert urls.count() == 4 and urls.distinct().count() == 4
 
 
 def test_txn_append_stream_restart_replays_committed_epoch_as_no_op(
