@@ -2055,9 +2055,10 @@ def q_txlog_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     files_read == files_total on the range path) — then declare
     ``doc_id`` bloom-indexed and point-look-up three ids via
     ``read_committed_point``. Each lookup must open at most 2 of 4
-    files (the pre-index file has no filter and is always kept;
-    asserted in-query), and the three hits union to exactly the
-    oracle's rows.
+    files (asserted in-query; the first merge already indexed its file,
+    as a single merge key indexes itself, so the second is room for a
+    false positive), and the three hits union to exactly the oracle's
+    rows.
 
     Scale: this is the needle-in-100-TB read — GDPR subject lookups,
     id debugging — where min/max pruning is useless on unsorted keys;

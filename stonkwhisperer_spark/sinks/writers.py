@@ -134,6 +134,9 @@ _CHANGE_COL = "_change_type"
 # is returned to a caller.
 _FP_COL = "__sw_file_path"
 _RI_COL = "__sw_row_index"
+# A kill list's rows: the masked data file (table-relative) and the
+# row's index in it. Read with this schema, a masked read infers none.
+_KILL_SCHEMA = "file string, row_index long"
 # Transient marker columns for the merge engine's single-pass row
 # classification (never written: dropped before staging).
 _MARK_M = "__sw_mark_matched"
@@ -593,11 +596,13 @@ class Snapshot:
         return [k for k in _layout(self.files[-1]) if k not in self.dropped]
 
     @cached_property
-    def bloom_cols(self) -> list[str]:
+    def bloom_cols(self) -> list[str] | None:
         """PHYSICAL names of the columns bloom-indexed at write time
         (last ``bloom_cols`` commit wins, Delta's CREATE BLOOMFILTER
-        INDEX analog)."""
-        cols: list[str] = []
+        INDEX analog). None when no commit ever declared any, which a
+        keyed writer may still do (:func:`_bloom_declaration`); ``[]``
+        when the index was cleared."""
+        cols = None
         for c in self.commits:
             if "bloom_cols" in c:
                 cols = list(c["bloom_cols"])
@@ -867,7 +872,8 @@ def _drop_masked(
     )
     kill_lists = dict.fromkeys(d for dvs in masks.values() for d in dvs)
     kill = (
-        spark.read.parquet(*[os.path.join(target_path, d) for d in kill_lists])
+        spark.read.schema(_KILL_SCHEMA)
+        .parquet(*[os.path.join(target_path, d) for d in kill_lists])
         .join(F.broadcast(uri_map), "file")
         .select(
             F.col("file_uri").alias(_FP_COL),
@@ -1011,7 +1017,7 @@ def table_detail(target_path: str) -> dict:
         "num_dv_masked_rows": sum(masked[f] for f in files),
         "constraints": snap.constraints,
         "generated_columns": snap.generated,
-        "bloom_columns": snap.bloom_cols,
+        "bloom_columns": snap.bloom_cols or [],
         "renamed_columns": {l: p for l, p in snap.colmap.items() if l != p},
         "dropped_columns": sorted(snap.dropped),
         "vacuum_horizon": snap.vacuum_cutoff,
@@ -1108,31 +1114,40 @@ def _bloom_build(pf, cols: Sequence[str]) -> dict[str, dict]:
     the manifest; a file larger than _BLOOM_MAX_ROWS rows, or holding
     none of ``cols``, gets no filter (it stays unprunable, never
     wrong). At production scale the bitsets would move to sidecar
-    index files; the protocol is identical."""
+    index files; the protocol is identical.
+
+    The bits are exactly :func:`_bloom_hashes`' (old filters keep
+    probing): one sha256 per distinct canonical value, then the double
+    hashing for all of them at once in numpy ``uint64``. That wraps
+    mod 2^64, and ``m`` is a power of two, so ``& (m - 1)`` gives the
+    same positions as the unbounded ``% m``."""
     import base64
+    import hashlib
+
+    import numpy as np
 
     present = [c for c in cols if c in pf.schema_arrow.names]
     if not present or pf.metadata.num_rows > _BLOOM_MAX_ROWS:
         return {}
     n = max(pf.metadata.num_rows, 1)
     m = 1 << max(6, (10 * n - 1).bit_length())  # ≥10 bits/row, pow2
+    probes = np.arange(_BLOOM_K, dtype=np.uint64)
     specs: dict[str, dict] = {}
     t = pf.read(columns=present)
     for col in present:
-        bits = bytearray(m // 8)
-        any_val = False
-        for v in t.column(col).to_pylist():
-            if v is None:
-                continue
-            any_val = True
-            for pos in _bloom_hashes(v, m):
-                bits[pos >> 3] |= 1 << (pos & 7)
-        if any_val:
-            specs[col] = {
-                "m": m,
-                "k": _BLOOM_K,
-                "b64": base64.b64encode(bytes(bits)).decode("ascii"),
-            }
+        keys = {_bloom_key(v) for v in t.column(col).to_pylist() if v is not None}
+        if not keys:
+            continue
+        digests = b"".join(hashlib.sha256(k.encode("utf-8")).digest()[:16] for k in keys)
+        h = np.frombuffer(digests, dtype=">u8").astype(np.uint64).reshape(-1, 2)
+        h1, h2 = h[:, :1], h[:, 1:] | np.uint64(1)
+        bits = np.zeros(m, dtype=bool)
+        bits[((h1 + probes * h2) & np.uint64(m - 1)).ravel()] = True
+        specs[col] = {
+            "m": m,
+            "k": _BLOOM_K,
+            "b64": base64.b64encode(np.packbits(bits, bitorder="little").tobytes()).decode("ascii"),
+        }
     return specs
 
 
@@ -1153,7 +1168,11 @@ def set_bloom_columns(target_path: str, cols: Sequence[str]) -> None:
     filter excludes the value — the skipping zone maps cannot provide
     for high-cardinality UNSORTED columns (ids, hashes, urls), where
     every file's [min,max] spans everything. Existing files are not
-    back-indexed (rewrites index them); metadata-only commit."""
+    back-indexed (rewrites index them); metadata-only commit.
+
+    The declaration overrides the one a single-key merge makes on an
+    undeclared table (:func:`_bloom_declaration`); ``cols=[]`` clears
+    the index for good — no writer re-declares it."""
 
     def build(snap: Snapshot):
         if not snap.commits:
@@ -1162,6 +1181,31 @@ def set_bloom_columns(target_path: str, cols: Sequence[str]) -> None:
         return None, [], {"bloom_cols": bloom_cols, "op": "SET BLOOM COLUMNS"}
 
     _transact(target_path, build, "set_bloom_columns")
+
+
+def _bloom_declaration(snap: Snapshot, keys: Sequence[str]) -> list[str] | None:
+    """The bloom columns a keyed writer declares: its key, as a
+    PHYSICAL name, when the key is one column and no commit of the
+    table ever declared bloom columns; else None. The declaring commit
+    indexes its own staged files on the key, and from then on
+    :attr:`Snapshot.bloom_cols` indexes every rewrite. A natural key
+    (url, post id) is what point reads ask for, and with the index a
+    read skips the files whose filter rules the value out instead of
+    opening every file (:func:`read_committed_point`). A composite
+    key stays with zone maps. A lost commit race rebuilds on the
+    winner's snapshot, so racing first writers declare once."""
+    if len(keys) != 1 or snap.bloom_cols is not None:
+        return None
+    return [snap.colmap.get(keys[0], keys[0])]
+
+
+def _no_rows(spark: SparkSession, snap: Snapshot) -> DataFrame:
+    """The committed view's columns (partition columns too) with no
+    rows, for a pruned read that keeps no file: one file's frame under
+    ``F.lit(False)``, which the optimizer folds to an empty local
+    relation, so no Spark job runs on it. (An empty
+    ``createDataFrame`` starts a Python-worker job when collected.)"""
+    return _read_snapshot(spark, snap, snap.files[:1], schema=snap.schema).filter(F.lit(False))
 
 
 def read_committed_point(
@@ -1183,7 +1227,8 @@ def read_committed_point(
     difference between a full scan and a handful of tasks for GDPR
     lookups and debugging reads. Driver-side decision on manifest
     metadata, before any task is scheduled; the residual equality
-    filter still applies row-level."""
+    filter still applies row-level. When no filter admits the value
+    the frame has no rows and no job runs (:func:`_no_rows`)."""
     snap = Snapshot(target_path).readable_as_of(version)
     files = snap.files
     if not files:
@@ -1197,7 +1242,7 @@ def read_committed_point(
         or _bloom_admits(blooms[f][pcol], value)
     ]
     if not kept:
-        kept = files[:1]  # valid empty result with the right schema
+        return _no_rows(spark, snap), 0, len(files)
     df = _read_snapshot(spark, snap, kept, schema=snap.schema).filter(
         F.col(col) == F.lit(value)
     )
@@ -1644,6 +1689,7 @@ def _stage_files(
     partition_cols: Sequence[str] | None = None,
     size_output: bool = True,
     subdir: str | None = None,
+    bloom_cols: Sequence[str] | None = None,
 ) -> dict:
     """The one staging step of every writing path: write the rows to a
     dot-hidden staging dir inside the table, then os.replace each part
@@ -1657,8 +1703,9 @@ def _stage_files(
     rows), ``stats`` (zone maps), ``sizes`` ({path: bytes} — the
     streaming source's split packing and ``table_detail`` read them
     from the log instead of statting every file on every poll;
-    advisory, so not a feature) and ``bloom`` (filters on the table's
-    :attr:`Snapshot.bloom_cols`).
+    advisory, so not a feature) and ``bloom`` (filters on
+    ``bloom_cols`` when given — a declaring commit's columns — else
+    on the table's :attr:`Snapshot.bloom_cols`).
 
     ``subdir`` (``_CDC_DIR`` or ``_DV_DIR``) stages change-data or
     kill-list rows flat into that directory: no partition layout, zone
@@ -1688,7 +1735,8 @@ def _stage_files(
     target_path = snap.path
     if subdir != _DV_DIR:
         new_rows = _to_physical(new_rows, snap)
-    bloom_cols = snap.bloom_cols
+    if bloom_cols is None:
+        bloom_cols = snap.bloom_cols or []
     if subdir is not None:
         partition_cols, bloom_cols = [], []
     elif partition_cols is None:
@@ -1831,7 +1879,9 @@ def read_committed_pruned(
     any task is scheduled. ONE log parse serves files, zone maps, and
     the evolved union schema (so a pruned read of a schema-evolved
     table sees the same columns as read_committed — evolved columns
-    null-fill, and pruning ON an evolved column works)."""
+    null-fill, and pruning ON an evolved column works). A range that
+    no zone map admits reads no file and runs no job
+    (:func:`_no_rows`)."""
     snap = Snapshot(target_path).readable_as_of(version)
     files = snap.files
     if not files:
@@ -1848,9 +1898,7 @@ def read_committed_pruned(
         or not (stats[f][pcol][1] < lo or stats[f][pcol][0] > hi)
     ]
     if not kept:
-        # Valid empty result with the right schema: scan one file, keep
-        # nothing (the predicate excluded every zone).
-        kept = files[:1]
+        return _no_rows(spark, snap), 0, len(files)
     df = _read_snapshot(spark, snap, kept, schema=snap.schema).filter(
         F.col(col).between(lo, hi)
     )
@@ -2376,7 +2424,7 @@ def restore(
         n, sizes, bloom = 0, {}, {}
         for f in re_add:
             rows, sizes[f], _, bloom[f] = _file_meta(
-                os.path.join(target_path, f), snap.bloom_cols
+                os.path.join(target_path, f), snap.bloom_cols or []
             )
             n += rows
         # Footer row counts overstate DV-masked files — subtract the
@@ -2486,7 +2534,7 @@ def clone_table(
         "schema": json.dumps(struct.jsonValue()) if struct is not None else None,
         "dv": {"reset": dv_state} if dv_state else None,
         "bloom": {f: b for f, b in bloom.items() if b},
-        "bloom_cols": snap.bloom_cols or None,
+        "bloom_cols": snap.bloom_cols,
         "constraints_add": snap.constraints,
         "generated_add": snap.generated,
     }
@@ -2592,6 +2640,11 @@ def merge_append(
     them. None stages under the table's current layout (flat on an
     empty table).
 
+    A single-column key on a table that never declared bloom columns
+    becomes its bloom index column (:func:`_bloom_declaration`): the
+    commit declares it and indexes its own files, so point reads by
+    the key skip the files that cannot hold it.
+
     ``_pre_commit_hook`` is fault-injection for tests (runs between
     stage and publish, where a concurrent winner can sneak in).
     """
@@ -2623,11 +2676,13 @@ def merge_append(
         # execution, no cache). On object storage this is a
         # footer-ranged read per file, still far cheaper than
         # recomputing the anti-join for a count().
-        staged = _stage_files(new_rows, snap, partition_cols)
+        bloom_decl = _bloom_declaration(snap, keys)
+        staged = _stage_files(new_rows, snap, partition_cols, bloom_cols=bloom_decl)
         if staged["n"] == 0:
             return 0, staged["add"], None
         return staged["n"], staged["add"], {
             **staged,
+            "bloom_cols": bloom_decl,
             "schema": json.dumps(new_rows.schema.jsonValue()),
             "op": "MERGE APPEND",
         }
@@ -2685,6 +2740,7 @@ def _stage_dml(
     cdc: DataFrame,
     data: DataFrame | None = None,
     kill: DataFrame | None = None,
+    bloom_cols: Sequence[str] | None = None,
 ):
     """The one tail of every DML commit: stage the typed change rows
     (counted), the rewritten or post-image data rows and the
@@ -2696,10 +2752,13 @@ def _stage_dml(
     and ``actions`` holds the manifest entries every DML commit shares
     (``add``, ``stats``, ``bloom``, ``sizes`` of the data and
     change-data files, ``cdc`` and ``dv``, the deletion-vector entry or
-    None); the writer adds its own keys."""
+    None); the writer adds its own keys. ``bloom_cols`` overrides the
+    table's index columns for the data files (:func:`_stage_files`)."""
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_dv = None if kill is None else pool.submit(_stage_files, kill, snap, subdir=_DV_DIR)
-        f_data = None if data is None else pool.submit(_stage_files, data, snap)
+        f_data = None if data is None else pool.submit(
+            _stage_files, data, snap, bloom_cols=bloom_cols
+        )
         f_cdc = pool.submit(_stage_cdc_files_counted, cdc, snap)
         dv_staged = [] if f_dv is None else f_dv.result()["add"]
         added = (
@@ -2972,7 +3031,9 @@ def _merge_rows(
     CDC. ``nmbs_delete`` adds the WHEN NOT MATCHED BY SOURCE THEN
     DELETE clause; ``txn`` makes the merge an (app, version)
     at-most-once transaction (:func:`_transact`). A merge that changes
-    no row commits nothing, its marker included.
+    no row commits nothing, its marker included. A single-column key
+    indexes itself as :func:`merge_append`'s does
+    (:func:`_bloom_declaration`).
 
     ``apply_changes`` reads the batch as a change-data batch: rows whose
     ``_change_type`` is ``delete`` are DELETE DIRECTIVES (WHEN MATCHED
@@ -3164,11 +3225,13 @@ def _merge_rows(
                 dels.withColumn(_CHANGE_COL, F.lit("delete")),
                 allowMissingColumns=True,
             )
-        counts, staged, actions = _stage_dml(snap, cdc, new_data)
+        bloom_decl = _bloom_declaration(snap, key_cols)
+        counts, staged, actions = _stage_dml(snap, cdc, new_data, bloom_cols=bloom_decl)
         if counts == (0, 0, 0):
             return counts, staged, None
         return counts, staged, {
             **actions,
+            "bloom_cols": bloom_decl,
             "n": counts[0] + counts[1],
             "remove": matched_files,
             "schema": json.dumps(new_data.schema.jsonValue()),

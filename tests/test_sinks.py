@@ -8,6 +8,7 @@ import contextlib
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from stonkwhisperer_spark.sinks.writers import merge_append, upsert_bars, write_partitioned
@@ -1841,8 +1842,9 @@ def test_bloom_point_lookup_skips_files(spark, tmp_path):
     # Zone maps are useless here: every file covers the full range.
     _, zm_read, zm_total = read_committed_pruned(spark, target, "k", 17, 17)
     assert zm_read == zm_total == 4
-    # Bloom pruning: the pre-index file is always kept (no filter),
-    # of the three indexed files only k%4==1's admits 17.
+    # Bloom pruning: the first merge indexed its own file on its key
+    # ``k``; of the four files only k%4==1's holds 17 (a second one may
+    # be a false positive).
     hit, read, total = read_committed_point(spark, target, "k", 17)
     assert total == 4 and read <= 2
     assert [r["k"] for r in hit.collect()] == [17]
@@ -1850,7 +1852,7 @@ def test_bloom_point_lookup_skips_files(spark, tmp_path):
     hit2, read2, _ = read_committed_point(spark, target, "tag", "u18")
     assert read2 <= 2
     assert [r["k"] for r in hit2.collect()] == [18]
-    # Absent value: only unindexed files open; zero rows survive.
+    # Absent value: zero rows survive.
     miss, read3, _ = read_committed_point(spark, target, "k", 999)
     assert read3 <= 2 and miss.count() == 0
 
@@ -1877,6 +1879,188 @@ def test_bloom_survives_rewrites(spark, tmp_path):
     assert set(state) == set(committed_files(target))  # rewrites indexed
     hit, read, total = read_committed_point(spark, target, "k", 7)
     assert [r["k"] for r in hit.collect()] == [7]
+
+
+def test_txlog_bloom_bits_match_pure_python_replay(tmp_path):
+    """The txlog's file filters (``writers._bloom_build``) are exactly a
+    per-value replay of ``_bloom_hashes``, bit for bit, over int,
+    integral and fractional float, bool, string and null values: filters
+    committed before the vectorised build keep probing the same. An
+    all-null column gets no filter."""
+    import base64
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from stonkwhisperer_spark.sinks import writers as wr
+
+    n = 300
+    cols = {
+        "i": [None if j % 7 == 0 else j * 1_000_003 - 2**40 for j in range(n)],
+        "f": [None if j % 11 == 0 else (j / 2 if j % 3 else float(j)) for j in range(n)],
+        "b": [None if j % 5 == 0 else bool(j % 2) for j in range(n)],
+        "s": [None if j % 13 == 0 else f"https://ex.com/{j % 97}" for j in range(n)],
+        "z": pa.array([None] * n, pa.string()),
+    }
+    path = str(tmp_path / "f.parquet")
+    pq.write_table(pa.table(cols), path)
+    with pq.ParquetFile(path) as pf:
+        got = wr._bloom_build(pf, ["i", "f", "b", "s", "z", "absent"])
+    m = 1 << max(6, (10 * n - 1).bit_length())
+    assert sorted(got) == ["b", "f", "i", "s"]
+    for col in got:
+        bits = bytearray(m // 8)
+        for v in cols[col]:
+            if v is None:
+                continue
+            for pos in wr._bloom_hashes(v, m):
+                bits[pos >> 3] |= 1 << (pos & 7)
+        want = {"m": m, "k": wr._BLOOM_K, "b64": base64.b64encode(bytes(bits)).decode("ascii")}
+        assert got[col] == want, col
+        assert all(wr._bloom_admits(got[col], v) for v in cols[col] if v is not None)
+    # An integral float is indexed as its integer: the int probe finds it.
+    assert wr._bloom_admits(got["f"], 6)
+
+
+def _jobs_run(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted through a
+    job group. A marker job under a second group follows it: the status
+    listener handles events in order, so once the marker shows, every
+    job of the first group shows too."""
+    import uuid
+
+    sc, tag = spark.sparkContext, uuid.uuid4().hex
+    sc.setJobGroup(f"call-{tag}", "counted call")
+    try:
+        out = fn()
+        sc.setJobGroup(f"mark-{tag}", "marker")
+        spark.range(1).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(f"mark-{tag}") and time.time() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(f"mark-{tag}"), "marker job never reported"
+    return out, len(tracker.getJobIdsForGroup(f"call-{tag}"))
+
+
+@pytest.mark.parametrize("layout", [None, ["grp"]], ids=["flat", "partitioned"])
+def test_pruned_read_that_keeps_no_file_runs_no_job(spark, tmp_path, layout):
+    """A point read whose value no bloom filter admits, and a range read
+    that no zone map admits, answer from the log: no file read, no Spark
+    job (frame built and collected), and the same columns as a hit —
+    partition columns too. The table's first file is masked by a
+    deletion vector, whose kill list a read must not open either."""
+    from stonkwhisperer_spark.sinks.writers import (
+        delete_where_dv,
+        read_committed_point,
+        read_committed_pruned,
+    )
+
+    target = str(tmp_path / "tbl")
+    rows = spark.range(40).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("https://ex.com/"), F.col("id")).alias("url"),
+        (F.col("id") % 2).alias("grp"),
+    )
+    merge_append(spark, target, rows.filter("k < 20"), ["url"], partition_cols=layout)
+    merge_append(spark, target, rows.filter("k >= 20"), ["url"])
+    delete_where_dv(spark, target, F.col("k") == 0)
+
+    hit, read, total = read_committed_point(spark, target, "url", "https://ex.com/7")
+    assert [r["k"] for r in hit.collect()] == [7] and 0 < read < total
+    for call in (
+        lambda: read_committed_point(spark, target, "url", "https://ex.com/absent"),
+        lambda: read_committed_pruned(spark, target, "k", 100, 200),
+    ):
+        (df, files_read, files_total), built = _jobs_run(spark, call)
+        got, collected = _jobs_run(spark, df.collect)
+        assert (built, collected, files_read, files_total) == (0, 0, 0, total)
+        assert got == [] and df.columns == hit.columns
+
+
+def test_single_merge_key_indexes_itself(spark, tmp_path):
+    """A single-column merge key on an undeclared table declares itself
+    the bloom column in the writing commit, which indexes its own files
+    — for merge_append and the MERGE engine alike. Rewrites keep
+    indexing on the declaration; a composite key declares nothing."""
+    from stonkwhisperer_spark.sinks.writers import (
+        Snapshot,
+        _commits,
+        compact,
+        merge_upsert,
+        update_where,
+    )
+
+    def indexed(path):
+        snap = Snapshot(path)
+        return snap.bloom_cols, sorted(snap.blooms) == sorted(snap.files)
+
+    appended, merged = str(tmp_path / "appended"), str(tmp_path / "merged")
+    merge_append(spark, appended, _articles(spark, n=10), ["url"])
+    merge_append(spark, appended, _articles(spark, n=10, offset=10), ["url"])
+    merge_upsert(spark, merged, _articles(spark, n=10), ["url"])
+    merge_upsert(spark, merged, _articles(spark, n=10, offset=5), ["url"])
+    for path in (appended, merged):
+        assert indexed(path) == (["url"], True)
+        assert [c.get("bloom_cols") for c in _commits(path)] == [["url"], None]
+    assert compact(spark, appended, min_files=2) > 0
+    update_where(spark, appended, {"title": F.lit("t")}, F.col("url") == "https://ex.com/3")
+    assert indexed(appended) == (["url"], True)
+    assert [c["op"] for c in _commits(appended)][-2:] == ["OPTIMIZE", "UPDATE"]
+
+    bars = str(tmp_path / "bars")
+    companies = spark.createDataFrame([("c1", "AAPL")], "id string, ticker string")
+    quotes = spark.createDataFrame(
+        [("AAPL", "2024-01-02 09:30:00", 190.0)], "ticker string, bar_ts string, close double"
+    ).withColumn("bar_ts", F.col("bar_ts").cast("timestamp_ntz"))
+    assert upsert_bars(spark, bars, quotes, companies) == 1
+    (c,) = _commits(bars)
+    assert "bloom_cols" not in c and "bloom" not in c
+    assert Snapshot(bars).bloom_cols is None
+
+
+def test_cleared_bloom_index_stays_cleared(spark, tmp_path):
+    """``set_bloom_columns([])`` clears the index for good: later keyed
+    writes neither re-declare it nor index their files."""
+    from stonkwhisperer_spark.sinks.writers import (
+        Snapshot,
+        _commits,
+        merge_upsert,
+        set_bloom_columns,
+        table_detail,
+    )
+
+    target = str(tmp_path / "tbl")
+    merge_append(spark, target, _articles(spark, n=10), ["url"])
+    set_bloom_columns(target, [])
+    merge_append(spark, target, _articles(spark, n=10, offset=10), ["url"])
+    merge_upsert(spark, target, _articles(spark, n=4, offset=18), ["url"])
+    tail = _commits(target)[2:]
+    assert [("bloom_cols" in c, "bloom" in c) for c in tail] == [(False, False)] * 2
+    assert Snapshot(target).bloom_cols == [] and table_detail(target)["bloom_columns"] == []
+
+
+def test_racing_first_writers_declare_once(spark, tmp_path):
+    """Two first writers race on an empty table: the loser rebuilds on
+    the winner's snapshot, which already declares the key, so the log
+    holds one declaration and every file is indexed."""
+    from stonkwhisperer_spark.sinks.writers import Snapshot, _commits
+
+    target = str(tmp_path / "tbl")
+    raced = []
+
+    def rival():
+        if not raced:
+            raced.append(merge_append(spark, target, _articles(spark, n=5, offset=50), ["url"]))
+
+    assert merge_append(spark, target, _articles(spark, n=5), ["url"], _pre_commit_hook=rival) == 5
+    assert raced == [5]
+    commits = _commits(target)
+    assert [c.get("bloom_cols") for c in commits] == [["url"], None]
+    snap = Snapshot(target)
+    assert sorted(snap.blooms) == sorted(snap.files) and len(snap.files) == 2
 
 
 def test_log_checkpoint_and_manifest_vacuum(spark, tmp_path):
@@ -2367,12 +2551,13 @@ def test_partial_bloom_index_still_indexes_missing_files(spark, tmp_path, monkey
     """A bloom map that covers only some of a commit's added files must
     not leave the others silently unindexed on a bloom-declared table.
     CLONE carries such a map: a source file committed before
-    set_bloom_columns has no filter. The clone indexes that file, and
-    carries the source's filter for the other one (not rebuilt)."""
+    set_bloom_columns, by a writer that names no key, has no filter.
+    The clone indexes that file, and carries the source's filter for
+    the other one (not rebuilt)."""
     from stonkwhisperer_spark.sinks import writers as wr
 
     src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    merge_append(spark, src, _articles(spark, n=5).coalesce(1), ["url"])
+    wr.append_txn(spark, src, _articles(spark, n=5).coalesce(1), "seed", 0)
     wr.set_bloom_columns(src, ["url"])
     merge_append(spark, src, _articles(spark, n=5, offset=5).coalesce(1), ["url"])
     source = wr.Snapshot(src)
@@ -2431,7 +2616,7 @@ _DATA_KEYS = [*_BASE_KEYS, "sizes", "bloom"]
 # One call of every committing writer, in order, with what it returns
 # and the manifest it writes: (result, op, n, manifest keys, features).
 _FORMAT_PIN = [
-    (10, "MERGE APPEND", 10, [*_BASE_KEYS, "sizes", "stats", "schema"], None),
+    (10, "MERGE APPEND", 10, [*_DATA_KEYS, "bloom_cols", "stats", "schema"], None),
     (None, "ADD CONSTRAINT", 0, [*_BASE_KEYS, "constraints_add"], ["check-constraints"]),
     (None, "DROP CONSTRAINT", 0, [*_BASE_KEYS, "constraints_drop"], None),
     (None, "ADD GENERATED COLUMN", 0, [*_BASE_KEYS, "generated_add"], ["generated-columns"]),

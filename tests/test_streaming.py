@@ -54,13 +54,15 @@ def landing(spark, tmp_path):
 def test_stream_dedup_and_merge(spark, landing, tmp_path):
     """A dedup-only stream runs one micro-batch per drop and no no-data
     batch after them: its plan cannot output a row without input."""
+    from stonkwhisperer_spark.sinks.writers import read_committed
+
     target = str(tmp_path / "articles")
     stream = read_landing_stream(spark, landing, NEWS_SCHEMA, max_files_per_trigger=1)
     deduped = dedup_within_watermark(stream, ["url"], "published_at", "10 minutes")
     q = start_merge_stream(deduped, target, ["url"], str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     assert [p["numInputRows"] for p in q.recentProgress] == [3, 2]
-    out = spark.read.parquet(target)
+    out = read_committed(spark, target)
     assert out.count() == 3  # u/1, u/2, u/3 exactly once
     assert out.select("url").distinct().count() == 3
 
@@ -74,7 +76,7 @@ def test_stream_dedup_and_merge(spark, landing, tmp_path):
         str(tmp_path / "ckpt2"),
     )
     q2.awaitTermination(120)
-    assert spark.read.parquet(target).count() == 3
+    assert read_committed(spark, target).count() == 3
 
 
 def test_stream_commits_stage_one_file_each(spark, tmp_path):
@@ -406,6 +408,8 @@ def test_merge_stream_processing_time_trigger(spark, tmp_path):
     import datetime as dt
     import time
 
+    from stonkwhisperer_spark.sinks.writers import read_committed
+
     t0 = dt.datetime(2024, 1, 1, 9, 0, 0)
     landing = str(tmp_path / "landing")
     target = str(tmp_path / "articles")
@@ -425,7 +429,8 @@ def test_merge_stream_processing_time_trigger(spark, tmp_path):
         deadline = time.time() + timeout
         while time.time() < deadline:
             try:
-                if spark.read.parquet(target).count() == n:
+                df = read_committed(spark, target)
+                if df is not None and df.count() == n:
                     return True
             except Exception:
                 pass
@@ -439,7 +444,7 @@ def test_merge_stream_processing_time_trigger(spark, tmp_path):
         assert wait_count(3), "second drop not merged (or dup not suppressed)"
     finally:
         q.stop()
-    assert spark.read.parquet(target).select("url").distinct().count() == 3
+    assert read_committed(spark, target).select("url").distinct().count() == 3
 
 
 def test_streaming_session_windows(spark, tmp_path):
